@@ -2,11 +2,10 @@
 
 ``run.py`` starts this script with the session settings pinned in the
 environment and reads the JSON it writes to ``$PERFBENCH_RESULT``.
-The run: start the session, build the inputs (three times; the median
-build counts toward ``setup_s``), set up and warm up the workload,
-run ops in a closed loop, in the workload's fixed-size passes, until
-their summed wall time reaches ``--seconds``, then check every answer
-outside the timed window.
+The run: start the session, build the inputs, set up and warm up the
+workload, run ops in a closed loop, in the workload's fixed-size
+passes, until their summed wall time reaches ``--seconds``, then check
+every answer outside the timed window.
 """
 
 from __future__ import annotations
@@ -16,7 +15,6 @@ import dataclasses
 import json
 import math
 import os
-import statistics
 import sys
 import threading
 import time
@@ -131,18 +129,15 @@ def main() -> int:
 
     w = workloads.WORKLOADS[args.workload](spark, args.seed, work)
     w.traced = bool(args.trace)
-    builds = []
-    for _ in range(3):
-        b0 = time.monotonic()
-        w.build_inputs()
-        builds.append(time.monotonic() - b0)
+    b0 = time.monotonic()
+    w.build_inputs()
     s0 = time.monotonic()
     w.setup()
     s1 = time.monotonic()
     warm_ok = w.warmup()
     t_first = time.monotonic()
-    setup_s = (t_first - t_spawn) - sum(builds) + statistics.median(builds)
-    print(f"perfbench setup: session {get_spark_ms / 1000:.1f} s, inputs {[round(b, 2) for b in builds]} s, "
+    setup_s = t_first - t_spawn
+    print(f"perfbench setup: session {get_spark_ms / 1000:.1f} s, inputs {s0 - b0:.2f} s, "
           f"setup {s1 - s0:.1f} s, warm-up {t_first - s1:.1f} s", file=sys.stderr)
 
     ops: list[Op] = []
@@ -183,9 +178,9 @@ def main() -> int:
     }
     if layers is not None:
         out["per_layer"] = traced_metrics(layers, w, ops, spark, work, metrics, samples, get_spark_ms)
-    spark.stop()
     with open(os.environ["PERFBENCH_RESULT"], "w") as fh:
         json.dump(out, fh)
+    print(f"perfbench result written at {time.monotonic() - t_spawn:.1f} s", file=sys.stderr)
     return 0
 
 
@@ -216,4 +211,9 @@ def traced_metrics(layers, w, ops, spark, work, e2e, samples, get_spark_ms) -> d
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    rc = main()
+    sys.stdout.flush()
+    sys.stderr.flush()
+    # The result is written; run.py kills the Spark JVM next, so skip
+    # the interpreter's teardown (joining py4j and server threads).
+    os._exit(rc)

@@ -1,7 +1,7 @@
 """Tracing overhead: an untraced and a traced run of the same workload
 and seed, and the difference of their end-to-end figures.
 
-    python3 perfbench/overhead.py --workload oracle_serve --seed 1 --seconds 15
+    python3 perfbench/overhead.py --workload oracle_serve --seed 1
 
 The traced run reports its own ``setup_s`` and ``op_p50_ms`` as
 ``traced.setup_s`` and ``traced.op_p50_ms``.
@@ -31,7 +31,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=15)
+    ap.add_argument("--seconds", type=float, default=3)
     args = ap.parse_args()
     plain, traced = _run(args, 0), _run(args, 1)
     report = {}

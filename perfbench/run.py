@@ -4,9 +4,9 @@
 
 Run from the root of a checkout. Pins every setting the session
 factory reads, starts ``harness.py`` for the workload in a process
-group of its own, waits for it and everything it started (the Spark
-JVM included) to end, and prints two JSON lines: the pinned settings
-with the sample counts, then the result
+group of its own, waits for it to end, kills what it leaves (the
+Spark JVM) and reaps every descendant, and prints two JSON lines: the
+pinned settings with the sample counts, then the result
 ``{"correct", "attempted", "failed", "metrics"}`` (the end-to-end
 metrics, or with ``--trace 1`` the per-layer metrics). All scratch
 files live under ``.perfbench_work/`` in the checkout and are removed
@@ -30,7 +30,8 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORKLOADS = ("ingest_hourly", "oracle_serve", "analytics_headline")
-RUN_TIMEOUT_S = 170
+RUN_TIMEOUT_S = 160
+REAP_GRACE_S = 10.0
 
 # Settings the session factory reads that must not come from the
 # caller's shell: an inherited SPARK_LOCAL_DIRS overrides spark.local.dir,
@@ -68,31 +69,53 @@ def pinned_env(workload: str, work: str) -> tuple[dict, dict]:
     return env, shown
 
 
-def _group_alive(pgid: int) -> bool:
-    try:
-        os.killpg(pgid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    return True
+def become_subreaper() -> None:
+    """Make orphaned descendants of this process its children (Linux
+    PR_SET_CHILD_SUBREAPER). The Spark JVM outlives the harness, and
+    PySpark's worker daemon leaves the run's process group; as our
+    children both can be waited for and reaped at once, where init
+    reaps them only after a second or so."""
+    import ctypes
+
+    ctypes.CDLL(None, use_errno=True).prctl(36, 1, 0, 0, 0)
 
 
-def stop_group(pgid: int, grace_s: float) -> None:
-    """Wait until every member of the run's process group has ended:
-    first on its own (the Spark JVM exits once its Python driver is
-    gone), then after SIGTERM, then after SIGKILL."""
-    for sig, wait_s in ((None, grace_s), (signal.SIGTERM, 20.0), (signal.SIGKILL, 10.0)):
+def _children() -> list[int]:
+    me = str(os.getpid())
+    out = []
+    for pid in filter(str.isdigit, os.listdir("/proc")):
         try:
-            if sig is not None:
-                os.killpg(pgid, sig)
-        except ProcessLookupError:
+            with open(f"/proc/{pid}/stat") as fh:
+                ppid = fh.read().rsplit(")", 1)[1].split()[1]
+        except (OSError, IndexError):
+            continue
+        if ppid == me:
+            out.append(int(pid))
+    return out
+
+
+def stop_all(pgid: int) -> None:
+    """Kill what is left of the run's process group (the Spark JVM,
+    once the harness has ended; the result is written by then) and
+    wait until every descendant has ended. Processes outside the group
+    get REAP_GRACE_S to end on their own (the worker daemon exits when
+    the JVM closes its stdin), then are killed."""
+    try:
+        os.killpg(pgid, signal.SIGKILL)
+    except ProcessLookupError:
+        pass
+    deadline = time.monotonic() + REAP_GRACE_S
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
             return
-        deadline = time.monotonic() + wait_s
-        while _group_alive(pgid) and time.monotonic() < deadline:
-            time.sleep(0.1)
-        if not _group_alive(pgid):
-            return
+        if pid:
+            continue
+        if time.monotonic() > deadline:
+            for child in _children():
+                os.kill(child, signal.SIGKILL)
+        time.sleep(0.02)
 
 
 def main() -> int:
@@ -118,16 +141,17 @@ def main() -> int:
     env["PERFBENCH_T0"] = repr(time.monotonic())
     cmd = [sys.executable, os.path.join(HERE, "harness.py"), "--workload", args.workload,
            "--seed", str(args.seed), "--seconds", str(args.seconds), "--trace", str(args.trace)]
+    become_subreaper()
     proc = subprocess.Popen(cmd, env=env, cwd=ROOT, stdout=sys.stderr, start_new_session=True)
-    grace_s = 30.0
     try:
         rc = proc.wait(timeout=RUN_TIMEOUT_S)
     except subprocess.TimeoutExpired:
         print(f"perfbench: run exceeded {RUN_TIMEOUT_S} s", file=sys.stderr)
-        rc, grace_s = -1, 0.0
-    finally:
-        stop_group(proc.pid, grace_s)
+        rc = -1
+        proc.kill()
         proc.wait()
+    finally:
+        stop_all(proc.pid)
     try:
         with open(result_path) as fh:
             out = json.load(fh)
@@ -148,38 +172,24 @@ def main() -> int:
         return 1
 
     section = out["per_layer"] if args.trace else out["end_to_end"]
-    metrics = _select(section, args.workload, "per_layer" if args.trace else "end_to_end")
+    metrics = _select(section, "per_layer" if args.trace else "end_to_end")
     print(json.dumps({"settings": shown, "samples": out["samples"]}))
     print(json.dumps({"correct": out["correct"], "attempted": out["attempted"],
                       "failed": out["failed"], "metrics": metrics}))
     return 0
 
 
-def _select(section: dict, workload: str, kind: str) -> dict:
-    """Exactly the metrics BENCHMARK.json declares, with its units, for
-    a workload it lists; every computed metric otherwise."""
-    try:
-        with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-            spec = json.load(fh)
-    except OSError:
-        spec = {"workloads": []}
-    if workload not in {w["name"] for w in spec["workloads"]}:
-        return {k: {"value": v, "unit": _unit(k)} for k, v in section.items()}
-    return {m["name"]: {"value": section[m["name"]], "unit": m["unit"]} for m in spec[kind]}
-
-
-def _unit(name: str) -> str:
-    if name == "ops_per_s":
-        return "1/s"
-    if name.endswith("_ms") or "_ms." in name:
-        return "ms"
-    if name.endswith("_s"):
-        return "s"
-    if name.endswith("_bytes"):
-        return "bytes"
-    if name in ("error_rate", "lake.rows_out_per_row_scanned"):
-        return "ratio"
-    return "count"
+def _select(section: dict, kind: str) -> dict:
+    """Exactly the metrics BENCHMARK.json declares, with its units. A
+    per-layer metric of a layer the workload bypasses reads 0."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        spec = json.load(fh)
+    default = 0.0 if kind == "per_layer" else None
+    out = {m["name"]: {"value": section.get(m["name"], default), "unit": m["unit"]} for m in spec[kind]}
+    missing = [k for k, v in out.items() if v["value"] is None]
+    if missing:
+        raise KeyError(f"workload computed no {missing}")
+    return out
 
 
 if __name__ == "__main__":

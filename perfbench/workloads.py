@@ -12,6 +12,7 @@ returns True/False, or None when the check is deferred to
 from __future__ import annotations
 
 import datetime as dt
+import glob
 import json
 import os
 import random
@@ -40,10 +41,11 @@ class IngestHourly:
     FOREIGN = 4
     CYCLE = 4  # distinct tick inputs, reused round-robin
     WARM_TICKS = 1
-    # Ticks are measured three at a time: the first timed tick still
-    # runs 15-20% slow after the cold warm-up tick, and the median of
-    # three leaves it out.
-    PASS = 3
+    # One timed tick per pass: two ticks of one process differ by up
+    # to ~20%, the ticks of different processes by up to 60%, so a
+    # second tick would cost ~7 s of the time budget and barely steady
+    # the figure.
+    PASS = 1
 
     def __init__(self, spark, seed: int, work: str):
         self.spark, self.seed, self.work = spark, seed, work
@@ -152,25 +154,57 @@ CYCLE_READS = ["forecasts", "observations", "observations", "stations", "ui_sql"
 _ARROW_TYPES = {"string": "string", "double": "float64", "bigint": "int64", "timestamp": "timestamp"}
 
 
-def write_lake_file(root: str, file_type: str, ingested_at: dt.datetime, rows, schema) -> None:
-    """One hourly snapshot in the layout ``lake.write_snapshot`` writes
-    (``file_type=``/``ingest_date=`` directories, an ``ingested_at``
-    column, INT96 timestamps as Spark writes them), written with
-    pyarrow so the serve workload's setup does not time the write path
-    that ingest_hourly measures."""
+def _footer(path: str) -> tuple:
+    """What a reader of the lake sees of a file's layout: the Arrow
+    schema, each column's parquet physical and logical type, and the
+    codec."""
+    import pyarrow.parquet as pq
+
+    f = pq.ParquetFile(path)
+    cols = [(c.name, c.physical_type, str(c.logical_type)) for c in f.schema]
+    return f.schema_arrow.remove_metadata(), cols, f.metadata.row_group(0).column(0).compression
+
+
+def write_lake_file(root: str, file_type: str, ingested_at: dt.datetime, rows, schema, like: list[str]) -> None:
+    """One hourly snapshot in the layout of ``like``, the files
+    ``lake.write_snapshot`` wrote for another snapshot of the same
+    type: the same ``file_type=``/``ingest_date=`` directories, the
+    same number of files, codec and footer key-value metadata (Spark's
+    own keys, such as its schema), written with pyarrow so the serve
+    workload's setup does not time the write path that ingest_hourly
+    measures. Timestamps are INT96, as Spark writes them by default.
+    Raises when the copy's schema or physical types drift from
+    ``like``."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    fields = [(f.name, f.dataType.simpleString()) for f in schema.fields] + [("ingested_at", "timestamp")]
+    ref = pq.ParquetFile(like[0])
+    ref_schema, ref_cols, codec = _footer(like[0])
+    # write_snapshot's ingested_at is a literal, so never null
+    fields = [(f.name, f.dataType.simpleString(), f.nullable) for f in schema.fields] + [
+        ("ingested_at", "timestamp", False)
+    ]
+    arrow = pa.schema([
+        pa.field(name, pa.timestamp("us") if typ == "timestamp" else getattr(pa, _ARROW_TYPES[typ])(), nullable)
+        for name, typ, nullable in fields
+    ], metadata=ref.metadata.metadata)
     cols = list(zip(*rows)) + [[ingested_at] * len(rows)]
-    table = pa.table({
-        name: pa.array(col, pa.timestamp("us") if typ == "timestamp" else getattr(pa, _ARROW_TYPES[typ])())
-        for (name, typ), col in zip(fields, cols)
-    })
+    table = pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
     out = os.path.join(root, f"file_type={file_type}", f"ingest_date={ingested_at.date()}")
     os.makedirs(out, exist_ok=True)
-    name = f"part-{ingested_at:%Y%m%dT%H%M}.parquet"
-    pq.write_table(table, os.path.join(out, name), use_deprecated_int96_timestamps=True)
+    n = min(len(like), len(rows))
+    bounds = [len(rows) * i // n for i in range(n + 1)]
+    for i in range(n):
+        path = os.path.join(out, f"part-{i:05d}-{ingested_at:%Y%m%dT%H%M}.{codec.lower()}.parquet")
+        pq.write_table(table.slice(bounds[i], bounds[i + 1] - bounds[i]), path, compression=codec,
+                       use_deprecated_int96_timestamps=True)
+        got = _footer(path)
+        if got[0] != ref_schema or got[1] != ref_cols:
+            raise AssertionError(f"{path}: layout {got[:2]} drifted from write_snapshot's {(ref_schema, ref_cols)}")
+        kv = dict(pq.ParquetFile(path).metadata.metadata)
+        kv.pop(b"ARROW:schema")  # pyarrow's own key; Spark and DuckDB ignore it
+        if kv != ref.metadata.metadata:
+            raise AssertionError(f"{path}: footer metadata {kv} differs from write_snapshot's")
 
 
 class OracleServe:
@@ -211,11 +245,18 @@ class OracleServe:
         s = self.spark
         self.lake = os.path.join(self.work, "lake")
         t0 = time.monotonic()
+        # The golden snapshots go through write_snapshot; the hourly
+        # ones are pyarrow copies of their layout (write_lake_file
+        # checks each copy against them).
+        like = {}
+        for file_type, (at, rows), schema in ((lake.FORECASTS, self.inputs.golden_forecasts, FORECAST_SCHEMA),
+                                              (lake.OBSERVATIONS, self.inputs.golden_observations,
+                                               OBSERVATION_SCHEMA)):
+            lake.write_snapshot(s.createDataFrame(rows, schema), self.lake, file_type, at)
+            like[file_type] = sorted(glob.glob(os.path.join(self.lake, f"file_type={file_type}", "*", "*.parquet")))
         for at, fc, ob in self.inputs.snapshots:
-            write_lake_file(self.lake, lake.FORECASTS, at, fc, FORECAST_SCHEMA)
-            write_lake_file(self.lake, lake.OBSERVATIONS, at, ob, OBSERVATION_SCHEMA)
-        write_lake_file(self.lake, lake.FORECASTS, *self.inputs.golden_forecasts, FORECAST_SCHEMA)
-        write_lake_file(self.lake, lake.OBSERVATIONS, *self.inputs.golden_observations, OBSERVATION_SCHEMA)
+            write_lake_file(self.lake, lake.FORECASTS, at, fc, FORECAST_SCHEMA, like[lake.FORECASTS])
+            write_lake_file(self.lake, lake.OBSERVATIONS, at, ob, OBSERVATION_SCHEMA, like[lake.OBSERVATIONS])
         t1 = time.monotonic()
 
         self.template = os.path.join(self.work, "store_template")
@@ -307,19 +348,16 @@ class OracleServe:
     # -- ops -----------------------------------------------------------------
 
     def warmup(self) -> bool:
-        """The first two cycles' ops, checked like timed ones, with only
-        the first cycle's update: reads are cheap, and an ETL pass after
-        one warm pass runs within ~10% of later passes."""
+        """The first cycle's ops, checked like timed ones: an ETL pass
+        after one warm pass runs within ~10% of later passes."""
         cycle = len(CYCLE_READS) + 1
         ok = True
-        for i in range(2 * cycle):
+        for i in range(cycle):
             kind, pre, fn, post = self.op(i)
-            if kind == "update" and i >= cycle:
-                continue
             if pre:
                 pre()
             ok = post(fn()) is not False and ok
-        ok = all(self.finish(2 * cycle)) and ok
+        ok = all(self.finish(cycle)) and ok
         self.responses.clear()
         self.read_rows.clear()
         self.signatures.clear()
@@ -350,9 +388,9 @@ class OracleServe:
         return kind, None, call, lambda body: self._keep(i, req, body)
 
     def passes_complete(self, n_ops: int) -> bool:
-        """Ops are measured two whole cycles at a time, so every run
+        """Ops are measured a whole cycle at a time, so every run
         measures the same number of each kind."""
-        return n_ops % (2 * (len(CYCLE_READS) + 1)) == 0
+        return n_ops % (len(CYCLE_READS) + 1) == 0
 
     def _keep(self, i: int, req: tuple, body) -> None:
         """Reads are checked after the window (``finish``)."""
@@ -425,8 +463,8 @@ class OracleServe:
 
 class AnalyticsHeadline:
     """The registry path: one op builds a fresh frame with one
-    ``bench.HEADLINE`` query function and executes it to the noop sink.
-    Runs on demand; BENCHMARK.json does not list it (see perfbench/README.md)."""
+    ``bench.HEADLINE`` query function and executes it to the noop sink,
+    on a seeded lake with sf0.001's row counts."""
 
     name = "analytics_headline"
 
@@ -454,8 +492,8 @@ class AnalyticsHeadline:
         self.first_rows: dict[str, int] = {}
 
     def warmup(self) -> bool:
-        """Pass 1 collects every query and checks it (the check is the
-        cold pass); pass 2 runs the timed op shape once more."""
+        """One pass that collects every query and checks it: the cold
+        pass, which also warms the plans the timed passes run."""
         import duckdb
 
         from tools.check_correctness import TABLES, frame_digest
@@ -472,9 +510,6 @@ class AnalyticsHeadline:
                 cols = [d[0] for d in res.description]
                 if frame_digest(df.columns, rows)[0] != frame_digest(cols, res.fetchall())[0]:
                     self.failed_queries.add(name)
-        for name in self.headline:
-            self._run(name)
-        self.timings.clear()
         return not self.failed_queries
 
     def _run(self, name: str) -> None:
