@@ -98,13 +98,14 @@ def cmd_etl(args) -> int:
 
 
 def cmd_query(args) -> int:
-    from .plans import load_all
+    from .plans import load_all, resolve
 
-    registry = load_all()
-    if args.name not in registry:
-        print(f"unknown query {args.name!r}; available: {sorted(registry)}", file=sys.stderr)
+    try:
+        q = resolve(args.name)
+    except KeyError:
+        print(f"unknown query {args.name!r}; available: {sorted(load_all())}", file=sys.stderr)
         return 2
-    _print_df(registry[args.name].fn(_spark(), args.sf_dir), args.limit)
+    _print_df(q.fn(_spark(), args.sf_dir), args.limit)
     return 0
 
 
@@ -155,7 +156,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     e.set_defaults(fn=cmd_etl)
 
-    q = sub.add_parser("query", help="run a registry entry")
+    q = sub.add_parser("query", help="run a catalog entry (any tier) by name")
     q.add_argument("name")
     q.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     q.add_argument("--limit", type=int, default=20)

@@ -27,8 +27,14 @@ SHINGLE_N = 5  # tokens per shingle
 
 
 def norm_text(col: Column) -> Column:
-    """Lowercase, collapse non-alphanumerics to single spaces, trim."""
-    return F.trim(F.regexp_replace(F.lower(col), NORM_RE, " "))
+    """Lowercase, collapse non-alphanumerics to single spaces, trim.
+
+    U+0130 (capital I with dot above) folds to 'I' first: Spark's
+    ``lower`` maps it to 'i' + U+0307, which the collapse would split
+    into two tokens, while DuckDB's ``lower`` (``SQL_NORM``) maps it
+    to plain 'i'."""
+    folded = F.translate(col, "\u0130", "I")
+    return F.trim(F.regexp_replace(F.lower(folded), NORM_RE, " "))
 
 
 SQL_NORM = "trim(regexp_replace(lower({col}), '[^a-z0-9]+', ' ', 'g'))"

@@ -1,4 +1,4 @@
-"""Query registry: the engine's public query surface.
+"""Query catalog: the engine's public query surface.
 
 Each entry pairs a Spark callable ``(spark, sf_dir) -> DataFrame``
 with (where expressible) an equivalent DuckDB/ANSI SQL oracle string
@@ -8,6 +8,21 @@ identically on both sides, and double-typed aggregates go through a
 DECIMAL accumulator cast back to DOUBLE to make the result exact and
 partitioning-independent (a plain double sum is order-dependent and
 would hash-mismatch between engines).
+
+Every entry is defined the same way, ``@register(name, oracle=...,
+tier=...)``, and looked up the same way, ``resolve(name)``. The tier
+only decides whether the entry is part of the driver surface:
+
+- ``"registered"``: returned by :func:`load_all`, hence by
+  ``__spark_entry__.queries()`` / ``oracle_sql()``;
+- ``"staged"``: candidate operators kept out of the driver surface;
+- ``"folded"``: technique twins of a registered entry (same
+  semantics, alternate physical strategy);
+- ``"composite"``: end-to-end compositions of registered stages.
+
+Only ``"registered"`` entries are in the driver surface; every tier
+resolves by name, so the correctness and bench tools run any of them.
+Names are unique across all tiers.
 """
 
 from __future__ import annotations
@@ -32,88 +47,9 @@ PLAN_MODULES = [
     "lifecycle",
     "maintenance",
     "graph_eval",
-    "staging_r11",
-    "staging_r12",
-    "staging_r13",
-]
-
-# The driver gate records exactly the first 50 registry entries, so
-# iteration order decides which entries get fresh driver evidence
-# each round. (The driver's window is 50 slots in EVERY round type —
-# the r15 belief that optimization rounds re-run the full registry
-# was wrong, CORRECTNESS_r15 was a 50-slot window like every other
-# round; the r15 VERDICT flags this and item 6 drafts this rotation.
-# Full-registry coverage still exists each round through the local
-# gates AND the driver's own pytest run: test_registry_oracle
-# parametrizes over all registry entries at sf0.001.)
-#
-# Round 16 window:
-# - 20 slots: every r15 performance-edited entry that had no
-#   POST-edit driver row (the r15 windows held the r12 cohort, so
-#   these edits were only covered by the pytest sf0.001 sweep and
-#   the local full gates — r15 VERDICT item 6 queues them here):
-#   the minhash triple, the CC builder + its three consumers, the
-#   PCA pair + dim-reduction eval, knn-graph, mmr, hll,
-#   column-profile, language-id, the four cosine-fold entries, and
-#   recall-eval.
-# - 3 slots: the r16 plan edits (text_tfidf_topk,
-#   dedup_containment_ngram, docs_curation_pipeline_e2e — see the
-#   inline notes).
-# - 27 slots: the oldest-evidence cohort — entries whose last clean
-#   driver row is round 11 (ledger `round` field), alphabetical,
-#   with text_perplexity_proxy pulled in (r16 examined/edited).
-#   Nine r11 entries don't fit the window
-#   (sample_stratified_hash, sim_incremental_ivf_insert,
-#   sim_ivf_multiprobe, source_curation_report, split_train_val_hash,
-#   stream_compaction_report, stream_windowed_counts,
-#   text_repetition_ratio, text_token_rarity,
-#   q22_global_sales_opportunity — none edited since
-#   r11; all covered by the pytest oracle sweep and the full local
-#   gates each round).
-# - The sample_weighted_priority / docs_token_drift_tvd promotions
-#   deferred from r15 are NOT taken: promotions add registry
-#   surface, and optimization rounds add no features.
-# NOTE (process): rotation only picks what the DRIVER re-checks;
-# every round must still pass the full-registry local gate
-# (tools/check_correctness.py, see GATE_LOG.md) before snapshot.
-GATE_PRIORITY = [
-    # --- r15 performance edits lacking a post-edit driver row
-    "dedup_minhash_lsh", "dedup_minhash_estimator_quality",
-    "dedup_incremental_minhash", "dedup_clusters_cc",
-    "dedup_purge_report", "split_leakage_safe", "dedup_semantic_purge",
-    "sim_knn_graph", "emb_pca_power_iteration", "emb_pca_project_scores",
-    "emb_dim_reduction_eval", "sim_mmr_rerank",
-    "events_distinct_users_hll", "events_column_profile",
-    "text_language_id", "sim_ann_lsh_hyperplane",
-    "dedup_embedding_cosine", "dedup_semantic_clusters",
-    "sim_ann_recall_eval", "sim_cosine_range_search",
-    # --- r16 plan edits (text_tfidf_topk: split tried + reverted —
-    #     final body identical to its r15-gated form, re-proof cheap;
-    #     dedup_containment_ngram: self-join shuffle_hash hint; its
-    #     slot displaces text_token_rarity from the r11 cohort, which
-    #     slides to the not-fitting list below)
-    "text_tfidf_topk", "dedup_containment_ngram",
-    # docs_curation_pipeline_e2e: r16 comment-only edit inside its
-    # function body (the SHUFFLE_HASH fallback correction) — the
-    # digest meta-test demands re-proof for ANY source change; its
-    # slot displaces q22_global_sales_opportunity (r11 cohort,
-    # unedited, slides to the not-fitting list)
-    "docs_curation_pipeline_e2e",
-    # --- oldest driver evidence (r11 cohort), alphabetical
-    "cube_orders_priority_status", "docs_pack_sequences",
-    "events_anomaly_zscore", "events_funnel_ordered",
-    "events_grouping_sets_marginals", "events_interval_overlap_join",
-    "events_linear_interpolate", "events_percentiles_approx_sketch",
-    "events_retention_cohorts", "events_session_window_native",
-    "events_sessionize_batch", "events_sliding_24h_range_window",
-    "kmeans_embeddings", "lake_bucketed_copartition_join",
-    "orders_scd2_status_intervals", "orders_status_transitions",
-    "q10_returned_items_customers", "q13_customer_order_distribution",
-    "q16_supplier_part_relationships", "q17_small_quantity_revenue",
-    "q20_excess_stock_suppliers", "q21_waiting_suppliers",
-    "q6_forecast_revenue_delta",
-    "q7_volume_shipping", "q9_product_type_profit",
-    "text_fingerprint_winnow", "text_perplexity_proxy",
+    "ivf_pq",
+    "embeddings",
+    "composites",
 ]
 
 
@@ -123,36 +59,41 @@ class Query:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
     doc: str = ""
+    tier: str = "registered"
 
 
-REGISTRY: dict[str, Query] = {}
+CATALOG: dict[str, Query] = {}
 
 
-def register(name: str, oracle: str | None = None, doc: str = ""):
-    """Decorator: add a query to the registry."""
+def register(
+    name: str, oracle: str | None = None, doc: str = "", tier: str = "registered"
+):
+    """Decorator: add a query to the catalog under ``tier`` (one of
+    "registered", "staged", "folded", "composite")."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+        if name in CATALOG:
+            raise ValueError(f"duplicate query name {name!r}")
+        CATALOG[name] = Query(
+            name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""), tier=tier
+        )
         return fn
 
     return deco
 
 
 def load_all() -> dict[str, Query]:
-    """Import every plan module (registering its queries) and return
-    the full registry, iteration-ordered by GATE_PRIORITY first (see
-    note above), then registration order."""
+    """Import every plan module and return the registered tier, in
+    registration order."""
     for mod in PLAN_MODULES:
-        try:
-            importlib.import_module(f"{__name__}.{mod}")
-        except ModuleNotFoundError as exc:
-            if f"plans.{mod}" not in str(exc):
-                raise
-    ordered: dict[str, Query] = {}
-    for name in GATE_PRIORITY:
-        if name in REGISTRY:
-            ordered[name] = REGISTRY[name]
-    for name, q in REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = q
-    return ordered
+        importlib.import_module(f"{__name__}.{mod}")
+    return {name: q for name, q in CATALOG.items() if q.tier == "registered"}
+
+
+def resolve(name: str) -> Query:
+    """The catalog entry called ``name``, of any tier."""
+    load_all()
+    try:
+        return CATALOG[name]
+    except KeyError:
+        raise KeyError(f"unknown query {name!r}") from None

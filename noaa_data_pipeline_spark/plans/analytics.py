@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from ..tables import load_table
 from . import register
 from .common import SCALE, davg, dsum, prefer_broadcast, sql_dsum
-from .scale import fold
 
 
 @register(
@@ -433,8 +432,9 @@ def orders_date_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@fold(
+@register(
     "events_value_percentiles",
+    tier="folded",
     oracle="""
     SELECT event_type,
            quantile_disc(value, 0.5) AS p50,
@@ -450,11 +450,11 @@ def events_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     between engines). Scale: exact percentiles sort within groups; at
     100 TB swap in approx_percentile (t-digest sketch) and keep this
     as the calibration path — same pattern as exact vs LSH dedup.
-    FOLDED at r13 (driver-window slot freed for the r13 promotions):
+    Folded at r13 (driver-window slot freed for the r13 promotions):
     the registered sketch twin events_percentiles_approx_sketch is
     the 100 TB default per the trade this docstring describes; this
     exact calibration path stays gate-resolvable by name and
-    plan-shape-swept (plans/scale.py FOLDED)."""
+    plan-shape-swept (tier "folded")."""
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY value)").alias("p50"),
@@ -836,7 +836,7 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The orders edge is the one fact-join-fact in the plan and it
     joins by SIZE-ADAPTIVE strategy (common.prefer_broadcast): the
-    r5 scale audit (BENCH_SCALE x20, profile in tools/profile_q9.py)
+    r5 scale audit (BENCH_SCALE x20 profile)
     found the session's 64 MB dim-broadcast threshold was letting
     the (o_orderkey, o_year) projection of 3M orders broadcast, and
     the driver-side single-threaded hash build of that relation was

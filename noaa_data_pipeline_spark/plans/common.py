@@ -24,6 +24,7 @@ Every helper has a DuckDB SQL twin so oracle queries cannot drift.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import Column, DataFrame
@@ -154,3 +155,31 @@ BROADCAST_FILE_CAP = 16 * 1024 * 1024
 def prefer_broadcast(sf_dir: str, name: str) -> bool:
     b = table_bytes(sf_dir, name)
     return b is not None and b < BROADCAST_FILE_CAP
+
+
+def _swap_persisted(slot: list[DataFrame], frame: DataFrame) -> DataFrame:
+    """Unpersist the previous invocation's frame, THEN persist the new
+    one — in that order: a repeat invocation builds the identical
+    logical plan, so persist-before-unpersist would hit the
+    CacheManager's already-cached entry (making the new persist a
+    no-op) and the old frame's unpersist would then drop the cache
+    entirely.
+
+    The slot is deliberately ONE per entry, not per (entry, lake):
+    alternating invocations across two lakes in one session recompute
+    rather than hold both lakes' partitions — a perf-only trade that
+    bounds cache growth at one invocation per entry (r10 ADVICE
+    documents the cross-lake recompute as accepted behavior)."""
+    while slot:
+        prev = slot.pop()
+        try:
+            prev.unpersist()
+        except Exception as exc:  # stopped-session py4j errors only
+            # r10 ADVICE: don't swallow silently — the expected case
+            # is a frame whose owning SparkSession was stopped by a
+            # test fixture; anything else should be visible in logs.
+            logging.getLogger(__name__).warning(
+                "unpersist of previous invocation's frame failed: %s", exc
+            )
+    slot.append(frame.persist())
+    return frame

@@ -1,4 +1,4 @@
-"""Composed pipeline shapes — MEASUREMENT surface, not driver registry.
+"""Composed pipeline shapes — MEASUREMENT surface, tier "composite".
 
 The registry's dedup entries each expose ONE stage with a contract
 that materializes its full output (so the cross-engine hash gate can
@@ -9,14 +9,9 @@ r10 ("simhash x100 wall") made that claim in prose; this module
 makes it a measured artifact (r10 VERDICT task 4): the composed
 shape is benchable by tools/bench_scale.py and oracle-checked by
 tests/test_composites.py with the exact driver-gate compare, but it
-does NOT register — the composition carries no new operator
-semantics (its stages are registry entries with driver evidence),
-and the registry cap (GATE_LOG r10, binds at 147) reserves slots for
-new semantics.
-
-Lookup precedence in tools/bench_scale.py: registry > staged >
-composites — a name collision with either is a bug
-tests/test_composites.py catches.
+stays out of the driver surface — the composition carries no new
+operator semantics (its stages are registry entries with driver
+evidence). Like every tier, each composite resolves by name.
 """
 
 from __future__ import annotations
@@ -25,22 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from . import Query
-
-COMPOSITES: dict[str, Query] = {}
-
-
-def composite(name: str, oracle: str | None = None, doc: str = ""):
-    """Mirror of ``plans.register`` writing to the composites dict."""
-
-    def deco(fn):
-        COMPOSITES[name] = Query(
-            name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or "")
-        )
-        return fn
-
-    return deco
-
+from . import register
 
 # Unrolled min-label propagation depth. Each level finds every
 # node's minimum label within that many hops, so convergence needs
@@ -99,8 +79,9 @@ def _simhash_labels_cte() -> str:
     labels AS (SELECT node, lbl AS component FROM l{k})"""
 
 
-@composite(
+@register(
     "dedup_simhash_purge_pipeline",
+    tier="composite",
     oracle=f"""
     WITH {_simhash_labels_cte()},
     removed AS (SELECT node AS doc_id FROM labels WHERE node <> component)
@@ -168,7 +149,7 @@ def dedup_simhash_purge_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pca_outlier_oracle_sql() -> str:
-    from .staging_r12 import _PCA_S, _pca_ctes
+    from .embeddings import _PCA_S, _pca_ctes
 
     return f"""
     {_pca_ctes()},
@@ -202,7 +183,7 @@ def _pca_outlier_oracle_sql() -> str:
     """
 
 
-@composite("emb_pca_outlier_pipeline", oracle=_pca_outlier_oracle_sql())
+@register("emb_pca_outlier_pipeline", oracle=_pca_outlier_oracle_sql(), tier="composite")
 def emb_pca_outlier_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dominant-direction outlier prune a curator actually runs,
     end to end: learn the top principal component (staged
@@ -227,7 +208,7 @@ def emb_pca_outlier_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-exact, staging protocol); the composite itself is
     oracle-checked by tests/test_composites.py with the same exact
     compare."""
-    from .staging_r12 import _pca_state
+    from .embeddings import _pca_state
     from .similarity import _embeddings
 
     vN = "v24"
@@ -274,7 +255,7 @@ def emb_pca_outlier_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _wshard_oracle_sql() -> str:
     from ..operators import textops
-    from .staging_r13 import WSAMP_K, _wsamp_priority_sql
+    from .text import WSAMP_K, _wsamp_priority_sql
     from .text import PACK_BUDGET
 
     norm = textops.SQL_NORM.format(col="d.text")
@@ -324,10 +305,10 @@ def _wshard_oracle_sql() -> str:
     """
 
 
-@composite("docs_weighted_shard_assembly", oracle=_wshard_oracle_sql())
+@register("docs_weighted_shard_assembly", oracle=_wshard_oracle_sql(), tier="composite")
 def docs_weighted_shard_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-shard assembly, composed end to end: the staged
-    priority sample (sample_weighted_priority, plans/staging_r13.py)
+    priority sample (sample_weighted_priority, plans/text.py)
     selects k quality-weighted docs per source, the selected docs are
     token-counted and greedily packed into {PACK_BUDGET}-token bins
     in sample_rank order (docs_pack_sequences' bin arithmetic, scoped
@@ -338,7 +319,7 @@ def docs_weighted_shard_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     tracked weight — the Horvitz-Thompson sanity number).
 
     Evidence-tier note (the PCA-composite precedent): the sampling
-    stage is a pytest-gate STAGED candidate, not yet driver-proven;
+    stage is a pytest-gate staged candidate, not yet driver-proven;
     the packing arithmetic is the registered entry's, re-scoped.
 
     Scale: the sampler's contract (map-side keys, partial
@@ -355,7 +336,7 @@ def docs_weighted_shard_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..operators import textops
-    from .staging_r13 import sample_weighted_priority
+    from .text import sample_weighted_priority
     from .text import PACK_BUDGET
 
     s = sample_weighted_priority(spark, sf_dir).select(

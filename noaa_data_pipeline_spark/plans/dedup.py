@@ -781,3 +781,133 @@ def dedup_minhash_estimator_quality(spark: SparkSession, sf_dir: str) -> DataFra
             ).alias("abs_err"),
         )
     )
+
+
+# --- dedup_containment_ngram ------------------------------------------
+
+# keep pairs whose smaller shingle set is >= 80% inside the overlap
+CONTAINMENT_PPM = 800_000
+# a pair this symmetric is an ordinary near-dup, not a containment
+NEAR_DUP_J_PPM = 800_000
+
+_SQL_CONTAINMENT_PAIRS = f"""
+    shingles AS ({textops.sql_shingles('documents')}),
+    sizes AS (
+        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh
+        FROM shingles GROUP BY doc_id
+    ),
+    overlap AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               CAST(COUNT(*) AS BIGINT) AS n_common
+        FROM shingles a
+        JOIN shingles b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id
+    ),
+    scored AS (
+        SELECT o.doc_a, o.doc_b,
+               sa.n_sh AS n_a, sb.n_sh AS n_b, o.n_common,
+               (1000000 * o.n_common) // LEAST(sa.n_sh, sb.n_sh)
+                   AS containment_ppm,
+               (1000000 * o.n_common) // (sa.n_sh + sb.n_sh - o.n_common)
+                   AS jaccard_ppm
+        FROM overlap o
+        JOIN sizes sa ON o.doc_a = sa.doc_id
+        JOIN sizes sb ON o.doc_b = sb.doc_id
+    )
+"""
+
+
+@register(
+    "dedup_containment_ngram",
+    oracle=f"""
+    WITH {_SQL_CONTAINMENT_PAIRS}
+    SELECT doc_a, doc_b, n_a, n_b, n_common, containment_ppm, jaccard_ppm,
+           CASE WHEN jaccard_ppm >= {NEAR_DUP_J_PPM} THEN 'near_dup'
+                ELSE 'containment' END AS relation,
+           CASE WHEN n_a < n_b THEN doc_a
+                WHEN n_b < n_a THEN doc_b
+                ELSE doc_a END AS contained_doc_id
+    FROM scored
+    WHERE containment_ppm >= {CONTAINMENT_PPM}
+    """,
+)
+def dedup_containment_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Asymmetric containment pairs by exact 5-token-shingle overlap:
+    C = |A∩B| / min(|A|,|B|) >= 0.8, classified ``near_dup`` when the
+    Jaccard is also >= 0.8 (symmetric duplicate — dedup_minhash_lsh
+    territory) vs ``containment`` (the quote/superset case Jaccard
+    structurally under-scores: J <= C * min/max). The contained side
+    is the smaller shingle set (tie -> doc_a, which is always the
+    smaller id).
+
+    All arithmetic is integer (counts and ppm integer division), so
+    the cross-engine hash gate applies exactly — the house rule that
+    keeps float rounding out of comparison columns.
+
+    Scale: identical shape to dedup_ngram_jaccard — the shingle
+    equi-join is the only corpus-sized shuffle and its pair fan-out
+    is bounded by shared-shingle frequency (near-linear for natural
+    text); sizes join back on doc ids. At 100 TB the production
+    parameterization samples shingles by hash mod p on BOTH sides of
+    the ratio (containment stays estimable under DIVIDE-style
+    sampling because numerator and denominator sample identically);
+    the registered default keeps the exact semantics the oracle can
+    verify. The corpus is never pair-joined in full."""
+    sh = _shingles_cached(spark, sf_dir)
+    sizes = sh.groupBy("doc_id").agg(F.count("*").cast("long").alias("n_sh"))
+    a, b = sh.alias("a"), sh.alias("b")
+    # shuffle_hash on the self-join build side (r16; the
+    # dedup_minhash_lsh verification-join precedent): past the
+    # broadcast threshold the planner picks SMJ, which sorts BOTH
+    # shingle sides per partition — hashing one side instead measured
+    # 5.6-6.2 -> 3.3-4.3 s at x100mut (14.5M shingles, identical
+    # 237k output rows) and parity at sf0.1 (where the un-hinted plan
+    # broadcasts anyway). The hint is honored unconditionally (no
+    # size fallback, no AQE demotion): the per-task build is one
+    # partition of the shingle frame, bounded by the width sizing
+    # (scale-adaptive locally, AQE advisory-size ceiling on cluster),
+    # and SMJ remains one hint-removal away for a deployment whose
+    # partitions outgrow that.
+    overlap = (
+        a.join(
+            b.hint("shuffle_hash"),
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count("*").cast("long").alias("n_common"))
+    )
+    sa, sb = sizes.alias("sa"), sizes.alias("sb")
+    scored = (
+        overlap.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+        .select(
+            "doc_a",
+            "doc_b",
+            F.col("sa.n_sh").alias("n_a"),
+            F.col("sb.n_sh").alias("n_b"),
+            "n_common",
+            F.expr("(1000000 * n_common) div least(sa.n_sh, sb.n_sh)").alias(
+                "containment_ppm"
+            ),
+            F.expr(
+                "(1000000 * n_common) div (sa.n_sh + sb.n_sh - n_common)"
+            ).alias("jaccard_ppm"),
+        )
+    )
+    return scored.filter(F.col("containment_ppm") >= CONTAINMENT_PPM).select(
+        "doc_a",
+        "doc_b",
+        "n_a",
+        "n_b",
+        "n_common",
+        "containment_ppm",
+        "jaccard_ppm",
+        F.when(F.col("jaccard_ppm") >= NEAR_DUP_J_PPM, F.lit("near_dup"))
+        .otherwise(F.lit("containment"))
+        .alias("relation"),
+        F.when(F.col("n_a") < F.col("n_b"), F.col("doc_a"))
+        .when(F.col("n_b") < F.col("n_a"), F.col("doc_b"))
+        .otherwise(F.col("doc_a"))
+        .alias("contained_doc_id"),
+    )

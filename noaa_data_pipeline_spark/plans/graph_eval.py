@@ -40,15 +40,13 @@ additions they follow.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import textops
 from ..tables import load_table
 from . import register
-from .scale import fold
+from .common import _swap_persisted
 from .similarity import (
     LSH_PLANES,
     _SQL_DEC,
@@ -64,34 +62,6 @@ from .similarity import (
 # the next call (see module docstring).
 _KNN_PERSISTED: list[DataFrame] = []
 _MRL_PERSISTED: list[DataFrame] = []
-
-
-def _swap_persisted(slot: list[DataFrame], frame: DataFrame) -> DataFrame:
-    """Unpersist the previous invocation's frame, THEN persist the new
-    one — in that order: a repeat invocation builds the identical
-    logical plan, so persist-before-unpersist would hit the
-    CacheManager's already-cached entry (making the new persist a
-    no-op) and the old frame's unpersist would then drop the cache
-    entirely.
-
-    The slot is deliberately ONE per entry, not per (entry, lake):
-    alternating invocations across two lakes in one session recompute
-    rather than hold both lakes' partitions — a perf-only trade that
-    bounds cache growth at one invocation per entry (r10 ADVICE
-    documents the cross-lake recompute as accepted behavior)."""
-    while slot:
-        prev = slot.pop()
-        try:
-            prev.unpersist()
-        except Exception as exc:  # stopped-session py4j errors only
-            # r10 ADVICE: don't swallow silently — the expected case
-            # is a frame whose owning SparkSession was stopped by a
-            # test fixture; anything else should be visible in logs.
-            logging.getLogger(__name__).warning(
-                "unpersist of previous invocation's frame failed: %s", exc
-            )
-    slot.append(frame.persist())
-    return frame
 
 
 # --- sim_knn_graph -----------------------------------------------------
@@ -263,8 +233,9 @@ def _sql_trunc_cosine(d: int, q: str, c: str) -> str:
     )
 
 
-@fold(
+@register(
     "emb_matryoshka_truncate_eval",
+    tier="folded",
     oracle=f"""
     WITH emb AS ({_SQL_EMB}),
     pairs AS (
@@ -311,14 +282,13 @@ def emb_matryoshka_truncate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sim_ann_recall_eval = ANN axis, sim_pq_recall_eval =
     quantization axis, this = dimension axis).
 
-    FOLDED at r13 (the consolidation the r12 VERDICT task 3 ordered):
+    Folded at r13 (the consolidation the r12 VERDICT task 3 ordered):
     its coverage is the 'mrl' axis of the registered
     emb_dim_reduction_eval, row-identical by the pytest-pinned
     identity (tests/test_staging_r13.py) — same widths/k/queries
     constants, same decimal-dot scoring. The Query record stays
-    gate-resolvable by name (tools/check_correctness.py extras),
-    plan-shape-swept (tests/test_plan_shapes.py includes FOLDED), and
-    its non-degeneracy/persist-lifecycle tests keep running
+    resolvable by name, plan-shape-swept (tests/test_plan_shapes.py
+    includes the folded tier), and its non-degeneracy/persist-lifecycle tests keep running
     (tests/test_graph_eval.py).
 
     Exactness: every cosine (full and truncated) goes through the

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..tables import load_table
 from . import register
-from .common import SCALE
+from .common import SCALE, _swap_persisted
 
 K = 8
 ITERATIONS = 5
@@ -979,7 +979,6 @@ def graph_quality_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     a corpus self-join. Rounds are unrolled (fixed small constant),
     each a pure DataFrame stage — no driver-side collect."""
     from .dedup import minhash_lsh_pairs
-    from .graph_eval import _swap_persisted
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(spark, sf_dir)

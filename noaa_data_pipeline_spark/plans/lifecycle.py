@@ -10,7 +10,7 @@ streaming small-file compaction.
 History: built and oracle-proven in round 7 as the staged surface
 ``plans/staging_r8.py`` (outside the registry — the r7 gate window
 was full), promoted into the driver registry in round 8 with the
-GATE_PRIORITY rotation. VERDICT/GATE_LOG citations of
+gate-window rotation. VERDICT/GATE_LOG citations of
 ``staging_r8.py`` line numbers refer to this file pre-rename.
 
 Reference anchors (spec, not code): the reference's nightly parquet

@@ -9,56 +9,18 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from . import Query, register
-from .common import dsum, exact_agg, sql_dsum
+from . import register
+from .common import _swap_persisted, dsum, exact_agg, sql_dsum
 
 SALT_BUCKETS = 8
 
-# Entries FOLDED out of the driver registry by the r10 cap policy:
-# every fold is a TECHNIQUE TWIN of a retained registered entry —
-# same query semantics, alternate physical strategy — whose physical
-# plan stays pinned by tests/test_plan_shapes.py (the sweep includes
-# FOLDED) and whose oracle stays runnable BY NAME through this dict
-# (tools/check_correctness.py extras). Folding removes driver-window
-# slots, not coverage. Two fold classes so far:
-# - r12 (GATE_LOG "Round-12 rotation executed"): the q9/q21
-#   *_bucketed twins — additionally SERVED to default sessions by
-#   the manifest router (bucketed_lake_available →
-#   plans/analytics.py routed q9/q21), so their plans still run in
-#   production paths;
-# - r13 (GATE_LOG "Round-13 rotation executed"): the alternate-
-#   technique twins freed for the r13 promotions —
-#   q1_pricing_summary_exact_agg (two-phase exact-agg twin of the
-#   registered q1_pricing_summary; the exact_agg helper stays
-#   value-tested in tests/test_scale_ops.py),
-#   skew_salted_user_join (manual-salting twin whose oracle IS the
-#   plain join SQL; the registered surface keeps the plain shape in
-#   customer_order_counts/events_outcome_scoring and the AQE skew
-#   path), and events_value_percentiles (exact sort-based twin of
-#   the registered events_percentiles_approx_sketch — the sketch is
-#   what runs at 100 TB, per its own docstring).
-FOLDED: dict[str, Query] = {}
-
-
-def fold(name: str, oracle: str | None = None, doc: str = ""):
-    """Mirror of ``plans.register`` writing to FOLDED — same Query
-    record, excluded from the driver registry iteration."""
-
-    def deco(fn):
-        FOLDED[name] = Query(
-            name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or "")
-        )
-        return fn
-
-    return deco
-
-
-@fold(
+@register(
     "skew_salted_user_join",
+    tier="folded",
     oracle="""
     SELECT e.user_id, c_mktsegment,
            CAST(COUNT(*) AS BIGINT) AS n_events
@@ -75,11 +37,11 @@ def skew_salted_user_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the oracle runs the unsalted SQL). At 100 TB this is the manual
     fallback when AQE's skew splitting can't help (e.g. skewed
     aggregation keys rather than join keys).
-    FOLDED at r13 (driver-window slot freed for the r13 promotions):
+    Folded at r13 (driver-window slot freed for the r13 promotions):
     its oracle IS the plain join SQL — the registered surface keeps
     that semantics in customer_order_counts / events_outcome_scoring
     — and the salting technique stays plan-shape-pinned and
-    gate-resolvable by name (FOLDED above)."""
+    gate-resolvable by name (tier "folded")."""
     ev = load_table(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer")
     salted_ev = ev.withColumn(
@@ -163,8 +125,231 @@ def events_distinct_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@fold(
+# --- events_kmv_theta_sketch_overlap -------------------------------------
+
+KMV_K = 32  # sketch size (k smallest hashes retained per segment)
+KMV_CUT = 150.0  # segment = users with a type-s event of value > CUT
+# 60-bit hash domain: first 15 hex digits of md5. 2^60 is a power of
+# two, so its DOUBLE literal is exact and the estimate arithmetic
+# (small-int * 2^60 / theta) is a single IEEE division on both
+# engines — bit-identical.
+KMV_CAP = 1 << 60
+
+# Persisted sketch of the LAST invocation (graph_eval lifecycle)
+_KMV_PERSISTED: list[DataFrame] = []
+
+_SQL_KMV_H = (
+    "CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT)"
+)
+
+
+@register(
+    "events_kmv_theta_sketch_overlap",
+    oracle=f"""
+    WITH hashes AS (
+        SELECT DISTINCT event_type, {_SQL_KMV_H} AS h
+        FROM events WHERE value > {KMV_CUT}
+    ),
+    sk AS (
+        SELECT event_type, h, ROW_NUMBER() OVER (
+            PARTITION BY event_type ORDER BY h
+        ) AS rn
+        FROM hashes
+        QUALIFY rn <= {KMV_K}
+    ),
+    stats AS (
+        SELECT event_type,
+               CASE WHEN COUNT(*) = {KMV_K}
+                    THEN MAX(CASE WHEN rn = {KMV_K} THEN h END)
+                    ELSE {KMV_CAP} END AS theta,
+               COUNT(*) AS n_sk
+        FROM sk GROUP BY event_type
+    ),
+    pairs AS (
+        SELECT a.event_type AS type_a, b.event_type AS type_b,
+               LEAST(a.theta, b.theta) AS theta,
+               a.theta AS theta_a, b.theta AS theta_b,
+               a.n_sk AS n_a, b.n_sk AS n_b
+        FROM stats a JOIN stats b ON a.event_type < b.event_type
+    ),
+    ua AS (
+        SELECT p.type_a, p.type_b, s.h
+        FROM pairs p JOIN sk s ON s.event_type = p.type_a AND s.h < p.theta
+    ),
+    ub AS (
+        SELECT p.type_a, p.type_b, s.h
+        FROM pairs p JOIN sk s ON s.event_type = p.type_b AND s.h < p.theta
+    ),
+    uni AS (
+        SELECT type_a, type_b, COUNT(*) AS n_union FROM (
+            SELECT DISTINCT type_a, type_b, h FROM (
+                SELECT * FROM ua UNION ALL SELECT * FROM ub
+            )
+        ) GROUP BY type_a, type_b
+    ),
+    inter AS (
+        SELECT ua.type_a, ua.type_b, COUNT(*) AS n_inter
+        FROM ua JOIN ub ON ua.type_a = ub.type_a
+                       AND ua.type_b = ub.type_b AND ua.h = ub.h
+        GROUP BY ua.type_a, ua.type_b
+    )
+    SELECT p.type_a, p.type_b,
+           CAST(CASE WHEN p.n_a = {KMV_K} THEN {KMV_K - 1} ELSE p.n_a END AS DOUBLE)
+               * {KMV_CAP}.0 / CAST(p.theta_a AS DOUBLE) AS est_a,
+           CAST(CASE WHEN p.n_b = {KMV_K} THEN {KMV_K - 1} ELSE p.n_b END AS DOUBLE)
+               * {KMV_CAP}.0 / CAST(p.theta_b AS DOUBLE) AS est_b,
+           CAST(u.n_union AS DOUBLE) * {KMV_CAP}.0 / CAST(p.theta AS DOUBLE)
+               AS est_union,
+           CAST(COALESCE(i.n_inter, 0) AS DOUBLE) * {KMV_CAP}.0
+               / CAST(p.theta AS DOUBLE) AS est_intersect
+    FROM pairs p
+    JOIN uni u ON u.type_a = p.type_a AND u.type_b = p.type_b
+    LEFT JOIN inter i ON i.type_a = p.type_a AND i.type_b = p.type_b
+    """,
+)
+def events_kmv_theta_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """KMV/theta-sketch SET OPERATIONS across audience segments: per
+    event type, the segment "users with a value > {KMV_CUT} event of
+    that type" is sketched as its {KMV_K} smallest 60-bit user hashes
+    (a bottom-k / KMV sketch), and every segment pair reports
+    estimated cardinalities for each side, the union, and the
+    intersection — the audience-overlap question (DataSketches-style
+    theta sketches) that the registry's other sketches (HLL distinct,
+    CMS heavy hitters, GK percentiles) cannot answer, because HLL
+    unions but never intersects.
+
+    Estimator: theta_s = the k-th smallest hash (or the 2^60 domain
+    cap when the segment has fewer than k members, making the sketch
+    exact); est = |{{h < theta}}| * 2^60 / theta. Pair operations use
+    theta = min(theta_a, theta_b); hashes below theta from both
+    sketches give union (distinct) and intersection (match) samples.
+    The same arithmetic runs on both engines over md5-derived hashes,
+    so — unlike the HLL entry, whose estimate is algorithm-opaque —
+    the actual ESTIMATES hash-match the oracle.
+
+    Scale: ONE corpus-side exchange — the (event_type, h) distinct
+    with map-side partial dedup — then a WindowGroupLimit keeps k
+    rows per segment; everything after operates on k x segments rows
+    (kilobytes at any corpus size: the sketch property) via broadcast
+    joins. At 100 TB the sketches are also mergeable across
+    ingest batches (bottom-k of a union = bottom-k of the per-batch
+    bottom-k's), the same associativity contract the scaled-long
+    aggregates rely on."""
+    ev = load_table(spark, sf_dir, "events").filter(F.col("value") > KMV_CUT)
+    h = (
+        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10)
+        .cast("long")
+        .alias("h")
+    )
+    hashes = ev.select("event_type", h).distinct()
+    w = Window.partitionBy("event_type").orderBy("h")
+    # The sketch IS the stored artifact (k x segments rows), and the
+    # pair assembly below references it from five subtrees (stats on
+    # both pair sides, the union/intersection samples) — without the
+    # persist the corpus-side distinct re-runs once per reference.
+    # Unpersist-on-reentry (the graph_eval lifecycle), then an EAGER
+    # count(): this is the one place the registry's lazy-persist rule
+    # inverts, because five stages of ONE job hit the cold cache
+    # together and serialize on the block locks — measured at x200:
+    # no persist 6.4 s, lazy persist 3.45 s, eager fill 1.34 s. The
+    # count is a k x segments job (sketch-sized, not corpus-sized: it
+    # reads the same exchange the cache fill needs anyway).
+    # r10 ADVICE: the construction-time job is the documented
+    # exemption in tests/test_staging_r11.py::CONSTRUCTION_LAZY_EXEMPT
+    # — the record travelled with the entry through its r12 promotion
+    # (the test now exercises the registered entry), and any future
+    # laziness meta-test must carry the same exemption.
+    sk = _swap_persisted(
+        _KMV_PERSISTED,
+        hashes.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= KMV_K),
+    )
+    sk.count()
+    stats = sk.groupBy("event_type").agg(
+        F.when(
+            F.count("*") == KMV_K,
+            F.max(F.when(F.col("rn") == KMV_K, F.col("h"))),
+        )
+        .otherwise(F.lit(KMV_CAP))
+        .alias("theta"),
+        F.count("*").alias("n_sk"),
+    )
+    a = stats.select(
+        F.col("event_type").alias("type_a"),
+        F.col("theta").alias("theta_a"),
+        F.col("n_sk").alias("n_a"),
+    )
+    b = stats.select(
+        F.col("event_type").alias("type_b"),
+        F.col("theta").alias("theta_b"),
+        F.col("n_sk").alias("n_b"),
+    )
+    pairs = (
+        a.join(b, F.col("type_a") < F.col("type_b"))
+        .withColumn("theta", F.least("theta_a", "theta_b"))
+    )
+    ska = sk.select(F.col("event_type").alias("type_a"), "h")
+    skb = sk.select(F.col("event_type").alias("type_b"), F.col("h").alias("hb"))
+    ua = (
+        pairs.select("type_a", "type_b", "theta")
+        .join(F.broadcast(ska), "type_a")
+        .filter(F.col("h") < F.col("theta"))
+        .select("type_a", "type_b", "h")
+    )
+    ub = (
+        pairs.select("type_a", "type_b", "theta")
+        .join(F.broadcast(skb), "type_b")
+        .filter(F.col("hb") < F.col("theta"))
+        .select("type_a", "type_b", F.col("hb").alias("h"))
+    )
+    uni = (
+        ua.unionByName(ub)
+        .distinct()
+        .groupBy("type_a", "type_b")
+        .agg(F.count("*").alias("n_union"))
+    )
+    # broadcast (r15): ub is a sketch-sample frame (k x pairs rows,
+    # kilobytes at any corpus size — the docstring's own bound); this
+    # was the one post-sketch join still planning as SortMergeJoin
+    inter = (
+        ua.join(F.broadcast(ub.withColumnRenamed("h", "hb")), ["type_a", "type_b"])
+        .filter(F.col("h") == F.col("hb"))
+        .groupBy("type_a", "type_b")
+        .agg(F.count("*").alias("n_inter"))
+    )
+    cap_d = F.lit(float(KMV_CAP))
+
+    def est(cnt, theta):
+        return cnt.cast("double") * cap_d / theta.cast("double")
+
+    return (
+        pairs.join(F.broadcast(uni), ["type_a", "type_b"])
+        .join(F.broadcast(inter), ["type_a", "type_b"], "left")
+        .select(
+            "type_a",
+            "type_b",
+            est(
+                F.when(F.col("n_a") == KMV_K, F.lit(KMV_K - 1)).otherwise(
+                    F.col("n_a")
+                ),
+                F.col("theta_a"),
+            ).alias("est_a"),
+            est(
+                F.when(F.col("n_b") == KMV_K, F.lit(KMV_K - 1)).otherwise(
+                    F.col("n_b")
+                ),
+                F.col("theta_b"),
+            ).alias("est_b"),
+            est(F.col("n_union"), F.col("theta")).alias("est_union"),
+            est(F.coalesce(F.col("n_inter"), F.lit(0)), F.col("theta")).alias(
+                "est_intersect"
+            ),
+        )
+    )
+
+
+@register(
     "q1_pricing_summary_exact_agg",
+    tier="folded",
     oracle="""
     SELECT l_returnflag, l_linestatus,
            CAST(SUM(CAST(FLOOR(l_quantity * 1000000) AS BIGINT)) AS DOUBLE) / 1000000 AS sum_qty,
@@ -184,7 +369,7 @@ def q1_pricing_summary_exact_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL combine across partitions — exact at any per-group
     cardinality, unlike single-level long sums whose overflow envelope
     is finite. Same oracle semantics as the single-level form.
-    FOLDED at r13 (driver-window slot freed for the r13 promotions):
+    Folded at r13 (driver-window slot freed for the r13 promotions):
     technique twin of the registered q1_pricing_summary; the
     exact_agg helper stays value-tested (tests/test_scale_ops.py)
     and this plan stays shape-pinned and gate-resolvable by name."""
@@ -698,6 +883,215 @@ def lake_bucketed_copartition_join(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
+# --- lake_bloom_semijoin_prune -----------------------------------------
+
+BLOOM_M = 16384  # filter bits (~5.4 bits/key at the sf0.01 build side)
+BLOOM_K = 3  # hash probes per key
+BLOOM_SEGMENT = "BUILDING"  # the selective build-side predicate
+
+
+def _bloom_pos(key: Column, j: int, m: int = BLOOM_M) -> Column:
+    """Probe j's bit position for ``key``: bits [20j, 20j+20) of a
+    single 60-bit integer taken from md5's first 15 hex chars, mod m —
+    the repo's portable-hash idiom (identical in Java and DuckDB),
+    sliced Kirsch-Mitzenmacher style so the probe side pays ONE hash
+    and ONE hex->int conversion per key instead of k of each (real
+    Bloom implementations derive all k positions from one or two base
+    hashes for the same reason). k <= 3 (3 x 20 bits in the 60), and
+    m <= 2^20."""
+    h = F.conv(F.substring(F.md5(key.cast("string")), 1, 15), 16, 10).cast("long")
+    return F.shiftright(h, 20 * j).bitwiseAND(F.lit((1 << 20) - 1)) % m
+
+
+def _sql_bloom_pos(key: str, j: int, m: int = BLOOM_M) -> str:
+    return (
+        f"((CAST(('0x' || substr(md5(CAST({key} AS VARCHAR)), 1, 15)) AS BIGINT) "
+        f">> {20 * j}) & {(1 << 20) - 1}) % {m}"
+    )
+
+
+@register(
+    "lake_bloom_semijoin_prune",
+    tier="staged",
+    oracle=f"""
+    WITH build AS (
+        SELECT DISTINCT c_custkey AS k FROM customer
+        WHERE c_mktsegment = '{BLOOM_SEGMENT}'
+    ),
+    hpos AS (
+        SELECT DISTINCT
+            ((CAST(('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 15)) AS BIGINT)
+              >> (20 * j)) & 1048575) % {BLOOM_M} AS pos
+        FROM build CROSS JOIN (SELECT unnest(range(0, {BLOOM_K})) AS j)
+    ),
+    flags AS (
+        SELECT
+            ({" AND ".join(f"({_sql_bloom_pos('o.o_custkey', j)}) IN (SELECT pos FROM hpos)" for j in range(BLOOM_K))})
+                AS pass_bloom,
+            o.o_custkey IN (SELECT k FROM build) AS is_member
+        FROM orders o
+    )
+    SELECT
+        (SELECT CAST(COUNT(*) AS BIGINT) FROM build) AS n_build_keys,
+        CAST({BLOOM_M} AS BIGINT) AS m_bits,
+        CAST({BLOOM_K} AS BIGINT) AS k_hashes,
+        (SELECT CAST(COUNT(*) AS BIGINT) FROM hpos) AS bits_set,
+        CAST(COUNT(*) AS BIGINT) AS n_probe,
+        CAST(SUM(CASE WHEN pass_bloom THEN 1 ELSE 0 END) AS BIGINT) AS n_pass_bloom,
+        CAST(SUM(CASE WHEN is_member THEN 1 ELSE 0 END) AS BIGINT) AS n_true_match,
+        CAST(SUM(CASE WHEN pass_bloom AND NOT is_member THEN 1 ELSE 0 END) AS BIGINT) AS n_false_pos,
+        CAST(SUM(CASE WHEN is_member AND NOT pass_bloom THEN 1 ELSE 0 END) AS BIGINT) AS n_false_neg,
+        CASE WHEN COUNT(*) - SUM(CASE WHEN is_member THEN 1 ELSE 0 END) > 0
+             THEN (1000000 * SUM(CASE WHEN pass_bloom AND NOT is_member THEN 1 ELSE 0 END))
+                  // (COUNT(*) - SUM(CASE WHEN is_member THEN 1 ELSE 0 END))
+             ELSE 0 END AS fp_ppm
+    FROM flags
+    """,
+)
+def lake_bloom_semijoin_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Runtime Bloom-filter semi-join prune report: build an
+    m=BLOOM_M-bit, k=BLOOM_K-probe Bloom filter over the
+    BLOOM_SEGMENT-segment customer keys, broadcast it as one sorted
+    bit-position array, test every order map-side, and compare
+    against the exact semi-join. Registered binding of
+    :func:`bloom_semijoin_report` at the oracle-expressible fixed
+    defaults; production tuning (m sized ~10 bits/key off the build
+    cardinality estimate, like Spark's own InjectRuntimeFilter
+    sizing) happens through the parameters.
+
+    This is the explicit form of the runtime filter every warehouse
+    injects into selective big joins (Spark: InjectRuntimeFilter /
+    BloomFilterAggregate; the reference's analogue is its semi-join
+    reduction of fetched METAR rows to indexed stations,
+    crates/daemon/src/domains/observations/download_observations.rs:254-256)
+    — made deterministic
+    (md5-derived positions, identical in both engines) so the FP/FN
+    accounting itself is hash-gate-checkable. ``n_false_neg`` is a
+    structural self-check: a Bloom filter can never produce false
+    negatives, so the column must be 0 on every lake (the fuzz test
+    asserts it across random lakes).
+
+    Scale: the build side aggregates to <= m distinct bit positions
+    (sketch-sized regardless of corpus scale) and crosses onto the
+    probe side as a 1-row broadcast (the audited 1-row
+    BroadcastNestedLoopJoin pattern); membership is a map-side
+    array_contains x k — the probe corpus NEVER shuffles, and the
+    only full-width pass is the final partial-then-global count
+    aggregation. The exact-truth comparison broadcasts the build key
+    set (dimension-sized). At 100 TB: m scales with the build-side
+    cardinality (m ~ 10n bits for ~1% FP at k=3), still broadcastable
+    at billions of build keys via int ranges; the report's fp_ppm is
+    the signal that says when m is undersized."""
+    return bloom_semijoin_report(spark, sf_dir)
+
+
+def bloom_semijoin_report(
+    spark: SparkSession,
+    sf_dir: str,
+    m: int = BLOOM_M,
+    k_hashes: int = BLOOM_K,
+    segment: str = BLOOM_SEGMENT,
+) -> DataFrame:
+    """Parameterized core of ``lake_bloom_semijoin_prune`` — see the
+    staged binding's docstring for semantics and scale notes."""
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    build = (
+        cust.filter(F.col("c_mktsegment") == segment)
+        .select(F.col("c_custkey").alias("k"))
+        .distinct()
+    )
+    pos = build.select(
+        F.explode(
+            F.array(*[_bloom_pos(F.col("k"), j, m) for j in range(k_hashes)])
+        ).alias("pos")
+    ).distinct()
+    # Pack the filter into dense 64-bit words so membership is an
+    # O(1) element_at + shift/AND per probe — an array_contains over
+    # the raw position list is an O(m) linear scan per probe and was
+    # measured 50x slower than the oracle's hashed IN at x5. This is
+    # also how Spark's own BloomFilterImpl stores its bits.
+    n_words = (m + 63) // 64
+    words = pos.groupBy((F.col("pos") / 64).cast("long").alias("word_idx")).agg(
+        F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT)))").alias(
+            "word"
+        )
+    )
+    # densify sparse (word_idx, word) rows into one fixed-length array
+    # via a map lookup per slot — sketch-sized work, and one frame
+    # fewer to broadcast than a range-frame outer join
+    bits_row = words.agg(
+        F.map_from_entries(
+            F.sort_array(F.collect_list(F.struct("word_idx", "word")))
+        ).alias("wmap")
+    ).select(
+        F.expr(
+            f"transform(sequence(0, {n_words - 1}), "
+            "i -> coalesce(wmap[CAST(i AS BIGINT)], CAST(0 AS BIGINT)))"
+        ).alias("words")
+    )
+    build_agg = build.agg(F.count("*").cast("long").alias("n_build_keys"))
+    member = build.withColumn("is_member", F.lit(True))
+    probe = orders.select("o_custkey")
+    if not 1 <= k_hashes <= 3:
+        raise ValueError(f"k_hashes must be 1..3 (20-bit slices), got {k_hashes}")
+    if m > 1 << 20:
+        raise ValueError(f"m must be <= 2^20 (20-bit slices), got {m}")
+    pass_bloom = F.lit(True)
+    for j in range(k_hashes):  # map-side membership: ALL k positions set
+        p = (
+            f"((shiftright(CAST(conv(substring(md5(CAST(o_custkey AS STRING)), 1, 15), 16, 10) AS BIGINT), {20 * j}) & 1048575) % {m})"
+        )
+        pass_bloom = pass_bloom & F.expr(
+            f"(shiftright(element_at(words, CAST({p} / 64 AS INT) + 1), "
+            f"CAST({p} % 64 AS INT)) & 1) = 1"
+        )
+    flags = (
+        probe.crossJoin(F.broadcast(bits_row))
+        .withColumn("pass_bloom", pass_bloom)
+        .join(F.broadcast(member), F.col("o_custkey") == F.col("k"), "left")
+        .withColumn("is_member", F.coalesce(F.col("is_member"), F.lit(False)))
+    )
+    report = flags.agg(
+        F.count("*").cast("long").alias("n_probe"),
+        F.sum(F.when(F.col("pass_bloom"), 1).otherwise(0)).cast("long").alias("n_pass_bloom"),
+        F.sum(F.when(F.col("is_member"), 1).otherwise(0)).cast("long").alias("n_true_match"),
+        F.sum(F.when(F.col("pass_bloom") & ~F.col("is_member"), 1).otherwise(0))
+        .cast("long")
+        .alias("n_false_pos"),
+        F.sum(F.when(F.col("is_member") & ~F.col("pass_bloom"), 1).otherwise(0))
+        .cast("long")
+        .alias("n_false_neg"),
+    )
+    return (
+        report.crossJoin(F.broadcast(build_agg))
+        # same subtree as the probe-side broadcast -> ReusedExchange,
+        # not a second materialization; bits_set = set-bit population
+        # of the packed words (== COUNT(DISTINCT pos) by construction)
+        .crossJoin(F.broadcast(bits_row))
+        .select(
+            "n_build_keys",
+            F.lit(m).cast("long").alias("m_bits"),
+            F.lit(k_hashes).cast("long").alias("k_hashes"),
+            F.expr(
+                "aggregate(words, CAST(0 AS BIGINT), (acc, w) -> acc + bit_count(w))"
+            ).alias("bits_set"),
+            "n_probe",
+            "n_pass_bloom",
+            "n_true_match",
+            "n_false_pos",
+            "n_false_neg",
+            F.when(
+                (F.col("n_probe") - F.col("n_true_match")) > 0,
+                F.expr("(1000000 * n_false_pos) div (n_probe - n_true_match)"),
+            )
+            .otherwise(F.lit(0))
+            .cast("long")
+            .alias("fp_ppm"),
+        )
+    )
+
+
 Z_BITS = 4  # bits per dimension in the z-order key
 
 
@@ -770,8 +1164,9 @@ def lake_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@fold(
+@register(
     "q21_waiting_suppliers_bucketed",
+    tier="folded",
     oracle="""
     SELECT s_name, CAST(COUNT(*) AS BIGINT) AS numwait
     FROM supplier
@@ -835,8 +1230,9 @@ def q21_waiting_suppliers_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@fold(
+@register(
     "q9_product_type_profit_bucketed",
+    tier="folded",
     oracle=f"""
     SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
            {sql_dsum('l_extendedprice * (1 - l_discount) - 0.6 * p_retailprice * l_quantity', 'sum_profit')}

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..tables import load_table
 from . import register
+from .common import _swap_persisted
 
 N_QUERIES = 8  # vec_id < 8 are the query vectors
 TOP_K = 5
@@ -1516,4 +1517,124 @@ def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= TOP_K)
         .select("query_id", "neighbor_id", "cosine", "rnk")
+    )
+
+
+# --- sim_hard_negatives --------------------------------------------------
+
+HN_QUERIES = 8  # vec_id < 8 are the anchor vectors (sim_* idiom)
+HN_K = 5  # hard negatives kept per anchor
+
+# Persisted scored-pair frame of the LAST invocation (the negatives
+# ranking and the positive-ceiling aggregate both consume it).
+_HN_PAIRS_PERSISTED: list[DataFrame] = []
+
+
+@register(
+    "sim_hard_negatives",
+    tier="staged",
+    oracle=f"""
+    WITH emb AS ({_SQL_EMB}),
+    pairs AS (
+        SELECT q.vec_id AS query_id, q.label AS q_label,
+               c.vec_id AS neighbor_id, c.label AS label,
+               {_sql_dot('q.emb', 'c.emb')} / NULLIF(q.norm * c.norm, 0) AS cosine
+        FROM emb q JOIN emb c ON c.vec_id <> q.vec_id
+        WHERE q.vec_id < {HN_QUERIES}
+    ),
+    neg AS (
+        SELECT query_id, neighbor_id, cosine,
+               ROW_NUMBER() OVER (
+                   PARTITION BY query_id
+                   ORDER BY cosine DESC NULLS LAST, neighbor_id
+               ) AS neg_rank
+        FROM pairs WHERE label <> q_label
+    ),
+    pos AS (
+        SELECT query_id, MAX(cosine) AS pos_best_cosine
+        FROM pairs WHERE label = q_label GROUP BY query_id
+    )
+    SELECT n.query_id, CAST(n.neg_rank AS BIGINT) AS neg_rank,
+           n.neighbor_id, n.cosine AS neg_cosine,
+           p.pos_best_cosine,
+           p.pos_best_cosine - n.cosine AS margin
+    FROM neg n LEFT JOIN pos p USING (query_id)
+    WHERE n.neg_rank <= {HN_K}
+    """,
+)
+def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hard-negative mining for contrastive training: per anchor
+    vector, the top-{HN_K} most-similar vectors of a DIFFERENT label
+    (the negatives that actually move an InfoNCE/triplet loss),
+    alongside the anchor's positive ceiling (best same-label cosine)
+    and the margin between them — the number a curriculum scheduler
+    thresholds on (margin <= 0 means a negative currently outranks
+    every positive: the anchor is in the loss's active set). The
+    label-constrained retrieval shape the similarity family lacked:
+    brute/ANN/IVF entries rank over the whole corpus; this ranks
+    within a predicate partition of it.
+
+    Exactness: every cosine goes through the decimal-dot VARCHAR hop
+    (bit-identical doubles both engines), MAX and subtraction are
+    single IEEE ops on those bits, rankings tie-break on neighbor_id,
+    and zero-norm vectors score NULL (NULLIF) and sort last; anchors
+    with no same-label peer carry NULL ceiling/margin on both sides.
+
+    Scale: ONE anchor-broadcast pass scores the corpus (persisted —
+    both the negatives window and the positives aggregate consume
+    it); per-anchor top-k is a WindowGroupLimit; the positives
+    ceiling is a {HN_QUERIES}-row aggregate broadcast back onto the
+    k-row output. The corpus is scanned once and never shuffled.
+
+    Measured (BENCH_SCALE, r11 third session): x5 1.95x (job floor),
+    x20 0.81x, x100 0.73x (Spark 3.4 s vs DuckDB 4.7 s at 200k
+    vectors), x200 1.54x (Spark 8.2 s vs 5.3 s at 400k) — recorded
+    honestly: Spark's wall grows ~linearly with the pair volume
+    (compute-bound on the decimal folds) while DuckDB's stays
+    near-flat 4.7 -> 5.3 s across the doubling (the same fixed
+    hash/threading regime the PCA covariance rows documented), so
+    the single-box ratio crosses 1 between x100 and x200 while
+    staying under the 2x bar; at cluster scale the scoring pass is
+    embarrassingly parallel. cluster2x16 within the serialization-tax
+    band at a sub-second wall (BENCH_CLUSTER)."""
+    emb = _embeddings(spark, sf_dir)
+    q = emb.filter(F.col("vec_id") < HN_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("q_label"),
+        F.col("emb").alias("q_emb"),
+        F.col("norm").alias("q_norm"),
+    )
+    pairs = _swap_persisted(
+        _HN_PAIRS_PERSISTED,
+        emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
+            "query_id",
+            "q_label",
+            F.col("vec_id").alias("neighbor_id"),
+            "label",
+            (
+                _dot(F.col("q_emb"), F.col("emb"))
+                / F.nullif(F.col("q_norm") * F.col("norm"), F.lit(0.0))
+            ).alias("cosine"),
+        ),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc_nulls_last("cosine"), F.asc("neighbor_id")
+    )
+    neg = (
+        pairs.filter(F.col("label") != F.col("q_label"))
+        .withColumn("neg_rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("neg_rank") <= HN_K)
+    )
+    pos = (
+        pairs.filter(F.col("label") == F.col("q_label"))
+        .groupBy("query_id")
+        .agg(F.max("cosine").alias("pos_best_cosine"))
+    )
+    return neg.join(F.broadcast(pos), "query_id", "left").select(
+        "query_id",
+        "neg_rank",
+        "neighbor_id",
+        F.col("cosine").alias("neg_cosine"),
+        "pos_best_cosine",
+        (F.col("pos_best_cosine") - F.col("cosine")).alias("margin"),
     )

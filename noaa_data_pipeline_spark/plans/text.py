@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..operators import textops
 from ..tables import load_table
 from . import register
+from .common import _swap_persisted
 
 # BPE-ish tokenizer: letter runs, digit runs, or single punctuation
 # marks — the classic pre-tokenization split used before byte-pair
@@ -1337,5 +1338,296 @@ def docs_curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_docs"),
             F.sum("n_chars").cast("long").alias("total_chars"),
+        )
+    )
+
+
+# --- sample_weighted_priority --------------------------------------------
+
+WSAMP_K = 16  # sample size per stratum
+# priority = floor(h40 * SCALE / weight): h40 < 2^40 keeps the
+# multiply under 2^63 (1.1e12 * 1e6 = 1.1e18 < 9.2e18), so the whole
+# key is exact 64-bit integer arithmetic on both engines
+WSAMP_SCALE = 1_000_000
+
+
+def _wsamp_priority_sql(engine: str) -> str:
+    """The rank key, spelled for each engine over the SAME integer
+    ops: u = top 40 bits of the portable 60-bit md5 hash (salted
+    'wsamp|' so it is independent of the split/stratify entries'
+    un-salted doc_id hashes), weight = GREATEST(COALESCE(n_chars,1),1)
+    (the null/zero-weight guard), priority = (u * SCALE) intdiv w.
+    Smallest-priority-first IS priority sampling's order statistic
+    (rank by u_i / w_i; Ohlsson's sequential Poisson form)."""
+    if engine == "spark":
+        h = (
+            "shiftright(cast(conv(substr(md5(concat('wsamp|', "
+            "cast(doc_id as string))), 1, 15), 16, 10) as bigint), 20)"
+        )
+        return f"({h} * {WSAMP_SCALE}) div greatest(coalesce(n_chars, 1), 1)"
+    h = (
+        "(CAST(('0x' || substr(md5('wsamp|' || CAST(doc_id AS VARCHAR)), 1, 15)) "
+        "AS BIGINT) >> 20)"
+    )
+    return f"({h} * {WSAMP_SCALE}) // GREATEST(COALESCE(n_chars, 1), 1)"
+
+
+@register(
+    "sample_weighted_priority",
+    tier="staged",
+    oracle=f"""
+    WITH base AS (
+        SELECT source, doc_id,
+               GREATEST(COALESCE(n_chars, 1), 1) AS weight,
+               {_wsamp_priority_sql('duckdb')} AS priority
+        FROM documents
+    ),
+    stats AS (
+        SELECT source,
+               CAST(COUNT(*) AS BIGINT) AS stratum_docs,
+               CAST(SUM(weight) AS BIGINT) AS stratum_weight
+        FROM base GROUP BY source
+    ),
+    ranked AS (
+        SELECT source, doc_id, weight, priority,
+               ROW_NUMBER() OVER (
+                   PARTITION BY source ORDER BY priority, doc_id
+               ) AS sample_rank
+        FROM base
+    )
+    SELECT r.source, CAST(r.sample_rank AS BIGINT) AS sample_rank,
+           r.doc_id, r.weight, r.priority,
+           s.stratum_docs, s.stratum_weight
+    FROM ranked r JOIN stats s USING (source)
+    WHERE r.sample_rank <= {WSAMP_K}
+    """,
+)
+def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted sample without replacement, {WSAMP_K} docs per source
+    stratum, inclusion probability approximately proportional to
+    weight (= n_chars): priority sampling / sequential Poisson
+    sampling (rank by u/w, keep the k smallest), with the uniform u
+    drawn deterministically from the portable md5 idiom so the sample
+    is reproducible and cross-engine exact. Output rows carry the
+    stratum's total doc count and weight so a consumer can form the
+    Horvitz-Thompson-style expansion weights without a second scan.
+
+    Exactness: the entire entry is 64-bit integer arithmetic —
+    h40 * {WSAMP_SCALE} stays under 2^63 and the integer division is
+    identical on both engines for non-negative operands (weight >= 1
+    by the GREATEST guard) — so the gate compare is exact by
+    construction; ties (same priority) break on doc_id in both.
+
+    Scale: the rank key is map-side (one md5 per row, no joins); the
+    per-stratum top-k is a row_number window that Spark plans as
+    WindowGroupLimit with a PARTIAL pass, so each map task forwards at
+    most k rows per stratum into the one source-keyed exchange — the
+    shuffle carries O(k x strata x tasks), not the corpus. The
+    stratum stats aggregate is map-side combined to one row per
+    source and broadcast back onto the k-row sample. At 100 TB this
+    is the weighted-subset shape that avoids both a global sort and a
+    weighted reservoir's sequential state.
+
+    Measured (BENCH_SCALE, r11 third session): the Spark wall is the
+    job floor, FLAT at 1.18 s from x100 (500k docs) to x200 (1M) and
+    1.89 s at x500 (2.5M), so the single-box ratio vs DuckDB's
+    0.13-0.29 s reads 9.1x/6.8x/6.5x — recorded honestly: the op is
+    two sub-second scans of three columns, too cheap for the fixed
+    per-job cost to amortize on one box (the bloom-prune precedent).
+    The plan is shaped for the 100 TB contract, not the toy ratio:
+    the alternative single-exchange plan (stats as unbounded window
+    aggs sharing the row_number partition) would kill the partial
+    WindowGroupLimit and shuffle the full corpus, which is the wrong
+    trade everywhere it matters.
+
+    Deep tier (r12, tools/bench_docs_deep.py — documents-only lakes,
+    closing the r11 VERDICT's promotion question with numbers): once
+    the corpus outgrows the floor the ratio CONVERGES exactly as the
+    plan predicts — docsx1000 (5M docs) 6.7x (Spark 2.94 s still
+    floor-bound vs DuckDB 0.44 s), docsx5000 (25M) **1.46x**
+    (2.77 s vs 1.90 s — Spark flat, 32-way scan engaged), docsx10000
+    (50M) **1.15x** (5.42 s vs 4.71 s, both compute-bound). Under
+    the 2x bar at every point where the input exceeds the job floor;
+    promotion-eligible on evidence, queued behind the r13
+    consolidation order (GATE_LOG)."""
+    docs = load_table(spark, sf_dir, "documents")
+    base = docs.select(
+        "source",
+        "doc_id",
+        F.greatest(F.coalesce(F.col("n_chars"), F.lit(1)), F.lit(1))
+        .cast("long")
+        .alias("weight"),
+        F.expr(_wsamp_priority_sql("spark")).alias("priority"),
+    )
+    stats = base.groupBy("source").agg(
+        F.count("*").alias("stratum_docs"),
+        F.sum("weight").alias("stratum_weight"),
+    )
+    win = Window.partitionBy("source").orderBy(
+        F.asc("priority"), F.asc("doc_id")
+    )
+    return (
+        base.withColumn("sample_rank", F.row_number().over(win).cast("long"))
+        .filter(F.col("sample_rank") <= WSAMP_K)
+        .join(F.broadcast(stats), "source")
+        .select(
+            "source",
+            "sample_rank",
+            "doc_id",
+            "weight",
+            "priority",
+            "stratum_docs",
+            "stratum_weight",
+        )
+    )
+
+
+# --- docs_token_drift_tvd -------------------------------------------------
+
+TVD_SCALE = 1_000_000  # ppm share quantization
+
+# Persisted (source, tok) count frame of the LAST invocation
+# (graph_eval lifecycle): four subtrees consume it — the comparison
+# grid's source totals, the vocabulary totals, the grand total, and
+# the left-join probe side. Without the persist, exchange reuse
+# covers the re-aggregations but NOT the join side living under a
+# BroadcastExchange, so the corpus tokenize+count ran twice
+# (observed in the executed plan while staging).
+_TVD_COUNTS_PERSISTED: list[DataFrame] = []
+
+_SQL_TVD_TOKS = f"""
+    toks AS (
+        SELECT source,
+               unnest(string_split({textops.SQL_NORM.format(col='text')}, ' ')) AS tok
+        FROM documents WHERE text IS NOT NULL
+    ),
+    counts AS (
+        SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS c_st
+        FROM toks GROUP BY source, tok
+    ),
+    tok_tot AS (
+        SELECT tok, CAST(SUM(c_st) AS BIGINT) AS c_t FROM counts GROUP BY tok
+    ),
+    src_tot AS (
+        SELECT source, CAST(SUM(c_st) AS BIGINT) AS t_s FROM counts GROUP BY source
+    ),
+    grand AS (SELECT CAST(SUM(c_st) AS BIGINT) AS n FROM counts),
+    scored AS (
+        SELECT f.source, f.t_s, (g.n - f.t_s) AS t_r, f.tok,
+               ABS(({TVD_SCALE} * COALESCE(c.c_st, 0)) // f.t_s
+                   - ({TVD_SCALE} * (f.c_t - COALESCE(c.c_st, 0)))
+                     // GREATEST(g.n - f.t_s, 1)) AS gap
+        FROM (SELECT s.source, s.t_s, v.tok, v.c_t
+              FROM src_tot s CROSS JOIN tok_tot v) f
+        CROSS JOIN grand g
+        LEFT JOIN counts c ON c.source = f.source AND c.tok = f.tok
+    )
+"""
+
+
+@register(
+    "docs_token_drift_tvd",
+    tier="staged",
+    oracle=f"""
+    WITH {_SQL_TVD_TOKS},
+    agg AS (
+        SELECT source, t_s, t_r,
+               CAST(SUM(gap) // 2 AS BIGINT) AS tvd_ppm
+        FROM scored GROUP BY source, t_s, t_r
+    ),
+    top AS (
+        SELECT source, tok AS top_token, CAST(gap AS BIGINT) AS top_gap_ppm
+        FROM (
+            SELECT source, tok, gap, ROW_NUMBER() OVER (
+                PARTITION BY source ORDER BY gap DESC, tok
+            ) AS rnk FROM scored
+        ) r WHERE rnk = 1
+    )
+    SELECT a.source,
+           a.t_s AS src_tokens, a.t_r AS rest_tokens,
+           a.tvd_ppm, t.top_token, t.top_gap_ppm
+    FROM agg a JOIN top t USING (source)
+    """,
+)
+def docs_token_drift_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source token-distribution drift vs the rest of the corpus:
+    (source, src_tokens, rest_tokens, tvd_ppm, top_token,
+    top_gap_ppm), where tvd_ppm is the ppm-quantized total-variation
+    distance between the source's unigram share distribution and the
+    complement's over the FULL corpus vocabulary, and top_token is
+    the largest single share gap (ties break on the lexicographically
+    smallest token in both engines).
+
+    Exactness: both shares quantize to ppm via 64-bit integer
+    division before the comparison — no floats anywhere, so the hash
+    gate applies exactly (the sample_weighted_priority precedent; KL
+    was rejected because ln() is not cross-engine bit-stable). The
+    degenerate single-source corpus clamps the empty complement's
+    denominator to 1 (GREATEST), identically on both sides.
+    Overflow envelope: {TVD_SCALE} * count stays under 2^63 up to
+    ~9.2e12 tokens; past that the shares quantize from a sampled or
+    sharded count first (docstring contract, not a silent wrap).
+
+    Scale: the corpus is scanned ONCE and the only corpus-sized
+    exchange is the (source, tok) count; the vocabulary totals,
+    per-source totals, and grand total all re-aggregate that frame's
+    output (map-side combined, vocabulary-sized). The full
+    sources x vocab comparison grid is built by broadcasting the
+    vocabulary totals across the per-source totals — sources are
+    few-hundreds in a real mixture and the grid never touches the
+    corpus. At a 100 TB corpus the vocabulary itself is pruned first
+    (the corpus_token_coverage curve picks V: tokens below ~1 ppm
+    global share contribute zero quantized gap and can be dropped
+    exactly), which keeps the grid bounded while changing nothing in
+    this plan's shape.
+
+    Measured (BENCH_SCALE, r13): x20 0.54x, x100 0.59x vs DuckDB
+    (Spark 1.8 s vs 3.0 s at 500k docs) — under the bar at every
+    measured point, Spark ahead once the corpus outgrows the job
+    floor."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    )
+    toks = docs.select(
+        "source",
+        F.explode(F.split(textops.norm_text(F.col("text")), " ")).alias("tok"),
+    )
+    counts = _swap_persisted(
+        _TVD_COUNTS_PERSISTED,
+        toks.groupBy("source", "tok").agg(F.count("*").alias("c_st")),
+    )
+    tok_tot = counts.groupBy("tok").agg(F.sum("c_st").alias("c_t"))
+    src_tot = counts.groupBy("source").agg(F.sum("c_st").alias("t_s"))
+    grand = counts.agg(F.sum("c_st").alias("n"))
+    grid = src_tot.crossJoin(F.broadcast(tok_tot)).crossJoin(F.broadcast(grand))
+    scored = grid.join(counts, ["source", "tok"], "left").select(
+        "source",
+        "t_s",
+        (F.col("n") - F.col("t_s")).alias("t_r"),
+        "tok",
+        F.abs(
+            F.expr(f"({TVD_SCALE} * coalesce(c_st, 0)) div t_s")
+            - F.expr(
+                f"({TVD_SCALE} * (c_t - coalesce(c_st, 0))) div greatest(n - t_s, 1)"
+            )
+        ).alias("gap"),
+    )
+    # min over (-gap, tok) = deterministic argmax: largest gap, then
+    # lexicographically smallest token — the oracle's window ordering
+    return (
+        scored.groupBy("source", "t_s", "t_r")
+        .agg(
+            F.expr("CAST(sum(gap) div 2 AS BIGINT)").alias("tvd_ppm"),
+            F.min(F.struct((-F.col("gap")).alias("ngap"), F.col("tok"))).alias("top"),
+        )
+        .select(
+            "source",
+            F.col("t_s").alias("src_tokens"),
+            F.col("t_r").alias("rest_tokens"),
+            "tvd_ppm",
+            F.col("top.tok").alias("top_token"),
+            (-F.col("top.ngap")).cast("long").alias("top_gap_ppm"),
         )
     )

@@ -5,32 +5,22 @@ from __future__ import annotations
 
 import pytest
 
-from noaa_data_pipeline_spark.plans import load_all
-from noaa_data_pipeline_spark.plans.composites import COMPOSITES
+from noaa_data_pipeline_spark.plans import CATALOG, load_all, resolve
 from tools.check_correctness import frame_digest
 
 
-def test_composites_do_not_collide_or_register():
-    """Composites are a measurement surface: never in the driver
-    registry, never shadowing a staged candidate (bench_scale's
-    lookup gives them lowest precedence, so a collision would
-    silently bench the wrong plan)."""
-    from noaa_data_pipeline_spark.plans.staging_r11 import STAGED as S11
-    from noaa_data_pipeline_spark.plans.staging_r12 import STAGED as S12
-    from noaa_data_pipeline_spark.plans.staging_r13 import STAGED as S13
-
-    registered = set(load_all())
-    assert not (set(COMPOSITES) & registered)
-    assert not (set(COMPOSITES) & (set(S11) | set(S12) | set(S13)))
+def _composite_names():
+    load_all()
+    return sorted(n for n, q in CATALOG.items() if q.tier == "composite")
 
 
-@pytest.mark.parametrize("name", sorted(COMPOSITES))
+@pytest.mark.parametrize("name", _composite_names())
 def test_composite_matches_oracle(spark, duck, sf_dir, name):
     """The exact driver-gate compare (rows + columns + value hash)
     on the composed shape — the scale rows BENCH_SCALE records for a
     composite are only trustworthy if the two engines agree on what
     the composition computes."""
-    q = COMPOSITES[name]
+    q = resolve(name)
     sdf = q.fn(spark, sf_dir)
     srows = [tuple(r) for r in sdf.collect()]
     assert q.oracle is not None
@@ -52,7 +42,7 @@ def test_simhash_purge_pipeline_consumes_pairs(spark, sf_dir):
     CC + the report, never emitted — the result is the per-source
     accounting (one row per source), and the purge arithmetic is
     internally consistent."""
-    rows = COMPOSITES["dedup_simhash_purge_pipeline"].fn(spark, sf_dir).collect()
+    rows = resolve("dedup_simhash_purge_pipeline").fn(spark, sf_dir).collect()
     assert rows
     for r in rows:
         assert r.docs_before == r.docs_removed + r.docs_after
@@ -63,7 +53,7 @@ def test_pca_outlier_pipeline_rates_are_sane(spark, sf_dir):
     """Chebyshev bounds the 3-sigma outlier mass at 1/9 of the corpus
     regardless of distribution; per-label counts must sum consistently
     and the ppm must match its own count arithmetic."""
-    rows = COMPOSITES["emb_pca_outlier_pipeline"].fn(spark, sf_dir).collect()
+    rows = resolve("emb_pca_outlier_pipeline").fn(spark, sf_dir).collect()
     assert rows
     total = sum(r.n_vecs for r in rows)
     outliers = sum(r.n_outliers for r in rows)
@@ -82,13 +72,11 @@ def test_weighted_shard_assembly_consistent_with_sampler(spark, sf_dir):
     n_bins x budget ... except the last doc of a bin may overflow it,
     which is why fill can exceed 1e6 only via that documented
     spillover), and the weight share is a sub-stratum fraction."""
-    from noaa_data_pipeline_spark.plans.staging_r13 import STAGED as S13
-
     shard = {
         r.source: r
-        for r in COMPOSITES["docs_weighted_shard_assembly"].fn(spark, sf_dir).collect()
+        for r in resolve("docs_weighted_shard_assembly").fn(spark, sf_dir).collect()
     }
-    sample = S13["sample_weighted_priority"].fn(spark, sf_dir).collect()
+    sample = resolve("sample_weighted_priority").fn(spark, sf_dir).collect()
     by_src = {}
     for r in sample:
         a = by_src.setdefault(r.source, [0, 0])

@@ -15,7 +15,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from noaa_data_pipeline_spark.plans import load_all
+from noaa_data_pipeline_spark.plans import load_all, resolve
 from noaa_data_pipeline_spark.plans.graph_eval import (
     COVERAGE_VS,
     KNN_K,
@@ -23,17 +23,6 @@ from noaa_data_pipeline_spark.plans.graph_eval import (
     MRL_K,
 )
 from tools.check_correctness import frame_digest
-
-
-def _lookup(name):
-    """Resolve an entry wherever it lives: the driver registry, or
-    (since the r13 consolidation folded emb_matryoshka_truncate_eval)
-    the FOLDED dict — the fold keeps the Query record gate-resolvable
-    so every check in this file survives the retirement."""
-    from noaa_data_pipeline_spark.plans.scale import FOLDED
-
-    reg = load_all()
-    return reg.get(name) or FOLDED[name]
 
 
 # --- non-degeneracy ----------------------------------------------------
@@ -62,7 +51,7 @@ def test_matryoshka_wider_prefix_recovers_more(spark, sf_dir):
     every (query, width) pair, and be non-decreasing in the prefix
     width ON AVERAGE (the Matryoshka premise; per-query noise is
     allowed, a flat-zero or saturated curve is not)."""
-    rows = _lookup("emb_matryoshka_truncate_eval").fn(spark, sf_dir).collect()
+    rows = resolve("emb_matryoshka_truncate_eval").fn(spark, sf_dir).collect()
     by_dim = {}
     queries = set()
     for r in rows:
@@ -105,7 +94,7 @@ def test_token_coverage_curve_monotone(spark, sf_dir):
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    df = _lookup(name).fn(spark, sf_dir)
+    df = resolve(name).fn(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -163,11 +152,11 @@ def test_promoted_entries_swap_persisted_frames(spark, sf_dir):
         ("emb_matryoshka_truncate_eval", ge._MRL_PERSISTED),
     ):
         before = cached_ids()
-        _lookup(name).fn(spark, sf_dir).collect()
+        resolve(name).fn(spark, sf_dir).collect()
         first = list(slot)
         assert len(first) == 1
         for _ in range(3):
-            _lookup(name).fn(spark, sf_dir).collect()
+            resolve(name).fn(spark, sf_dir).collect()
             assert len(slot) == 1
             assert slot[0] is not first[0]
             # only the LATEST invocation's frame may remain of
@@ -185,7 +174,7 @@ def test_promoted_entries_swap_persisted_frames(spark, sf_dir):
 def _gate_compare(spark, lake, name, views):
     import duckdb
 
-    q = _lookup(name)
+    q = resolve(name)
     con = duckdb.connect()
     for t in views:
         con.execute(

@@ -23,7 +23,7 @@ from tools.check_correctness import frame_digest
 
 # the promoted entries, fetched from the real registry so these tests
 # exercise exactly what the driver gate runs
-STAGED = {
+LIFECYCLE = {
     n: q
     for n, q in load_all().items()
     if n
@@ -40,9 +40,9 @@ STAGED = {
 
 def test_lifecycle_entries_are_registered():
     """Promotion landed: all six round-7-staged names are registry
-    entries with oracles (the r8 GATE_PRIORITY window covers them)."""
-    assert len(STAGED) == 6
-    assert all(q.oracle is not None for q in STAGED.values())
+    entries with oracles (the r8 driver gate window covers them)."""
+    assert len(LIFECYCLE) == 6
+    assert all(q.oracle is not None for q in LIFECYCLE.values())
 
 
 def test_compaction_reduces_file_count(spark, sf_dir):
@@ -105,7 +105,7 @@ def test_perplexity_proxy_excludes_short_docs(spark, sf_dir):
     """Documents shorter than one trigram are excluded, not emitted
     with n_trigrams <= 0 (which would make the ppm division crash or
     go negative)."""
-    out = STAGED["text_perplexity_proxy"].fn(spark, sf_dir)
+    out = LIFECYCLE["text_perplexity_proxy"].fn(spark, sf_dir)
     rows = out.collect()
     assert all(r["n_trigrams"] >= 1 for r in rows)
     assert all(0 <= r["rare_ppm"] <= 1_000_000 for r in rows)
@@ -189,7 +189,7 @@ def adversarial_emb_lake(tmp_path_factory):
 def _gate_compare(spark, lake, name, views):
     import duckdb
 
-    q = STAGED[name]
+    q = LIFECYCLE[name]
     con = duckdb.connect()
     for t in views:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{lake}/{t}.parquet')")
@@ -230,7 +230,7 @@ def test_semantic_dedup_adversarial_embeddings(spark, adversarial_emb_lake):
 
 
 def _staged_plan(spark, sf_dir, name):
-    df = STAGED[name].fn(spark, sf_dir)
+    df = LIFECYCLE[name].fn(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -348,7 +348,7 @@ def test_perplexity_proxy_matches_python_reference(spark, adversarial_docs_lake)
         ppm = (1_000_000 * n_rare) // len(tgs)
         bucket = "low" if ppm > PPM_LOW else ("medium" if ppm > PPM_HIGH else "high")
         expected[d] = (len(tgs), ppm, bucket)
-    out = STAGED["text_perplexity_proxy"].fn(spark, adversarial_docs_lake).collect()
+    out = LIFECYCLE["text_perplexity_proxy"].fn(spark, adversarial_docs_lake).collect()
     got = {r["doc_id"]: (r["n_trigrams"], r["rare_ppm"], r["quality_bucket"]) for r in out}
     assert got == expected
 
@@ -388,7 +388,7 @@ def test_perplexity_proxy_differential_fuzz(spark, tmp_path_factory, texts):
         ),
         f"{tmp}/documents.parquet",
     )
-    q = STAGED["text_perplexity_proxy"]
+    q = LIFECYCLE["text_perplexity_proxy"]
     sdf = q.fn(spark, tmp)
     srows = [tuple(r) for r in sdf.collect()]
     con = duckdb.connect()

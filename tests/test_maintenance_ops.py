@@ -18,7 +18,7 @@ from tools.check_correctness import frame_digest
 
 # the promoted entries, fetched from the real registry so these tests
 # exercise exactly what the driver gate runs
-STAGED = {
+MAINTENANCE = {
     n: q
     for n, q in load_all().items()
     if n
@@ -33,22 +33,22 @@ STAGED = {
 
 def test_maintenance_entries_are_registered():
     """Promotion landed: all four round-8-staged names are registry
-    entries with oracles (the r9 GATE_PRIORITY window covers them)."""
-    assert len(STAGED) == 4
-    assert all(q.oracle is not None for q in STAGED.values())
+    entries with oracles (the r9 driver gate window covers them)."""
+    assert len(MAINTENANCE) == 4
+    assert all(q.oracle is not None for q in MAINTENANCE.values())
 
 
 def test_drift_flag_not_degenerate(spark, sf_dir):
     """DRIFT_C must SPLIT the cells (a saturated flag caught the
     first parameterization: every cell flagged at sf0.01)."""
-    rows = STAGED["ivf_centroid_drift_report"].fn(spark, sf_dir).collect()
+    rows = MAINTENANCE["ivf_centroid_drift_report"].fn(spark, sf_dir).collect()
     flags = {r.needs_retrain for r in rows}
     assert flags == {0, 1}
     assert all(r.n_then > 0 and r.n_now > r.n_then for r in rows)
 
 
 def test_rebalance_splits_some_cells_and_preserves_vectors(spark, sf_dir):
-    rows = STAGED["ivf_cell_rebalance"].fn(spark, sf_dir).collect()
+    rows = MAINTENANCE["ivf_cell_rebalance"].fn(spark, sf_dir).collect()
     split = [r for r in rows if r.new_cell.endswith(("_hi", "_lo"))]
     kept = [r for r in rows if r.new_cell == str(r.old_cell)]
     assert split and kept and len(split) + len(kept) == len(rows)
@@ -194,7 +194,7 @@ def test_ivf_trio_adversarial_embeddings(spark, adversarial_emb_lake, name):
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    df = STAGED[name].fn(spark, sf_dir)
+    df = MAINTENANCE[name].fn(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -238,8 +238,8 @@ def test_retrain_covers_split_cells_consistently(spark, sf_dir):
     cell across all dims, and place a split pair's centroids on
     opposite sides of the split midpoint implicitly (their means
     must differ on at least one dimension)."""
-    rows = STAGED["ivf_retrain_centroids"].fn(spark, sf_dir).collect()
-    assign = STAGED["ivf_cell_rebalance"].fn(spark, sf_dir).collect()
+    rows = MAINTENANCE["ivf_retrain_centroids"].fn(spark, sf_dir).collect()
+    assign = MAINTENANCE["ivf_cell_rebalance"].fn(spark, sf_dir).collect()
     cells = {r.new_cell for r in assign}
     got = {r.cell for r in rows}
     assert got == cells
@@ -263,7 +263,7 @@ def test_retrain_covers_split_cells_consistently(spark, sf_dir):
 
 
 def test_gopher_rules_not_degenerate(spark, sf_dir):
-    rows = STAGED["docs_gopher_rule_filter"].fn(spark, sf_dir).collect()
+    rows = MAINTENANCE["docs_gopher_rule_filter"].fn(spark, sf_dir).collect()
     assert {r.keep for r in rows} == {0, 1}
     # at least two distinct rules actually reject documents
     rejecting = [
@@ -276,7 +276,7 @@ def test_gopher_rules_not_degenerate(spark, sf_dir):
 
 # --- differential fuzz (random lakes x gate compare) -------------------
 
-from hypothesis import HealthCheck, given, settings  # noqa: E402
+from hypothesis import HealthCheck, example, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
 
@@ -295,6 +295,7 @@ from hypothesis import strategies as st  # noqa: E402
         max_size=12,
     )
 )
+@example(texts=["İ0"])  # Spark lowers U+0130 to 'i' + U+0307, DuckDB to 'i'
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 def test_gopher_differential_fuzz(spark, tmp_path_factory, texts):
     """Random-unicode lakes (NULLs included) must hash-match the

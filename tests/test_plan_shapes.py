@@ -10,14 +10,10 @@ import __spark_entry__ as entrymod
 
 
 def plan_of(spark, sf_dir, name: str) -> str:
-    fn = entrymod.queries().get(name)
-    if fn is None:
-        # the r12 cap fold moved the q9/q21 *_bucketed twins out of
-        # the driver registry; their physical plans stay pinned here
-        from noaa_data_pipeline_spark.plans.scale import FOLDED
+    # any tier: the folded q9/q21 *_bucketed twins stay pinned here
+    from noaa_data_pipeline_spark.plans import resolve
 
-        fn = FOLDED[name].fn
-    df = fn(spark, sf_dir)
+    df = resolve(name).fn(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -495,10 +491,11 @@ def test_registry_wide_plan_hygiene(spark, sf_dir):
     those shapes. A future edit that leaks a cartesian or a row-wise
     UDF into ANY entry fails here without needing a dedicated test."""
     import __spark_entry__ as entrymod
-    from noaa_data_pipeline_spark.plans.scale import FOLDED
+    from noaa_data_pipeline_spark.plans import CATALOG
 
     sweep = dict(entrymod.queries())
-    sweep.update({n: q.fn for n, q in FOLDED.items()})  # folded twins too
+    # folded twins too
+    sweep.update({n: q.fn for n, q in CATALOG.items() if q.tier == "folded"})
     offenders = {}
     for name, fn in sweep.items():
         plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()

@@ -7,6 +7,8 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
+from noaa_data_pipeline_spark import plans
+from noaa_data_pipeline_spark.plans import CATALOG, register, resolve
 from tools.check_correctness import canon, frame_digest
 
 
@@ -48,67 +50,15 @@ def test_canon_stability():
     assert canon([1, None]) == "[1,NULL]"
 
 
-def _clean_rows(path):
-    """Driver rows that prove the entry ran AND matched (or is an
-    acknowledged rows-only entry). A row that ran but rows/schema/
-    hash-MISMATCHED is NOT clean."""
-    import json
-
-    with open(path) as fh:
-        rows = json.load(fh)
-    return {
-        name
-        for name, row in rows.items()
-        if row.get("err") in (None, "no_oracle")
-        and row.get("rows_match") is not False
-        and row.get("schema_match") is not False
-        and row.get("hash_match") is not False
-    }
-
-
-def test_plan_edits_require_driver_reproof():
-    """r12 VERDICT task 2: the age-based freshness window cannot see
-    an entry whose plan was EDITED after its last clean driver row
-    (r12 produced two such gaps silently: the adc persist slots, the
-    CC width change — both in same-module helpers). The checked-in
-    ledger (tools/plan_ledger.json) records each entry's
-    transitive-source digest beside the driver round that proved it;
-    any digest drift demands the entry be queued in GATE_PRIORITY for
-    re-proof. The rotation/snapshot commits refresh the ledger via
-    tools/update_plan_ledger.py."""
-    from noaa_data_pipeline_spark.plans import GATE_PRIORITY, load_all
-    from tools.plan_ledger import load_ledger, plan_source_digest
-
-    ledger = load_ledger()
-    stale, unledgered = [], []
-    for name, q in load_all().items():
-        rec = ledger.get(name)
-        if rec is None:
-            if name not in GATE_PRIORITY:
-                unledgered.append(name)
-            continue
-        if rec["digest"] != plan_source_digest(q.fn) and name not in GATE_PRIORITY:
-            stale.append(name)
-    assert not unledgered, (
-        f"entries missing from the plan ledger and not queued for proof: "
-        f"{sorted(unledgered)} — run tools/update_plan_ledger.py"
-    )
-    assert not stale, (
-        f"plan source changed after the last driver proof: {sorted(stale)} "
-        "— add to GATE_PRIORITY (re-proof) and refresh the ledger in the "
-        "same commit"
-    )
-
-
 def test_plan_digest_sees_helper_and_constant_edits(tmp_path):
-    """The digest must catch the r12 gap class: edits to same-module
-    HELPERS and CONSTANTS the entry references, not just the entry
-    function's own body — and must be stable across processes for
-    unchanged source."""
+    """The plan-source digest (the prebuilt PQ index's code key) must
+    catch edits to same-module HELPERS and CONSTANTS the entry
+    references, not just the entry function's own body — and must be
+    stable across processes for unchanged source."""
     import importlib.util
     import sys
 
-    from tools.plan_ledger import plan_source_digest
+    from noaa_data_pipeline_spark.plans.ivf_pq import plan_source_digest
 
     base = '''
 WIDTH = 8
@@ -121,9 +71,9 @@ def entry(spark, sf_dir):
 '''
 
     def load(tag, text):
-        p = tmp_path / f"ledgermod_{tag}.py"
+        p = tmp_path / f"digestmod_{tag}.py"
         p.write_text(text)
-        spec = importlib.util.spec_from_file_location(f"ledgermod_{tag}", p)
+        spec = importlib.util.spec_from_file_location(f"digestmod_{tag}", p)
         mod = importlib.util.module_from_spec(spec)
         sys.modules[spec.name] = mod
         spec.loader.exec_module(mod)
@@ -145,103 +95,68 @@ def entry(spark, sf_dir):
     assert d_entry != d0
 
 
-def test_gate_priority_covers_all_unchecked_entries():
-    """The driver gate records exactly the first 50 registry entries.
-    Invariant: every entry must either (a) have a clean driver row
-    within the freshness window — the most recent rounds whose
-    combined 50-entry samples can cover the whole registry (currently
-    3: 107 entries > 2x50, so a 2-round bar became structurally
-    unsatisfiable when the registry passed 100) — or (b) sit inside
-    GATE_PRIORITY so the next round produces evidence. New entries
-    therefore can't silently land beyond the window. MANUAL STEP this
-    cannot catch: an entry clean in a prior round whose plan is
-    EDITED afterwards must be re-added to GATE_PRIORITY by hand (the
-    full-registry local gate in tools/check_correctness.py is the
-    backstop — see GATE_LOG.md)."""
-    import math
-    from pathlib import Path
+# Every catalog entry outside the driver surface, with its tier.
+UNLISTED_TIERS = {
+    "docs_token_drift_tvd": "staged",
+    "emb_pca_top2_deflation": "staged",
+    "lake_bloom_semijoin_prune": "staged",
+    "sample_weighted_priority": "staged",
+    "sim_hard_negatives": "staged",
+    "sim_ivf_pq_adc_prebuilt": "staged",
+    "sim_ivf_pq_residual_prebuilt": "staged",
+    "emb_matryoshka_truncate_eval": "folded",
+    "events_value_percentiles": "folded",
+    "q1_pricing_summary_exact_agg": "folded",
+    "q21_waiting_suppliers_bucketed": "folded",
+    "q9_product_type_profit_bucketed": "folded",
+    "skew_salted_user_join": "folded",
+    "dedup_simhash_purge_pipeline": "composite",
+    "docs_weighted_shard_assembly": "composite",
+    "emb_pca_outlier_pipeline": "composite",
+}
 
-    from noaa_data_pipeline_spark.plans import GATE_PRIORITY, load_all
-
-    registry = set(load_all())
-    window_rounds = max(2, math.ceil(len(registry) / 50))
-    # the bar must stay satisfiable: the driver can only ever re-prove
-    # 50 entries per round, so the registry may not outgrow the
-    # freshness budget we are willing to tolerate (3 rounds)
-    assert len(registry) <= 3 * 50, "registry outgrew the rotation budget"
-    repo = Path(__file__).resolve().parent.parent
-    rounds = sorted(repo.glob("CORRECTNESS_r*.json"))
-    assert rounds, "no driver correctness artifacts found"
-    clean = set()
-    for path in rounds[-window_rounds:]:
-        clean |= _clean_rows(path)
-    unchecked = registry - clean
-    missing = unchecked - set(GATE_PRIORITY)
-    assert not missing, f"add to GATE_PRIORITY: {sorted(missing)}"
-    # and the priority list itself stays within the observed window
-    assert len(GATE_PRIORITY) <= 50
+# Entries promoted from a staged candidate into the driver surface.
+PROMOTED = [
+    "dedup_containment_ngram",
+    "emb_dim_reduction_eval",
+    "emb_pca_power_iteration",
+    "emb_pca_project_scores",
+    "events_kmv_theta_sketch_overlap",
+    "sim_ivf_pq_adc_search",
+    "sim_ivf_pq_residual_search",
+]
 
 
-def test_shared_helper_edits_require_dated_full_gate():
-    """r13 VERDICT task 5: plans/common.py / operators/textops.py /
-    tables.py sit OUTSIDE every entry's per-plan digest closure by
-    design (an edit there touches ~every entry — no 50-slot driver
-    window can re-prove it; the full-registry local gate is the
-    backstop). This makes the backstop mechanical: the ledger holds a
-    repo-level content hash of those files plus a DATED note naming
-    the full-gate run that covered the last drift. Any edit to a
-    shared helper fails here until
-    `update_plan_ledger.py --shared-gate "<date> <gate run>"` lands
-    in the same commit — which the tool only accepts alongside a
-    recomputed digest, so the note and the drift travel together."""
-    import re
-
-    from tools.plan_ledger import (
-        SHARED_KEY,
-        load_ledger,
-        shared_modules_digest,
-    )
-
-    rec = load_ledger().get(SHARED_KEY)
-    assert rec, (
-        "shared-modules ledger record missing — run "
-        "tools/update_plan_ledger.py --shared-gate '<dated note>'"
-    )
-    assert rec["digest"] == shared_modules_digest(), (
-        "shared helper modules changed since the recorded full-gate "
-        "run — rerun tools/check_correctness.py over the FULL registry "
-        "and record it: update_plan_ledger.py --shared-gate "
-        "'<ISO date> <gate result>' in the same commit"
-    )
-    assert re.match(r"^\d{4}-\d{2}-\d{2}\s+\S", rec.get("full_gate", "")), (
-        "shared-gate note must lead with an ISO date and describe the "
-        f"full-gate run; got: {rec.get('full_gate')!r}"
-    )
+def test_catalog_tiers():
+    """Only the registered tier reaches the driver surface; every tier
+    resolves by name; a retired name resolves nowhere."""
+    driver = set(entrymod.queries())
+    assert len(driver) == 147
+    unlisted = {n: q.tier for n, q in CATALOG.items() if q.tier != "registered"}
+    assert unlisted == UNLISTED_TIERS
+    for name, tier in UNLISTED_TIERS.items():
+        assert resolve(name).tier == tier
+        assert name not in driver
+    for name in PROMOTED:
+        assert name in driver
+        assert resolve(name).tier == "registered"
+    with pytest.raises(KeyError):
+        resolve("emb_jl_projection_eval")
 
 
-def test_shared_modules_digest_sees_content_edits(tmp_path, monkeypatch):
-    """The repo-level hash is content- and file-identity-sensitive:
-    editing any byte of any shared module, or re-pointing the module
-    list, changes it (the synthetic-edit proof the per-plan digest has
-    in test_plan_digest_sees_helper_and_constant_edits)."""
-    import tools.plan_ledger as pl
+def test_register_rejects_duplicate_name():
+    """Names are unique across tiers: re-registering one raises and
+    leaves the catalog untouched."""
+    plans.load_all()
+    before = dict(CATALOG)
+    with pytest.raises(ValueError, match="duplicate"):
+        register("q1_pricing_summary", tier="staged")(lambda spark, sf_dir: None)
+    assert CATALOG == before
 
-    a = tmp_path / "noaa_data_pipeline_spark"
-    a.mkdir()
-    (a / "x.py").write_text("WIDTH = 8\n")
-    (a / "y.py").write_text("def f():\n    return 1\n")
-    monkeypatch.setattr(pl, "SHARED_MODULES", ("noaa_data_pipeline_spark/x.py",))
-    d0 = pl.shared_modules_digest(repo=tmp_path)
-    assert pl.shared_modules_digest(repo=tmp_path) == d0  # stable
-    (a / "x.py").write_text("WIDTH = 16\n")
-    assert pl.shared_modules_digest(repo=tmp_path) != d0, (
-        "content edit invisible to the hash"
-    )
-    monkeypatch.setattr(
-        pl,
-        "SHARED_MODULES",
-        ("noaa_data_pipeline_spark/x.py", "noaa_data_pipeline_spark/y.py"),
-    )
-    assert pl.shared_modules_digest(repo=tmp_path) != d0, (
-        "module-list change invisible"
-    )
+
+def test_load_all_propagates_plan_module_import_error(monkeypatch):
+    """A plan module that fails to import fails the load, instead of
+    silently dropping its entries from the driver surface."""
+    monkeypatch.setattr(plans, "PLAN_MODULES", [*plans.PLAN_MODULES, "no_such_family"])
+    with pytest.raises(ModuleNotFoundError, match="no_such_family"):
+        plans.load_all()

@@ -1,8 +1,8 @@
 """Round-11 candidates: driver-gate-equivalent checks.
 
 All three candidates are promoted (``sim_ivf_pq_adc_search`` in r11,
-the KMV sketch + residual search in r12 — see plans/staging_r11.py
-docstring). This file keeps applying the same row-count + columns +
+the KMV sketch + residual search in r12 — see plans/ivf_pq.py and
+plans/scale.py). This file keeps applying the same row-count + columns +
 order-insensitive value hash compare the driver gate uses, plus the
 restriction-consistency assertion and differential fuzz the r9
 staging protocol established, against the now-registered entries
@@ -20,8 +20,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from noaa_data_pipeline_spark.plans import load_all
-from noaa_data_pipeline_spark.plans.staging_r11 import STAGED
+from noaa_data_pipeline_spark.plans import load_all, resolve
 from tools.check_correctness import frame_digest
 
 
@@ -36,26 +35,7 @@ def _staged_names():
     """All three candidates promoted (r11/r12); the gate-compare and
     laziness checks keep running against the registered entries so
     the three-SF staging proof stays reproducible post-promotion."""
-    return sorted(set(STAGED) | set(CANDIDATES))
-
-
-def _lookup(name):
-    """Find a candidate wherever it lives: staged pre-promotion,
-    registry afterwards (all three live in the registry since r12)."""
-    return STAGED.get(name) or load_all()[name]
-
-
-def test_staging_is_not_registered():
-    """All three r11 candidates are promoted (r11: adc_search; r12:
-    the KMV sketch + residual search per the GATE_LOG rotation), so
-    the staging dict must be EMPTY — a candidate left behind would
-    be registered and staged at once, breaking the gate-rotation
-    freshness invariant mid-round."""
-    registered = set(load_all().keys())
-    assert not (set(STAGED) & registered)
-    assert not STAGED
-    for name in CANDIDATES:
-        assert name in registered, f"{name} lost in promotion"
+    return sorted(CANDIDATES)
 
 
 def test_ivfpq_search_restricts_to_probed_cells(spark, sf_dir):
@@ -67,7 +47,7 @@ def test_ivfpq_search_restricts_to_probed_cells(spark, sf_dir):
     ADC list (the probe restriction must actually bite — if the lists
     always match, nprobe covers the whole corpus and the entry is a
     no-op twin)."""
-    ivfpq = _lookup("sim_ivf_pq_adc_search").fn(spark, sf_dir).collect()
+    ivfpq = resolve("sim_ivf_pq_adc_search").fn(spark, sf_dir).collect()
     full = load_all()["sim_pq_adc_topk"].fn(spark, sf_dir).collect()
     assert ivfpq
     full_d = {(r.query_id, r.neighbor_id): r.approx_dist_sq for r in full}
@@ -91,7 +71,7 @@ def test_ivfpq_search_restricts_to_probed_cells(spark, sf_dir):
 
 @pytest.mark.parametrize("name", _staged_names())
 def test_staged_matches_oracle(spark, duck, sf_dir, name):
-    q = _lookup(name)
+    q = resolve(name)
     sdf = q.fn(spark, sf_dir)
     complex_cols = [
         f.name
@@ -120,7 +100,7 @@ def test_staged_matches_oracle(spark, duck, sf_dir, name):
 def _gate_compare(spark, lake, name, views):
     import duckdb
 
-    q = _lookup(name)
+    q = resolve(name)
     con = duckdb.connect()
     for t in views:
         con.execute(
@@ -187,9 +167,9 @@ def test_kmv_overlap_estimates_track_exact(spark, duck, sf_dir):
     holds, and every estimate lands within the k=32 KMV error
     envelope (|rel err| < 0.6 ~ 3 sigma) of the exact cardinality;
     segments smaller than k must estimate EXACTLY (theta = cap)."""
-    from noaa_data_pipeline_spark.plans.staging_r11 import KMV_CUT, KMV_K
+    from noaa_data_pipeline_spark.plans.scale import KMV_CUT, KMV_K
 
-    rows = _lookup("events_kmv_theta_sketch_overlap").fn(spark, sf_dir).collect()
+    rows = resolve("events_kmv_theta_sketch_overlap").fn(spark, sf_dir).collect()
     assert rows
     types = duck.execute(
         f"SELECT DISTINCT event_type FROM events WHERE value > {KMV_CUT}"
@@ -260,7 +240,7 @@ def test_adc_codeword_cache_actually_hits(spark, sf_dir):
 
     os.environ["SPARK_GRAFT_PQ_INDEX"] = "0"
     try:
-        df = _lookup("sim_ivf_pq_adc_search").fn(spark, sf_dir)
+        df = resolve("sim_ivf_pq_adc_search").fn(spark, sf_dir)
     finally:
         del os.environ["SPARK_GRAFT_PQ_INDEX"]
     scans = _cache_scans(df._jdf.queryExecution().executedPlan(), [])
@@ -297,7 +277,7 @@ def test_kmv_plan_one_corpus_exchange(spark, sf_dir):
     a WindowGroupLimit; everything downstream is sketch-sized and the
     pair assembly never produces a cartesian of anything
     corpus-sized."""
-    df = _lookup("events_kmv_theta_sketch_overlap").fn(spark, sf_dir)
+    df = resolve("events_kmv_theta_sketch_overlap").fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan
     assert "CartesianProduct" not in plan
@@ -351,8 +331,8 @@ def test_residual_encoding_changes_the_ranking(spark, sf_dir):
     and at least one query's top-k ORDER differs from the raw-vector
     ADC search — centered residual codebooks quantize differently
     from global-vector codebooks by construction."""
-    res = _lookup("sim_ivf_pq_residual_search").fn(spark, sf_dir).collect()
-    raw = _lookup("sim_ivf_pq_adc_search").fn(spark, sf_dir).collect()
+    res = resolve("sim_ivf_pq_residual_search").fn(spark, sf_dir).collect()
+    raw = resolve("sim_ivf_pq_adc_search").fn(spark, sf_dir).collect()
     assert res
     by_q_res, by_q_raw = {}, {}
     for r in res:
@@ -397,7 +377,7 @@ def test_candidate_construction_laziness(spark, sf_dir):
     deleted)."""
     tracker = spark.sparkContext.statusTracker()
     for name in CANDIDATES:
-        fn = _lookup(name).fn
+        fn = resolve(name).fn
         fn(spark, sf_dir)  # warm table/footer caches
         before = set(tracker.getJobIdsForGroup(None) or ())
         fn(spark, sf_dir)
@@ -415,19 +395,19 @@ def test_residual_slots_reuse_on_same_lake(spark, sf_dir, monkeypatch):
     frames (faiss add-once/search-many: the x500 profile put ~90% of
     the wall in per-invocation index rebuild), while output stays
     identical across the reuse."""
-    from noaa_data_pipeline_spark.plans import staging_r11 as s11
+    from noaa_data_pipeline_spark.plans import ivf_pq as ivf
 
     # the in-session leg is what owns these slots (routing pins: r15)
     monkeypatch.setenv("SPARK_GRAFT_PQ_INDEX", "0")
-    s11.reset_search_index_slots()
-    fn = _lookup("sim_ivf_pq_residual_search").fn
+    ivf.reset_search_index_slots()
+    fn = resolve("sim_ivf_pq_residual_search").fn
     df = fn(spark, sf_dir)
     first_digest = frame_digest(df.columns, [tuple(r) for r in df.collect()])
     slots = (
-        s11._RESID_CVECS_PERSISTED,
-        s11._RESID_RSUB_PERSISTED,
-        s11._RESID_CODEWORDS_PERSISTED,
-        s11._RESID_CODES_PERSISTED,
+        ivf._RESID_CVECS_PERSISTED,
+        ivf._RESID_RSUB_PERSISTED,
+        ivf._RESID_CODEWORDS_PERSISTED,
+        ivf._RESID_CODES_PERSISTED,
     )
     assert all(len(s) == 1 for s in slots), "index slots not populated"
     warm = [s[0] for s in slots]
@@ -444,27 +424,27 @@ def test_reset_search_index_slots_forces_rebuild(spark, sf_dir, monkeypatch):
     invocation rebuilds fresh frames (this is what makes the
     spark_cold_sec rows in BENCH_SCALE build-inclusive rather than a
     mislabeled warm run)."""
-    from noaa_data_pipeline_spark.plans import staging_r11 as s11
+    from noaa_data_pipeline_spark.plans import ivf_pq as ivf
 
     # the in-session leg is what owns these slots (routing pins: r15)
     monkeypatch.setenv("SPARK_GRAFT_PQ_INDEX", "0")
-    fn = _lookup("sim_ivf_pq_adc_search").fn
+    fn = resolve("sim_ivf_pq_adc_search").fn
     fn(spark, sf_dir).collect()
-    assert s11._ADC_CODES_PERSISTED, "adc index slot not populated"
-    old = s11._ADC_CODES_PERSISTED[0]
-    s11.reset_search_index_slots()
+    assert ivf._ADC_CODES_PERSISTED, "adc index slot not populated"
+    old = ivf._ADC_CODES_PERSISTED[0]
+    ivf.reset_search_index_slots()
     for slot in (
-        s11._ADC_SUB_PERSISTED,
-        s11._ADC_CODEWORDS_PERSISTED,
-        s11._ADC_CODES_PERSISTED,
-        s11._RESID_CVECS_PERSISTED,
-        s11._RESID_RSUB_PERSISTED,
-        s11._RESID_CODEWORDS_PERSISTED,
-        s11._RESID_CODES_PERSISTED,
+        ivf._ADC_SUB_PERSISTED,
+        ivf._ADC_CODEWORDS_PERSISTED,
+        ivf._ADC_CODES_PERSISTED,
+        ivf._RESID_CVECS_PERSISTED,
+        ivf._RESID_RSUB_PERSISTED,
+        ivf._RESID_CODEWORDS_PERSISTED,
+        ivf._RESID_CODES_PERSISTED,
     ):
         assert slot == []
     assert str(old.storageLevel) == str(
         type(old.storageLevel)(False, False, False, False, 1)
     ), "reset left the old index frame cached"
     fn(spark, sf_dir).collect()
-    assert s11._ADC_CODES_PERSISTED and s11._ADC_CODES_PERSISTED[0] is not old
+    assert ivf._ADC_CODES_PERSISTED and ivf._ADC_CODES_PERSISTED[0] is not old

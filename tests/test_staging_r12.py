@@ -1,7 +1,6 @@
 """Round-12 candidates: driver-gate-equivalent checks.
 
-The PCA pair is REGISTERED since r13 (see plans/staging_r12.py
-docstring) — its checks keep running against the registered entries
+The PCA pair is REGISTERED since r13 (see plans/embeddings.py) — its checks keep running against the registered entries
 so the three-SF staging proof stays reproducible post-promotion (the
 test_staging_r11 precedent); the containment/bloom candidates stay
 staged. All get the full staging protocol here: the driver's row-count + columns
@@ -22,50 +21,31 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from noaa_data_pipeline_spark.plans import load_all
-from noaa_data_pipeline_spark.plans.staging_r12 import (
-    BLOOM_K,
-    BLOOM_M,
-    CONTAINMENT_PPM,
-    NEAR_DUP_J_PPM,
-    STAGED,
-)
+from noaa_data_pipeline_spark.plans import load_all, resolve
+from noaa_data_pipeline_spark.plans.dedup import CONTAINMENT_PPM, NEAR_DUP_J_PPM
+from noaa_data_pipeline_spark.plans.scale import BLOOM_K, BLOOM_M
 from tools.check_correctness import frame_digest
 
 
 # Promoted at r13 into the capacity the consolidation freed (r12
 # VERDICT task 3), plus the r15 rotation promotion (r14 VERDICT task
-# 1 standing order); resolved from the registry post-promotion.
+# 1 standing order); lake_bloom_semijoin_prune stays staged. All
+# resolve by name.
 CANDIDATES = [
     "emb_pca_power_iteration",
     "emb_pca_project_scores",
     "dedup_containment_ngram",
+    "lake_bloom_semijoin_prune",  # staged
 ]
 
 
 def _staged_names():
-    return sorted(set(STAGED) | set(CANDIDATES))
-
-
-def _lookup(name):
-    """Find a candidate wherever it lives: staged pre-promotion, the
-    registry afterwards (the PCA pair lives there since r13)."""
-    return STAGED.get(name) or load_all()[name]
-
-
-def test_staging_is_not_registered():
-    """Staged candidates must not leak into the driver registry (a
-    leak would break the gate-rotation freshness invariant
-    mid-round); the r13-promoted PCA pair must be IN it."""
-    registered = set(load_all().keys())
-    assert not (set(STAGED) & registered)
-    for name in CANDIDATES:
-        assert name in registered, f"{name} lost in promotion"
+    return sorted(CANDIDATES)
 
 
 @pytest.mark.parametrize("name", _staged_names())
 def test_staged_matches_oracle(spark, duck, sf_dir, name):
-    q = _lookup(name)
+    q = resolve(name)
     sdf = q.fn(spark, sf_dir)
     complex_cols = [
         f.name
@@ -94,7 +74,7 @@ def test_staged_matches_oracle(spark, duck, sf_dir, name):
 def _gate_compare(spark, lake, name, views):
     import duckdb
 
-    q = _lookup(name)
+    q = resolve(name)
     con = duckdb.connect()
     for t in views:
         con.execute(
@@ -191,7 +171,7 @@ def test_containment_agrees_with_jaccard_family(spark, duck, sf_dir):
     always), flagged near_dup."""
     got = {
         (r.doc_a, r.doc_b): r
-        for r in _lookup("dedup_containment_ngram").fn(spark, sf_dir).collect()
+        for r in resolve("dedup_containment_ngram").fn(spark, sf_dir).collect()
     }
     jacc = load_all()["dedup_ngram_jaccard"].fn(spark, sf_dir).collect()
     for r in jacc:
@@ -207,7 +187,7 @@ def test_bloom_structural_invariants(spark, sf_dir):
     """No false negatives ever (Bloom's one guarantee), the pass set
     decomposes exactly into true matches + false positives, and the
     filter occupancy is bounded by k x build keys and by m."""
-    r = STAGED["lake_bloom_semijoin_prune"].fn(spark, sf_dir).collect()[0]
+    r = resolve("lake_bloom_semijoin_prune").fn(spark, sf_dir).collect()[0]
     assert r.n_false_neg == 0
     assert r.n_pass_bloom == r.n_true_match + r.n_false_pos
     assert 0 < r.bits_set <= min(r.m_bits, r.k_hashes * r.n_build_keys)
@@ -282,7 +262,7 @@ def test_candidate_construction_laziness(spark, sf_dir):
     test_staging_r11; these two have none)."""
     tracker = spark.sparkContext.statusTracker()
     for name in _staged_names():
-        fn = _lookup(name).fn
+        fn = resolve(name).fn
         fn(spark, sf_dir)  # warm table/footer caches
         before = set(tracker.getJobIdsForGroup(None) or ())
         fn(spark, sf_dir)
@@ -294,7 +274,7 @@ def test_candidate_construction_laziness(spark, sf_dir):
 
 
 def _plan(spark, sf_dir, name):
-    df = _lookup(name).fn(spark, sf_dir)
+    df = resolve(name).fn(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -324,7 +304,7 @@ def test_containment_no_cartesian_no_udf(spark, sf_dir):
 
 
 def _pca_rows(spark, sf_dir):
-    return _lookup("emb_pca_power_iteration").fn(spark, sf_dir).collect()
+    return resolve("emb_pca_power_iteration").fn(spark, sf_dir).collect()
 
 
 def test_pca_tracks_numpy_eigh(spark, duck, sf_dir):
@@ -416,7 +396,7 @@ def test_bloom_fp_rich_regime_small_m(spark, sf_dir):
     must still never produce a false negative, must pass nearly
     everything (occupancy ~1), and the accounting identity must
     hold."""
-    from noaa_data_pipeline_spark.plans.staging_r12 import bloom_semijoin_report
+    from noaa_data_pipeline_spark.plans.scale import bloom_semijoin_report
 
     r = bloom_semijoin_report(spark, sf_dir, m=64).collect()[0]
     assert r.m_bits == 64
@@ -433,8 +413,8 @@ def test_pca_projection_moments_match_eigenvalue(spark, sf_dir):
     identity that ties the two entries together."""
     import numpy as np
 
-    projs = _lookup("emb_pca_project_scores").fn(spark, sf_dir).collect()
-    pca = _lookup("emb_pca_power_iteration").fn(spark, sf_dir).collect()
+    projs = resolve("emb_pca_project_scores").fn(spark, sf_dir).collect()
+    pca = resolve("emb_pca_power_iteration").fn(spark, sf_dir).collect()
     lam = pca[0].eigenvalue_q / 1e9
     p = np.array([r.proj_q for r in projs], dtype=np.float64) / 1e9
     assert abs(float(p.mean())) < 1e-6  # quantization-level centering

@@ -1,7 +1,7 @@
 """Round-13 candidates: driver-gate-equivalent checks.
 
 ``emb_dim_reduction_eval`` is REGISTERED since r13 (the consolidation
-— see plans/staging_r13.py docstring); its checks, including the ones
+— see plans/embeddings.py); its checks, including the ones
 inherited from the deleted standalone JL candidate, keep running
 against the registered entry so the staging proof stays reproducible
 post-promotion (the test_staging_r11 precedent). The sampling and
@@ -26,53 +26,24 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from noaa_data_pipeline_spark.plans import load_all
-from noaa_data_pipeline_spark.plans.staging_r13 import (
-    JL_DIMS,
-    JL_K,
-    JL_QUERIES,
-    JL_R,
-    STAGED,
-    WSAMP_K,
-    WSAMP_SCALE,
-    _jl_sign,
-)
+from noaa_data_pipeline_spark.plans import resolve
+from noaa_data_pipeline_spark.plans.embeddings import JL_DIMS, JL_K, JL_QUERIES, JL_R, _jl_sign
+from noaa_data_pipeline_spark.plans.text import WSAMP_K, WSAMP_SCALE
 from tools.check_correctness import frame_digest
 
 
-# Promoted at r13 (the consolidation); resolved from the registry.
-CANDIDATES = ["emb_dim_reduction_eval"]
+# emb_dim_reduction_eval is registered (the r13 consolidation); the
+# other two stay staged. All resolve by name.
+CANDIDATES = ["emb_dim_reduction_eval", "sample_weighted_priority", "sim_hard_negatives"]
 
 
 def _staged_names():
-    return sorted(set(STAGED) | set(CANDIDATES))
-
-
-def _lookup(name):
-    """Find a candidate wherever it lives: staged pre-promotion, the
-    registry afterwards (emb_dim_reduction_eval lives there since
-    r13)."""
-    return STAGED.get(name) or load_all()[name]
-
-
-def test_staging_is_not_registered():
-    """Staged candidates must not leak into the driver registry (a
-    leak would break the gate-rotation freshness invariant
-    mid-round); the r13-promoted consolidation entry must be IN it,
-    and both retired parents must be OUT (matryoshka folded, the
-    standalone JL candidate deleted)."""
-    registered = set(load_all().keys())
-    assert not (set(STAGED) & registered)
-    for name in CANDIDATES:
-        assert name in registered, f"{name} lost in promotion"
-    assert "emb_jl_projection_eval" not in STAGED
-    assert "emb_jl_projection_eval" not in registered
-    assert "emb_matryoshka_truncate_eval" not in registered
+    return sorted(CANDIDATES)
 
 
 @pytest.mark.parametrize("name", _staged_names())
 def test_staged_matches_oracle(spark, duck, sf_dir, name):
-    q = _lookup(name).fn(spark, sf_dir)
+    q = resolve(name).fn(spark, sf_dir)
     complex_cols = [
         f.name
         for f in q.schema.fields
@@ -80,7 +51,7 @@ def test_staged_matches_oracle(spark, duck, sf_dir, name):
     ]
     assert not complex_cols, f"top-level complex column(s) {complex_cols}"
     srows = [tuple(r) for r in q.collect()]
-    oracle = _lookup(name).oracle
+    oracle = resolve(name).oracle
     assert oracle is not None, "staged entries must ship an oracle"
     res = duck.execute(oracle)
     ocols = [d[0] for d in res.description]
@@ -101,7 +72,7 @@ def test_staged_matches_oracle(spark, duck, sf_dir, name):
 def _gate_compare(spark, lake, name, views):
     import duckdb
 
-    q = _lookup(name)
+    q = resolve(name)
     con = duckdb.connect()
     for t in views:
         con.execute(
@@ -164,7 +135,7 @@ def test_jl_overlap_counts_are_sane(spark, sf_dir):
     with a projection)."""
     import os
 
-    rows = _lookup("emb_dim_reduction_eval").fn(spark, sf_dir).collect()
+    rows = resolve("emb_dim_reduction_eval").fn(spark, sf_dir).collect()
     assert len(rows) == 2 * len(JL_DIMS) * JL_QUERIES
     totals = {}
     for r in rows:
@@ -238,7 +209,7 @@ def test_jl_plan_shape(spark, sf_dir):
     query-broadcast nested loop (vec_id <> query_id), per-(axis,
     query, width) top-k is WindowGroupLimit, and nothing drops to
     Python or a cartesian."""
-    df = _lookup("emb_dim_reduction_eval").fn(spark, sf_dir)
+    df = resolve("emb_dim_reduction_eval").fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
@@ -276,7 +247,7 @@ def test_wsamp_matches_python_reference(spark, duck, sf_dir):
             (rank + 1, doc_id, pri)
             for rank, (pri, doc_id) in enumerate(items[:WSAMP_K])
         ]
-    rows = STAGED["sample_weighted_priority"].fn(spark, sf_dir).collect()
+    rows = resolve("sample_weighted_priority").fn(spark, sf_dir).collect()
     got = {}
     for r in rows:
         got.setdefault(r.source, []).append((r.sample_rank, r.doc_id, r.priority))
@@ -289,7 +260,7 @@ def test_wsamp_stratum_stats_and_bounds(spark, sf_dir):
     """Per-stratum row counts are min(k, stratum size), ranks are the
     dense prefix 1..n, and the carried stratum stats are consistent
     across every row of the stratum."""
-    rows = STAGED["sample_weighted_priority"].fn(spark, sf_dir).collect()
+    rows = resolve("sample_weighted_priority").fn(spark, sf_dir).collect()
     by_stratum = {}
     for r in rows:
         by_stratum.setdefault(r.source, []).append(r)
@@ -416,7 +387,7 @@ def test_wsamp_plan_shape(spark, sf_dir):
     at most k rows per stratum into the one source-keyed exchange),
     the stats join must be broadcast, and nothing drops to Python or
     a cartesian."""
-    df = STAGED["sample_weighted_priority"].fn(spark, sf_dir)
+    df = resolve("sample_weighted_priority").fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan
     assert "Partial" in plan  # map-side group-limit before the exchange
@@ -435,7 +406,7 @@ def test_candidate_construction_laziness(spark, sf_dir):
     documents its exemption in test_staging_r11; these have none)."""
     tracker = spark.sparkContext.statusTracker()
     for name in _staged_names():
-        fn = _lookup(name).fn
+        fn = resolve(name).fn
         fn(spark, sf_dir)  # warm table/footer caches
         before = set(tracker.getJobIdsForGroup(None) or ())
         fn(spark, sf_dir)
@@ -451,7 +422,7 @@ def test_jl_projection_is_persisted_not_inlined(spark, sf_dir):
     inlined-expression-recompute hazard, load-bearing here: losing
     the persist silently multiplies the projection work ~10x without
     changing any result."""
-    df = _lookup("emb_dim_reduction_eval").fn(spark, sf_dir)
+    df = resolve("emb_dim_reduction_eval").fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan
     # the projected column itself must not appear as an inline
@@ -467,7 +438,7 @@ def test_hard_negatives_structure(spark, sf_dir):
     different-label (checked against the raw embeddings), margin is
     exactly pos_best - neg_cosine on the returned bits, and the
     ranking is non-increasing in cosine."""
-    from noaa_data_pipeline_spark.plans.staging_r13 import HN_K, HN_QUERIES, STAGED as S13
+    from noaa_data_pipeline_spark.plans.similarity import HN_K, HN_QUERIES
 
     labels = {
         r.vec_id: r.label
@@ -475,7 +446,7 @@ def test_hard_negatives_structure(spark, sf_dir):
         .select("vec_id", "label")
         .collect()
     }
-    rows = S13["sim_hard_negatives"].fn(spark, sf_dir).collect()
+    rows = resolve("sim_hard_negatives").fn(spark, sf_dir).collect()
     by_q = {}
     for r in rows:
         by_q.setdefault(r.query_id, []).append(r)
@@ -547,9 +518,7 @@ def test_hard_negatives_plan_shape(spark, sf_dir):
     negatives window (WindowGroupLimit) and the positives ceiling;
     the corpus never shuffles and nothing drops to Python or a
     cartesian."""
-    from noaa_data_pipeline_spark.plans.staging_r13 import STAGED as S13
-
-    df = S13["sim_hard_negatives"].fn(spark, sf_dir)
+    df = resolve("sim_hard_negatives").fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
@@ -567,16 +536,14 @@ def test_dim_reduction_eval_equals_its_parents(spark, sf_dir):
     entries it replaced (the identity that let the r13 rotation swap
     them without any loss of semantics or oracle coverage — kept
     running post-retirement per the r12 VERDICT task 3): axis='mrl'
-    to the FOLDED emb_matryoshka_truncate_eval (same widths/k/queries
+    to the folded emb_matryoshka_truncate_eval (same widths/k/queries
     constants; the fold keeps its Query gate-resolvable). The deleted
     standalone JL candidate has no live twin to compare against — its
     axis is re-derived independently by this entry's own oracle SQL
     (the truth pin test_staged_matches_oracle/the registry gate
     exercise) and its recall curve stays pinned in
     test_jl_overlap_counts_are_sane."""
-    from noaa_data_pipeline_spark.plans.scale import FOLDED
-
-    cons = _lookup("emb_dim_reduction_eval").fn(spark, sf_dir).collect()
+    cons = resolve("emb_dim_reduction_eval").fn(spark, sf_dir).collect()
     mrl_axis = sorted(
         (r.r_dim, r.query_id, r.n_overlap, r.k) for r in cons if r.axis == "mrl"
     )
@@ -585,7 +552,7 @@ def test_dim_reduction_eval_equals_its_parents(spark, sf_dir):
     )
     parent_mrl = sorted(
         (r.trunc_dim, r.query_id, r.n_overlap, r.k)
-        for r in FOLDED["emb_matryoshka_truncate_eval"].fn(spark, sf_dir).collect()
+        for r in resolve("emb_matryoshka_truncate_eval").fn(spark, sf_dir).collect()
     )
     assert mrl_axis == parent_mrl
     assert len(jl_axis) == len(parent_mrl)

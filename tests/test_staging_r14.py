@@ -1,7 +1,7 @@
 """Round-14 candidates: driver-gate-equivalent checks.
 
 ``docs_token_drift_tvd`` and ``emb_pca_top2_deflation`` stay staged
-(see plans/staging_r14.py docstring) and get the full staging
+(see plans/text.py and plans/embeddings.py) and get the full staging
 protocol here: the driver's
 row-count + columns + order-insensitive value-hash compare, an
 INDEPENDENT third implementation (pure Python token counting and
@@ -24,25 +24,22 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from noaa_data_pipeline_spark.plans import load_all
-from noaa_data_pipeline_spark.plans.staging_r14 import STAGED, TVD_SCALE
+from noaa_data_pipeline_spark.plans import load_all, resolve
+from noaa_data_pipeline_spark.plans.text import TVD_SCALE
 from tools.check_correctness import frame_digest
 
 
-def _staged_names():
-    return sorted(STAGED.keys())
+CANDIDATES = [
+    "docs_token_drift_tvd",
+    "emb_pca_top2_deflation",
+    "sim_ivf_pq_adc_prebuilt",
+    "sim_ivf_pq_residual_prebuilt",
+]
 
 
-def test_staging_is_not_registered():
-    """Staged candidates must not leak into the driver registry (a
-    leak would break the gate-rotation freshness invariant
-    mid-round)."""
-    assert not (set(STAGED) & set(load_all().keys()))
-
-
-@pytest.mark.parametrize("name", _staged_names())
+@pytest.mark.parametrize("name", CANDIDATES)
 def test_staged_matches_oracle(spark, duck, sf_dir, name):
-    q = STAGED[name]
+    q = resolve(name)
     sdf = q.fn(spark, sf_dir)
     complex_cols = [
         f.name
@@ -107,7 +104,7 @@ def test_tvd_matches_python_reference(spark, duck, sf_dir):
     cannot self-confirm."""
     raw = duck.execute("SELECT source, text FROM documents").fetchall()
     expected = _py_tvd(raw)
-    rows = STAGED["docs_token_drift_tvd"].fn(spark, sf_dir).collect()
+    rows = resolve("docs_token_drift_tvd").fn(spark, sf_dir).collect()
     assert len(rows) == len(expected)
     for r in rows:
         t_s, t_r, tvd, top_tok, top_gap = expected[r.source]
@@ -141,7 +138,7 @@ def _write_docs(tmp, rows):
 def _gate_compare(spark, lake, name):
     import duckdb
 
-    q = STAGED[name]
+    q = resolve(name)
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{lake}/documents.parquet')"
@@ -233,8 +230,8 @@ def test_candidate_construction_laziness(spark, sf_dir):
     """The r14 candidate constructs without launching a Spark job —
     no exemptions."""
     tracker = spark.sparkContext.statusTracker()
-    for name in _staged_names():
-        fn = STAGED[name].fn
+    for name in CANDIDATES:
+        fn = resolve(name).fn
         fn(spark, sf_dir)  # warm table/footer caches
         before = set(tracker.getJobIdsForGroup(None) or ())
         fn(spark, sf_dir)
@@ -249,7 +246,7 @@ def test_tvd_plan_shape(spark, sf_dir):
     InMemoryTableScans and NO second tokenize+count subtree; the
     comparison grid is assembled by broadcast (never a corpus-sized
     cartesian), and nothing drops to Python."""
-    df = STAGED["docs_token_drift_tvd"].fn(spark, sf_dir)
+    df = resolve("docs_token_drift_tvd").fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "PythonUDF" not in plan and "ArrowEvalPython" not in plan
@@ -270,7 +267,7 @@ def test_pca2_comp1_equals_registered_parent(spark, sf_dir):
     """Comp-1 rows must be row-identical (minus the comp column) to
     the registered emb_pca_power_iteration — same state frame, same
     quantization — the identity that makes this a pure extension."""
-    rows = STAGED["emb_pca_top2_deflation"].fn(spark, sf_dir).collect()
+    rows = resolve("emb_pca_top2_deflation").fn(spark, sf_dir).collect()
     comp1 = sorted(
         (r.dim, r.loading_q, r.eigenvalue_q, r.evr_ppm) for r in rows if r.comp == 1
     )
@@ -295,7 +292,7 @@ def test_pca2_orthogonality_and_spectrum(spark, duck, sf_dir):
     eigenvalue of the same quantized covariance."""
     import numpy as np
 
-    rows = STAGED["emb_pca_top2_deflation"].fn(spark, sf_dir).collect()
+    rows = resolve("emb_pca_top2_deflation").fn(spark, sf_dir).collect()
     v = {c: [0.0] * len([r for r in rows if r.comp == c]) for c in (1, 2)}
     lam = {}
     for r in rows:
@@ -365,7 +362,7 @@ def test_pca2_spiked_two_directions(spark, tmp_path_factory):
         ),
         f"{tmp}/embeddings.parquet",
     )
-    rows = STAGED["emb_pca_top2_deflation"].fn(spark, tmp).collect()
+    rows = resolve("emb_pca_top2_deflation").fn(spark, tmp).collect()
     import numpy as np
 
     v = {1: np.zeros(64), 2: np.zeros(64)}
@@ -383,7 +380,7 @@ def test_pca2_plan_shape(spark, sf_dir):
     exchange is the only corpus-sized shuffle, the recurrences are
     1-row work behind repartition barriers, no cartesian of anything
     corpus-sized, no Python."""
-    df = STAGED["emb_pca_top2_deflation"].fn(spark, sf_dir)
+    df = resolve("emb_pca_top2_deflation").fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "PythonUDF" not in plan and "ArrowEvalPython" not in plan
@@ -415,7 +412,7 @@ def test_prebuilt_identical_to_parent_and_prunes_cells(
     # declared index exists — pin its in-session leg so this compare
     # keeps covering build-in-session vs read-from-parquet
     monkeypatch.setenv("SPARK_GRAFT_PQ_INDEX", "0")
-    q = STAGED[name]
+    q = resolve(name)
     df = q.fn(spark, sf_dir)
     pdf = load_all()[parent].fn(spark, sf_dir)
     sh, _ = frame_digest(df.columns, [tuple(r) for r in df.collect()])
@@ -477,7 +474,7 @@ def test_prebuilt_ivfpq_differential_fuzz(spark, tmp_path_factory, seed, n, n_ze
         f"read_parquet('{tmp}/embeddings.parquet')"
     )
     for name in ("sim_ivf_pq_adc_prebuilt", "sim_ivf_pq_residual_prebuilt"):
-        q = STAGED[name]
+        q = resolve(name)
         sdf = q.fn(spark, tmp)
         srows = [tuple(r) for r in sdf.collect()]
         res = con.execute(q.oracle)
@@ -497,11 +494,11 @@ def test_prebuilt_ivfpq_differential_fuzz(spark, tmp_path_factory, seed, n, n_ze
 def _isolated_root(monkeypatch, tmp_path):
     """Point the index machinery at a private root and clear the
     per-process caches that key on the published path."""
-    from noaa_data_pipeline_spark.plans import staging_r14 as s14
+    from noaa_data_pipeline_spark.plans import ivf_pq as ivf
 
-    monkeypatch.setenv(s14._PQ_ROOT_ENV, str(tmp_path / "pqroot"))
+    monkeypatch.setenv(ivf._PQ_ROOT_ENV, str(tmp_path / "pqroot"))
     monkeypatch.delenv("SPARK_GRAFT_PQ_INDEX", raising=False)
-    return s14
+    return ivf
 
 
 def test_pq_root_env_override_and_mode(spark, sf_dir, monkeypatch, tmp_path):
@@ -511,12 +508,12 @@ def test_pq_root_env_override_and_mode(spark, sf_dir, monkeypatch, tmp_path):
     import os
     import tempfile
 
-    s14 = _isolated_root(monkeypatch, tmp_path)
-    root = s14._pq_index_root()
+    ivf = _isolated_root(monkeypatch, tmp_path)
+    root = ivf._pq_index_root()
     assert root == str(tmp_path / "pqroot")
     assert os.path.isdir(root)
-    monkeypatch.delenv(s14._PQ_ROOT_ENV)
-    default = s14._pq_index_root()
+    monkeypatch.delenv(ivf._PQ_ROOT_ENV)
+    default = ivf._pq_index_root()
     assert default.startswith(tempfile.gettempdir())
     assert str(os.getuid()) in os.path.basename(default)
     assert (os.stat(default).st_mode & 0o777) == 0o700
@@ -528,11 +525,11 @@ def test_pq_incidental_build_does_not_flip_routing(
     """An undeclared publish (fuzz run, staged one-off) must not
     change which physical plan a later env-unset session executes —
     the bucketed warehouse:false rule."""
-    s14 = _isolated_root(monkeypatch, tmp_path)
-    assert not s14.pq_index_available(spark, sf_dir)
-    s14.build_pq_index(spark, sf_dir)  # undeclared
-    assert not s14.pq_index_available(spark, sf_dir)
-    m = s14._read_pq_manifest(s14._pq_index_tag(sf_dir))
+    ivf = _isolated_root(monkeypatch, tmp_path)
+    assert not ivf.pq_index_available(spark, sf_dir)
+    ivf.build_pq_index(spark, sf_dir)  # undeclared
+    assert not ivf.pq_index_available(spark, sf_dir)
+    m = ivf._read_pq_manifest(ivf._pq_index_tag(sf_dir))
     assert m is not None and m["declared"] is False
 
 
@@ -545,11 +542,11 @@ def test_pq_declared_index_routes_registered_entries_with_dpp(
     rows hash-match the pinned in-session leg bit-for-bit."""
     from noaa_data_pipeline_spark.plans import load_all
 
-    s14 = _isolated_root(monkeypatch, tmp_path)
-    s14.declare_pq_index(spark, sf_dir)
-    assert s14.pq_index_available(spark, sf_dir)
+    ivf = _isolated_root(monkeypatch, tmp_path)
+    ivf.declare_pq_index(spark, sf_dir)
+    assert ivf.pq_index_available(spark, sf_dir)
     # declaring again is an idempotent no-rebuild attach
-    assert s14.declare_pq_index(spark, sf_dir) == s14.build_pq_index(spark, sf_dir)
+    assert ivf.declare_pq_index(spark, sf_dir) == ivf.build_pq_index(spark, sf_dir)
     registry = load_all()
     for name in ("sim_ivf_pq_adc_search", "sim_ivf_pq_residual_search"):
         routed = registry[name].fn(spark, sf_dir)
@@ -569,12 +566,12 @@ def test_pq_env_pins_beat_declared_manifest(spark, sf_dir, monkeypatch, tmp_path
     """Gate determinism: =0 pins in-session even when declared
     (tools/check_correctness default); =1 forces routing even when
     nothing is published yet (warehouse profile, builds on demand)."""
-    s14 = _isolated_root(monkeypatch, tmp_path)
+    ivf = _isolated_root(monkeypatch, tmp_path)
     monkeypatch.setenv("SPARK_GRAFT_PQ_INDEX", "1")
-    assert s14.pq_index_available(spark, sf_dir)
-    s14.declare_pq_index(spark, sf_dir)
+    assert ivf.pq_index_available(spark, sf_dir)
+    ivf.declare_pq_index(spark, sf_dir)
     monkeypatch.setenv("SPARK_GRAFT_PQ_INDEX", "0")
-    assert not s14.pq_index_available(spark, sf_dir)
+    assert not ivf.pq_index_available(spark, sf_dir)
 
 
 def test_pq_gc_prunes_orphans_keeps_live(spark, sf_dir, monkeypatch, tmp_path):
@@ -585,8 +582,8 @@ def test_pq_gc_prunes_orphans_keeps_live(spark, sf_dir, monkeypatch, tmp_path):
     import os
     import time
 
-    s14 = _isolated_root(monkeypatch, tmp_path)
-    root = s14._pq_index_root()
+    ivf = _isolated_root(monkeypatch, tmp_path)
+    root = ivf._pq_index_root()
 
     def plant(name, manifest):
         os.makedirs(os.path.join(root, name), exist_ok=True)
@@ -597,8 +594,8 @@ def test_pq_gc_prunes_orphans_keeps_live(spark, sf_dir, monkeypatch, tmp_path):
     live_other = {
         "sf_dir": sf_dir,  # exists
         "tag": "otherlake_aaaaaaaaaaaa",
-        "version": s14._PQ_INDEX_VERSION,
-        "code_digest": s14._pq_index_code_digest(),
+        "version": ivf._PQ_INDEX_VERSION,
+        "code_digest": ivf._pq_index_code_digest(),
         "declared": True,
     }
     plant("otherlake_aaaaaaaaaaaa", live_other)
@@ -623,14 +620,14 @@ def test_pq_gc_prunes_orphans_keeps_live(spark, sf_dir, monkeypatch, tmp_path):
     os.makedirs(fresh_staging)
     # a stale same-lake fingerprint (regenerated lake): valid manifest,
     # current code, but its tag prefix matches the lake being built
-    base = s14._pq_lake_base(sf_dir)
+    base = ivf._pq_lake_base(sf_dir)
     stale_same_lake = f"{base}_{'f' * 12}"
     plant(stale_same_lake, {**live_other, "tag": stale_same_lake})
 
-    s14.build_pq_index(spark, sf_dir)
+    ivf.build_pq_index(spark, sf_dir)
 
     kept = set(os.listdir(root))
-    assert s14._pq_index_tag(sf_dir) in kept
+    assert ivf._pq_index_tag(sf_dir) in kept
     assert "otherlake_aaaaaaaaaaaa" in kept
     assert ".build_alive_456" in kept
     for gone in (
@@ -644,13 +641,30 @@ def test_pq_gc_prunes_orphans_keeps_live(spark, sf_dir, monkeypatch, tmp_path):
         assert gone not in kept, f"orphan {gone} survived GC"
 
 
+def test_pq_code_digest_needs_no_tools_package(monkeypatch):
+    """The index's construction-source key is the full same-module
+    closure digest whether or not the repo's tools/ package is
+    importable: a deployment without it must not fall back to a
+    weaker key that misses helper and constant edits."""
+    import sys
+
+    from noaa_data_pipeline_spark.plans import ivf_pq as ivf
+
+    monkeypatch.setattr(ivf, "_PQ_CODE_DIGEST", [])
+    with_tools = ivf._pq_index_code_digest()
+    monkeypatch.setattr(ivf, "_PQ_CODE_DIGEST", [])
+    monkeypatch.setitem(sys.modules, "tools", None)
+    monkeypatch.setitem(sys.modules, "tools.plan_ledger", None)
+    assert ivf._pq_index_code_digest() == with_tools
+
+
 def test_pq_tag_folds_construction_source(monkeypatch, tmp_path):
     """The r14 ADVICE close: the tag must change when the build code
     changes (not only on a manual version bump), so a drifted
     algorithm can never read a stale published index."""
-    s14 = _isolated_root(monkeypatch, tmp_path)
+    ivf = _isolated_root(monkeypatch, tmp_path)
     sf = "/root/testdata/sf0.001"
-    t0 = s14._pq_index_tag(sf)
-    assert s14._pq_index_code_digest() in ("", s14._PQ_CODE_DIGEST[0])
-    monkeypatch.setattr(s14, "_PQ_CODE_DIGEST", ["simulated_code_drift"])
-    assert s14._pq_index_tag(sf) != t0
+    t0 = ivf._pq_index_tag(sf)
+    assert ivf._pq_index_code_digest() in ("", ivf._PQ_CODE_DIGEST[0])
+    monkeypatch.setattr(ivf, "_PQ_CODE_DIGEST", ["simulated_code_drift"])
+    assert ivf._pq_index_tag(sf) != t0

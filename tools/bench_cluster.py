@@ -74,35 +74,12 @@ def run_config(
 
     spark = get_spark(f"bench_cluster_{label}", master=master, shuffle_partitions=shuffle)
     try:
-        from noaa_data_pipeline_spark.plans import load_all
+        from noaa_data_pipeline_spark.plans import resolve
 
-        registry = dict(load_all())
-        try:  # staged (pre-promotion) candidates are measurable too
-            from noaa_data_pipeline_spark.plans.staging_r11 import STAGED
-            from noaa_data_pipeline_spark.plans.staging_r12 import STAGED as _S12
-            from noaa_data_pipeline_spark.plans.staging_r13 import STAGED as _S13
-            from noaa_data_pipeline_spark.plans.staging_r14 import STAGED as _S14
-
-            STAGED = {**STAGED, **_S12, **_S13, **_S14}
-
-            registry = {**STAGED, **registry}
-        except ImportError as exc:
-            print(f"warning: staging registry unavailable ({exc})", file=sys.stderr)
-        try:  # composites: lowest precedence (the bench_scale lookup order)
-            from noaa_data_pipeline_spark.plans.composites import COMPOSITES
-
-            registry = {**COMPOSITES, **registry}
-        except ImportError as exc:
-            print(f"warning: composites unavailable ({exc})", file=sys.stderr)
-        try:  # cap-folded twins (plans/scale.FOLDED): benchable by name
-            from noaa_data_pipeline_spark.plans.scale import FOLDED
-
-            registry = {**FOLDED, **registry}
-        except ImportError as exc:
-            print(f"warning: folded entries unavailable ({exc})", file=sys.stderr)
-        unknown = [n for n in names if n not in registry]
-        if unknown:
-            raise SystemExit(f"unknown queries {unknown}: not in the registry or staged set")
+        try:  # any tier is benchable by name
+            fns = {n: resolve(n).fn for n in names}
+        except KeyError as exc:
+            raise SystemExit(exc.args[0]) from None
         # Prepared-statement protocol by default (construct once, run
         # many — plan assembly is Py4J bookkeeping, not engine work).
         # --fresh-frames inverts this for EAGER entries, whose fn()
@@ -110,10 +87,10 @@ def run_config(
         # checkpointed propagation rounds inside the call): there the
         # prepared frame replays checkpoints, under-measuring the
         # entry and pinning checkpoint blocks across runs.
-        frames = {} if fresh_frames else {n: registry[n].fn(spark, sf_dir) for n in names}
+        frames = {} if fresh_frames else {n: fns[n](spark, sf_dir) for n in names}
 
         def run(n: str) -> None:
-            df = registry[n].fn(spark, sf_dir) if fresh_frames else frames[n]
+            df = fns[n](spark, sf_dir) if fresh_frames else frames[n]
             df.write.format("noop").mode("overwrite").save()
 
         for n in names:  # codegen + JIT warm pass

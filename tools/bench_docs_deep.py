@@ -80,20 +80,12 @@ def build(replicas: int) -> str:
 
 
 def lookup(name: str):
-    from noaa_data_pipeline_spark.plans import load_all
+    from noaa_data_pipeline_spark.plans import resolve
 
-    registry = dict(load_all())
-    for mod in ("staging_r11", "staging_r12", "staging_r13", "staging_r14"):
-        try:
-            staged = __import__(
-                f"noaa_data_pipeline_spark.plans.{mod}", fromlist=["STAGED"]
-            ).STAGED
-            registry = {**staged, **registry}
-        except ImportError:
-            pass
-    if name not in registry:
-        raise SystemExit(f"unknown entry {name!r}")
-    return registry[name]
+    try:
+        return resolve(name)
+    except KeyError as exc:
+        raise SystemExit(exc.args[0]) from None
 
 
 def main() -> None:

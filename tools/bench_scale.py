@@ -68,7 +68,7 @@ DIMS = ["region", "nation", "customer", "supplier", "part"]
 THROUGHPUT_BYTES = {"bpe_encode_docs": ("documents", "octet_length(encode(text))")}
 
 # Entries whose timed (warm) pass runs against a reused in-session
-# index (_reuse_or_swap slots in plans/staging_r11.py — the faiss
+# index (_reuse_or_swap slots in plans/ivf_pq.py — the faiss
 # add-once/search-many contract). For these the repeated-run number
 # alone would hide the index BUILD cost, so each scale point also
 # records spark_cold_sec: one build-inclusive run after dropping the
@@ -211,10 +211,9 @@ def main() -> None:
     # flips to the materialized-index leg explicitly.
     os.environ["SPARK_GRAFT_PQ_INDEX"] = "1" if args.pq_routed else "0"
 
-    from noaa_data_pipeline_spark.plans import load_all
+    from noaa_data_pipeline_spark.plans import resolve
     from noaa_data_pipeline_spark.session import get_spark
 
-    registry = load_all()
     spark = get_spark("bench_scale")
 
     if os.environ.get("SPARK_GRAFT_BUCKETED") == "1":
@@ -239,53 +238,14 @@ def main() -> None:
             f"read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    # staged (pre-promotion) candidates are measurable too — the r8
-    # lesson: scale curves must exist BEFORE a promotion, and the
-    # staging dicts carry the same Query records the registry does.
-    # NOTE: the staging import must NOT fail silently (r10 ADVICE —
-    # a typo'd name then raised a bare KeyError pointing at the
-    # staging dict even for registry-intended names).
-    staged: dict = {}
-    try:
-        from noaa_data_pipeline_spark.plans.staging_r11 import STAGED as _s11
-        from noaa_data_pipeline_spark.plans.staging_r12 import STAGED as _s12
-        from noaa_data_pipeline_spark.plans.staging_r13 import STAGED as _s13
-        from noaa_data_pipeline_spark.plans.staging_r14 import STAGED as _s14
-
-        staged.update(_s11)
-        staged.update(_s12)
-        staged.update(_s13)
-        staged.update(_s14)
-    except ImportError as exc:
-        print(f"warning: staging registry unavailable ({exc})", file=sys.stderr)
-    composites: dict = {}
-    try:
-        from noaa_data_pipeline_spark.plans.composites import COMPOSITES as _comp
-
-        composites.update(_comp)
-    except ImportError as exc:
-        print(f"warning: composites unavailable ({exc})", file=sys.stderr)
-    folded: dict = {}
-    try:
-        from noaa_data_pipeline_spark.plans.scale import FOLDED as _folded
-
-        folded.update(_folded)
-    except ImportError as exc:
-        print(f"warning: folded entries unavailable ({exc})", file=sys.stderr)
-
-    # registry wins a name collision, then staged, then composites,
-    # then the cap-folded twins (still benchable by name)
-    lookup = {**folded, **composites, **staged, **registry}
     results: dict[str, dict] = {}
     for name in args.queries or QUERIES:
-        q = lookup.get(name)
-        if q is None:
-            ap.error(
-                f"unknown query {name!r}: not in the registry "
-                f"({len(registry)} entries), the staged set "
-                f"({sorted(staged) or 'empty'}), or the composites "
-                f"({sorted(composites) or 'empty'})"
-            )
+        # any tier is benchable by name (scale curves exist BEFORE a
+        # promotion)
+        try:
+            q = resolve(name)
+        except KeyError as exc:
+            ap.error(exc.args[0])
 
         def run_spark():
             q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -330,16 +290,13 @@ def main() -> None:
             # "cold" means a fresh session ATTACH (drop the attach
             # cache too): the next run re-reads footers + runs the
             # search, never the build — the r15 routing contract.
-            from noaa_data_pipeline_spark.plans.staging_r11 import (
+            from noaa_data_pipeline_spark.plans.ivf_pq import (
+                _PQ_ATTACH_CACHE,
                 reset_search_index_slots,
             )
 
             reset_search_index_slots()
             if args.pq_routed:
-                from noaa_data_pipeline_spark.plans.staging_r14 import (
-                    _PQ_ATTACH_CACHE,
-                )
-
                 _PQ_ATTACH_CACHE.clear()
             t0 = time.perf_counter()
             run_spark()

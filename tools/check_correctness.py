@@ -92,48 +92,26 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    # Explicitly-named staged candidates (and composites) resolve
-    # through the same gate machinery — the bench tools' lookup
-    # order, lowest precedence, and ONLY when named: the default
-    # full run must stay exactly the driver registry so its PASS
-    # count remains the registry-freshness evidence.
+    # Named queries of any tier resolve through the catalog; the
+    # default full run is exactly the driver surface, so its PASS
+    # count stays the registry evidence.
     if ONLY:
-        extras: dict = {}
-        try:
-            from noaa_data_pipeline_spark.plans.composites import COMPOSITES
+        from noaa_data_pipeline_spark.plans import resolve
 
-            extras.update({n: q for n, q in COMPOSITES.items()})
-        except ImportError as exc:
-            print(f"warning: composites unavailable ({exc})", file=sys.stderr)
-        try:
-            from noaa_data_pipeline_spark.plans.scale import FOLDED
-
-            extras.update(FOLDED)
-        except ImportError as exc:
-            print(f"warning: folded entries unavailable ({exc})", file=sys.stderr)
-        try:
-            from noaa_data_pipeline_spark.plans.staging_r11 import STAGED as _s11
-            from noaa_data_pipeline_spark.plans.staging_r12 import STAGED as _s12
-            from noaa_data_pipeline_spark.plans.staging_r13 import STAGED as _s13
-            from noaa_data_pipeline_spark.plans.staging_r14 import STAGED as _s14
-
-            for d in (_s11, _s12, _s13, _s14):
-                extras.update(d)
-        except ImportError as exc:
-            print(f"warning: staging registry unavailable ({exc})", file=sys.stderr)
-        for name in ONLY - set(qs):
-            if name in extras:
-                qs[name] = extras[name].fn
-                if extras[name].oracle is not None:
-                    oracles[name] = extras[name].oracle
-        # r11 ADVICE: a name that resolves NOWHERE must not read as a
-        # clean run — without this, a typo'd query name prints nothing
-        # and the tool exits 0 with zero failures.
-        unknown = ONLY - set(qs)
+        picked, unknown = [], []
+        for name in sorted(ONLY):
+            try:
+                picked.append(resolve(name))
+            except KeyError:
+                unknown.append(name)
+        # a name that resolves NOWHERE must not read as a clean run
         if unknown:
-            raise SystemExit(f"unknown query name(s): {sorted(unknown)}")
+            raise SystemExit(f"unknown query name(s): {unknown}")
+        qs = {q.name: q.fn for q in picked}
+        oracles = {q.name: q.oracle for q in picked if q.oracle is not None}
+    else:
+        qs = entrymod.queries()
+        oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
