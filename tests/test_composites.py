@@ -5,13 +5,27 @@ from __future__ import annotations
 
 import pytest
 
-from noaa_data_pipeline_spark.plans import CATALOG, load_all, resolve
+from noaa_data_pipeline_spark.plans import CATALOG, load_all, register, resolve
 from tools.check_correctness import frame_digest
 
 
 def _composite_names():
     load_all()
     return sorted(n for n, q in CATALOG.items() if q.tier == "composite")
+
+
+def test_composites_do_not_collide_or_register():
+    """Composites are a measurement surface: never on the driver
+    surface, and never sharing a name with an entry of another tier
+    (a collision would silently bench the wrong plan)."""
+    registered = set(load_all())
+    names = _composite_names()
+    assert names
+    for name in names:
+        assert name not in registered
+        assert resolve(name).tier == "composite"
+    with pytest.raises(ValueError, match="duplicate"):
+        register(names[0], tier="staged")(lambda spark, sf_dir: None)
 
 
 @pytest.mark.parametrize("name", _composite_names())

@@ -38,6 +38,16 @@ def _staged_names():
     return sorted(CANDIDATES)
 
 
+def test_staging_is_not_registered():
+    """All three r11 candidates are promoted (r11: adc_search; r12:
+    the KMV sketch + residual search), so none is left in the staged
+    tier: each is registered and on the driver surface."""
+    registered = set(load_all())
+    for name in CANDIDATES:
+        assert name in registered, f"{name} lost in promotion"
+        assert resolve(name).tier == "registered"
+
+
 def test_ivfpq_search_restricts_to_probed_cells(spark, sf_dir):
     """The combined IVF+PQ search must rank by the SAME ADC distances
     as the full-corpus sim_pq_adc_topk, restricted to each query's

@@ -43,6 +43,17 @@ def _staged_names():
     return sorted(CANDIDATES)
 
 
+def test_staging_is_not_registered():
+    """The staged candidate must not leak into the driver surface;
+    the promoted PCA pair and containment entry must be IN it."""
+    registered = set(load_all())
+    assert resolve("lake_bloom_semijoin_prune").tier == "staged"
+    assert "lake_bloom_semijoin_prune" not in registered
+    for name in CANDIDATES:
+        if name != "lake_bloom_semijoin_prune":
+            assert name in registered, f"{name} lost in promotion"
+
+
 @pytest.mark.parametrize("name", _staged_names())
 def test_staged_matches_oracle(spark, duck, sf_dir, name):
     q = resolve(name)

@@ -26,7 +26,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from noaa_data_pipeline_spark.plans import resolve
+from noaa_data_pipeline_spark.plans import load_all, resolve
 from noaa_data_pipeline_spark.plans.embeddings import JL_DIMS, JL_K, JL_QUERIES, JL_R, _jl_sign
 from noaa_data_pipeline_spark.plans.text import WSAMP_K, WSAMP_SCALE
 from tools.check_correctness import frame_digest
@@ -39,6 +39,22 @@ CANDIDATES = ["emb_dim_reduction_eval", "sample_weighted_priority", "sim_hard_ne
 
 def _staged_names():
     return sorted(CANDIDATES)
+
+
+def test_staging_is_not_registered():
+    """Staged candidates must not leak into the driver surface; the
+    promoted consolidation entry must be IN it, and both retired
+    parents must be OUT (matryoshka folded, the standalone JL
+    candidate deleted)."""
+    registered = set(load_all())
+    for name in ("sample_weighted_priority", "sim_hard_negatives"):
+        assert resolve(name).tier == "staged"
+        assert name not in registered
+    assert "emb_dim_reduction_eval" in registered
+    with pytest.raises(KeyError):
+        resolve("emb_jl_projection_eval")
+    assert resolve("emb_matryoshka_truncate_eval").tier == "folded"
+    assert "emb_matryoshka_truncate_eval" not in registered
 
 
 @pytest.mark.parametrize("name", _staged_names())

@@ -37,6 +37,14 @@ CANDIDATES = [
 ]
 
 
+def test_staging_is_not_registered():
+    """Staged candidates must not leak into the driver surface."""
+    registered = set(load_all())
+    for name in CANDIDATES:
+        assert resolve(name).tier == "staged"
+        assert name not in registered
+
+
 @pytest.mark.parametrize("name", CANDIDATES)
 def test_staged_matches_oracle(spark, duck, sf_dir, name):
     q = resolve(name)
