@@ -150,17 +150,23 @@ def _derived_shuffle_partitions(cpus: int) -> int | None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
     if not sf_dir or not os.path.isdir(sf_dir):
         return None
+    def _raise(err: OSError):
+        raise err
+
     total = 0
     try:
         for name in os.listdir(sf_dir):
             if name.endswith(".parquet"):
                 p = os.path.join(sf_dir, name)
+                # a table directory may be partitioned (part=*/...):
+                # walk every level, not only the top one
                 total += (
                     os.stat(p).st_size
                     if os.path.isfile(p)
                     else sum(
-                        os.stat(os.path.join(p, f)).st_size
-                        for f in os.listdir(p)
+                        os.stat(os.path.join(d, f)).st_size
+                        for d, _, files in os.walk(p, onerror=_raise)
+                        for f in files
                         if f.endswith(".parquet")
                     )
                 )

@@ -10,11 +10,12 @@ Re-expresses the reference's procedural ETL (oracle/src/oracle.rs):
 - winners (:598-617): top-3 by score, reported as 0-based indices
   into the id-sorted canonical entry order.
 
-The reference walks hash maps entry-by-entry; here it's three
-broadcast joins + conditional aggregation — the shape that scales to
-millions of entries. Rounding: Spark's ROUND is HALF_UP (away from
-zero), identical to Rust's f64::round used on observed temps
-(oracle.rs:496-547).
+The reference walks hash maps entry-by-entry, one event at a time;
+here every active event is scored in one plan (a join chain keyed by
+event + conditional aggregation) and ranked in one window pass
+partitioned by event — the shape that scales to millions of entries.
+Rounding: Spark's ROUND is HALF_UP (away from zero), identical to
+Rust's f64::round used on observed temps (oracle.rs:496-547).
 """
 
 from __future__ import annotations
@@ -52,13 +53,10 @@ def choices_long(choices_wide: DataFrame) -> DataFrame:
     )
 
 
-def _metric_values(
-    daily: DataFrame, rounded: bool, keys: tuple[str, ...] = ("station_id",)
-) -> DataFrame:
+def _metric_values(daily: DataFrame, rounded: bool, keys: tuple[str, ...]) -> DataFrame:
     """(*keys, metric, value) from a daily rollup frame; observed
     temps round half-away-from-zero to integers first (F5 — Spark
-    ROUND is HALF_UP, i.e. away from zero, same as Rust f64::round).
-    The batch path passes keys=("event_id", "station_id")."""
+    ROUND is HALF_UP, i.e. away from zero, same as Rust f64::round)."""
     cols = []
     for m in METRICS:
         v = F.col(m)
@@ -70,76 +68,23 @@ def _metric_values(
     ).select(*keys, F.col("mv.metric").alias("metric"), F.col("mv.value").alias("value"))
 
 
-def score_entries(
-    entries: DataFrame,
-    choices: DataFrame,
-    forecast_daily: DataFrame,
-    observation_daily: DataFrame,
-) -> DataFrame:
-    """A6: (entry_id, base_score, score) for every entry.
-
-    entries: (entry_id, event_id); choices: long form from
-    :func:`choices_long`; *_daily: outputs of queries.forecasts_daily /
-    observations_daily restricted to the event window.
-
-    Scale: choices x forecast x observation is a chain of broadcast
-    equi-joins on (station_id, metric) — the per-event dimension side
-    is tiny; the aggregate is one map-side-combined groupBy(entry_id).
-    """
-    fc = _metric_values(
-        forecast_daily.select("station_id", *METRICS), rounded=False
-    ).withColumnRenamed("value", "forecast_v")
-    ob = _metric_values(
-        observation_daily.select("station_id", *METRICS), rounded=True
-    ).withColumnRenamed("value", "observed_v")
-    joined = (
-        choices.join(F.broadcast(fc), ["station_id", "metric"])
-        .join(F.broadcast(ob), ["station_id", "metric"])
-    )
-    pts = (
-        F.when(
-            (F.col("pick") == "par") & (F.col("forecast_v") == F.col("observed_v")),
-            PAR_POINTS,
-        )
-        .when(
-            (F.col("pick") == "over") & (F.col("forecast_v") < F.col("observed_v")),
-            OVER_UNDER_POINTS,
-        )
-        .when(
-            (F.col("pick") == "under") & (F.col("forecast_v") > F.col("observed_v")),
-            OVER_UNDER_POINTS,
-        )
-        .otherwise(0)
-    )
-    per_entry = joined.select("entry_id", pts.alias("pts")).groupBy("entry_id").agg(
-        F.sum("pts").alias("base_score")
-    )
-    # entries with no scorable choices still get the time-part score
-    scored = entries.join(per_entry, "entry_id", "left").na.fill({"base_score": 0})
-    time_part = F.lit(9999) - (uuid7_unix_millis(F.col("entry_id")) % 10000)
-    return scored.select(
-        "entry_id",
-        "event_id",
-        F.col("base_score").cast("long").alias("base_score"),
-        (F.col("base_score") * 10000 + time_part).cast("long").alias("score"),
-    )
-
-
 def score_entries_batch(
     entries: DataFrame,
     choices: DataFrame,
     forecast_daily: DataFrame,
     observation_daily: DataFrame,
 ) -> DataFrame:
-    """Batch twin of :func:`score_entries`: every active event in one
-    plan. The daily frames carry ``event_id`` so the join keys become
-    (event_id, station_id, metric) and a single map-side-combined
-    groupBy(entry_id) scores the whole fleet — no per-event loop, no
-    driver serialization at 10^5 events.
+    """A6: (entry_id, event_id, base_score, score) for every entry,
+    every active event in one plan. The daily frames carry
+    ``event_id`` so the join keys are (event_id, station_id, metric)
+    and a single map-side-combined groupBy(entry_id) scores the whole
+    fleet — no per-event loop, no driver serialization at 10^5
+    events.
 
     entries: (entry_id, event_id) restricted to the events to score;
-    choices: long form (entry_id, station_id, metric, pick);
-    *_daily: per-event rollups with event_id leading.
+    choices: long form from :func:`choices_long`; *_daily:
+    queries.forecasts_daily / observations_daily keyed by event
+    (event_id leading), restricted to each event's window.
     """
     keys = ("event_id", "station_id")
     fc = _metric_values(
@@ -174,6 +119,7 @@ def score_entries_batch(
     per_entry = joined.select("entry_id", pts.alias("pts")).groupBy("entry_id").agg(
         F.sum("pts").alias("base_score")
     )
+    # entries with no scorable choices still get the time-part score
     scored = entries.join(per_entry, "entry_id", "left").na.fill({"base_score": 0})
     time_part = F.lit(9999) - (uuid7_unix_millis(F.col("entry_id")) % 10000)
     return scored.select(
@@ -185,10 +131,18 @@ def score_entries_batch(
 
 
 def winners_batch(scored: DataFrame, k: int = TOP_K) -> DataFrame:
-    """Batch twin of :func:`winners`: one window pass partitioned by
-    event_id ranks every signable event at once. Same contract — must
-    receive ALL entries per event (scored or not) so canonical
-    indices match the reference's full id-sorted list."""
+    """W4: per event, the top-k entries by score with each winner's
+    0-based index in the id-sorted canonical entry list
+    (oracle.rs:598-617). One window pass partitioned by event_id
+    ranks every signable event at once.
+
+    Must receive ALL entries of each event, scored or not: the
+    reference builds ``entry_indices`` from the full id-sorted entry
+    list, so an unscored entry still occupies a canonical slot, and
+    ``sort_by_key(Reverse(score))`` on ``Option<i64>`` ranks
+    ``None`` below every scored entry (``None < Some(_)``) while
+    still letting unscored entries win when fewer than k are scored
+    — hence ``desc_nulls_last`` here, not a NOT NULL prefilter."""
     w_canon = Window.partitionBy("event_id").orderBy("entry_id")
     w_rank = Window.partitionBy("event_id").orderBy(
         F.desc_nulls_last("score"), F.asc("entry_id")
@@ -205,37 +159,8 @@ def winners_batch(scored: DataFrame, k: int = TOP_K) -> DataFrame:
     )
 
 
-def winners(scored: DataFrame, k: int = TOP_K) -> DataFrame:
-    """W4: top-k by score with each winner's 0-based index in the
-    id-sorted canonical entry list (oracle.rs:598-617).
-
-    Must receive ALL entries of the event, scored or not: the
-    reference builds ``entry_indices`` from the full id-sorted entry
-    list, so an unscored entry still occupies a canonical slot, and
-    ``sort_by_key(Reverse(score))`` on ``Option<i64>`` ranks
-    ``None`` below every scored entry (``None < Some(_)``) while
-    still letting unscored entries win when fewer than k are scored
-    — hence ``desc_nulls_last`` here, not a NOT NULL prefilter.
-
-    Scale: runs on the per-event entry frame (<= 25 rows in the
-    reference's cap); the single-partition windows are intentional
-    at that size."""
-    w_canon = Window.orderBy("entry_id")
-    w_rank = Window.orderBy(F.desc_nulls_last("score"), F.asc("entry_id"))
-    return (
-        scored.select(
-            "entry_id",
-            "score",
-            (F.row_number().over(w_canon) - 1).alias("canonical_idx"),
-        )
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
-        .orderBy("rank")
-    )
-
-
 def get_winning_bytes(indices: list[int]) -> bytes:
     """Attestation message bytes: winner indices as big-endian u64s
-    (oracle.rs:693-698). The schnorr signing itself is out of engine
-    scope (SURVEY §2 F13)."""
+    (oracle.rs:693-698); run.schnorr_signer / run.sign_stub sign
+    them."""
     return b"".join(i.to_bytes(8, "big") for i in indices)

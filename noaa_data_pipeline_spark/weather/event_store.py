@@ -19,6 +19,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import shutil
 import uuid as uuidlib
 
 from pyspark.sql import DataFrame, SparkSession
@@ -284,34 +285,28 @@ class EventStore:
             df.write.mode("append").parquet(self._path(table))
 
     def append_frame(self, table: str, df: DataFrame) -> None:
-        """Append a DataFrame directly (the batch-ETL write path — no
+        """Append a DataFrame directly (the ETL write path — no
         driver round-trip). Columns are aligned to the table schema by
         name and cast to its types."""
-        schema = _TABLES[table]
-        aligned = df.select(
-            *[F.col(f.name).cast(f.dataType) for f in schema.fields]
-        )
-        self._append(table, aligned)
+        self._append(table, self._aligned(table, df))
+
+    @staticmethod
+    def _aligned(table: str, df: DataFrame) -> DataFrame:
+        return df.select(*[F.col(f.name).cast(f.dataType) for f in _TABLES[table].fields])
 
     def _rewrite_frame(self, table: str, df: DataFrame) -> None:
         """Replace a table with a derived frame WITHOUT collecting it:
         a parquet path can't be overwritten while a plan still reads
         it, so the update writes to a sibling temp directory and
         swaps it in via two renames. This keeps merge-style rewrites
-        fully distributed (2.5M entry rows at the batch path's
+        fully distributed (2.5M entry rows at the ETL's
         10^5-event scale never touch the driver). NOT crash-atomic: a
         kill between the renames leaves the previous table under
         ``<path>__old_*`` for manual recovery (directory renames
         can't be combined into one atomic op); the Delta backend does
         a transactional overwrite instead and never hits the rename
         path."""
-        import shutil
-        import uuid as uuidlib
-
-        schema = _TABLES[table]
-        aligned = df.select(
-            *[F.col(f.name).cast(f.dataType) for f in schema.fields]
-        )
+        aligned = self._aligned(table, df)
         path = self._path(table)
         if self.backend == "delta":
             # Delta overwrites are transactional and readers see the
@@ -465,12 +460,9 @@ class EventStore:
         )
         self._rewrite_frame("entries", updated)
 
-    def sign_event(self, event_id: str, signature: bytes) -> None:
-        self.sign_events({event_id: signature})
-
     def sign_events(self, signatures: dict[str, bytes]) -> None:
         """Attach attestation signatures to many events in ONE table
-        rewrite (the batch path signs a fleet per pass; per-event
+        rewrite (the ETL signs a fleet per pass; per-event
         rewrites would be N full passes over the control table)."""
         if not signatures:
             return
@@ -530,8 +522,3 @@ class EventStore:
         )
         return entries, choices
 
-    def add_weather_snapshot(self, rows: list[tuple]) -> None:
-        """The ETL's weather attach (J8 output shape with nested
-        observed/forecasted structs — native StructType here vs the
-        reference's hand-rendered ROW(...) SQL, db/mod.rs:1017-1035)."""
-        self.append("weather", rows)

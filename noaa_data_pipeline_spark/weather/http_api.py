@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import logging
 import os
 import re
 import threading
@@ -52,6 +53,8 @@ from . import api, run, ui
 from .event_store import EventStore
 
 MAX_BODY = 30 * 1024 * 1024  # DefaultBodyLimit, startup.rs:132
+
+log = logging.getLogger(__name__)
 
 
 class HTTPError(Exception):
@@ -346,10 +349,25 @@ class _Handler(BaseHTTPRequestHandler):
         self.wfile.write(data)
 
     def _body(self) -> bytes:
-        length = int(self.headers.get("Content-Length") or 0)
-        if length > MAX_BODY:
+        raw = (self.headers.get("Content-Length") or "0").strip()
+        # digits only: a negative length would make rfile.read(-1)
+        # block until the client hangs up
+        if not re.fullmatch(r"[0-9]+", raw):
+            raise HTTPError(400, f"invalid Content-Length: {raw!r}")
+        if int(raw) > MAX_BODY:
             raise HTTPError(413, "body too large")
-        return self.rfile.read(length)
+        return self.rfile.read(int(raw))
+
+    def _json_body(self) -> dict:
+        """The request body as a JSON object (``{}`` when empty); a
+        malformed body is the client's error, so 400."""
+        try:
+            body = json.loads(self._body() or b"{}")
+        except ValueError as exc:  # JSONDecodeError, UnicodeDecodeError
+            raise HTTPError(400, f"invalid JSON body: {exc}") from exc
+        if not isinstance(body, dict):
+            raise HTTPError(400, "invalid JSON body: expected an object")
+        return body
 
     def _dispatch(self, method: str) -> None:
         url = urlparse(self.path)
@@ -361,8 +379,10 @@ class _Handler(BaseHTTPRequestHandler):
             self._route(method, parts, q)
         except HTTPError as exc:
             self._send_json({"error": exc.message}, exc.status)
-        except Exception as exc:  # noqa: BLE001 — 500 like AppError
-            self._send_json({"error": str(exc)}, 500)
+        except Exception:  # noqa: BLE001 — 500 like AppError
+            # the traceback goes to the log, not to the client
+            log.exception("unhandled error on %s %s", method, self.path)
+            self._send_json({"error": "internal server error"}, 500)
 
     def do_GET(self):  # noqa: N802
         self._dispatch("GET")
@@ -429,7 +449,7 @@ class _Handler(BaseHTTPRequestHandler):
         if parts == ["ui"] and method == "GET":
             return self._send_html(ui.INDEX_HTML)
         if parts == ["ui", "bootstrap"] and method == "POST":
-            body = json.loads(self._body() or b"{}")
+            body = self._json_body()
             named_paths = []
             for name in body.get("file_names", []):
                 # same traversal guard as the upload route: a JSON-
@@ -448,7 +468,7 @@ class _Handler(BaseHTTPRequestHandler):
 
             return self._send_json(sql_surface.table_schemas(app.spark, tables))
         if parts == ["ui", "sql"] and method == "POST":
-            body = json.loads(self._body() or b"{}")
+            body = self._json_body()
             from ..sql_surface import SqlGuardError
 
             try:
@@ -502,13 +522,13 @@ class _Handler(BaseHTTPRequestHandler):
                 )
             if rest == ["events"] and method == "POST":
                 auth_pubkey = self._authenticate(method)
-                body = json.loads(self._body() or b"{}")
+                body = self._json_body()
                 return self._send_json(app.create_event(body, auth_pubkey), 201)
             if len(rest) == 2 and rest[0] == "events" and method == "GET":
                 return self._send_json(app.get_event(rest[1]))
             if len(rest) == 3 and rest[0] == "events" and rest[2] == "entry" and method == "POST":
                 auth_pubkey = self._authenticate(method)
-                body = json.loads(self._body() or b"{}")
+                body = self._json_body()
                 return self._send_json(app.add_entry(rest[1], body, auth_pubkey), 201)
             if (
                 len(rest) == 4

@@ -9,9 +9,11 @@ Semantics mirror oracle/src/db/weather_data.rs exactly:
 - ``stations`` — the 4-column GROUP-BY dedup A3 (:224-246).
 
 Scale: each is a partition-pruned scan + hash aggregate; the
-two-level rollup keeps station_id as the leading group key so both
-levels hash-partition the same way and AQE coalesces the second
-shuffle away.
+two-level rollup keeps the same leading group keys at both levels
+(``keys``, then station_id) so both levels hash-partition the same
+way and AQE coalesces the second shuffle away. The batch ETL
+(run.run_etl_batch) reuses both rollups with event-keyed ``keys``,
+so the A1/A2 aggregate lists live only here.
 """
 
 from __future__ import annotations
@@ -27,14 +29,17 @@ def forecasts_daily(
     station_ids: list[str] | None = None,
     start: dt.datetime | None = None,
     end: dt.datetime | None = None,
+    keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Daily forecast rollup, two levels (weather_data.rs:92-146).
 
-    Level 1 groups by (station_id, begin_time) to collapse the many
-    hourly snapshot files that re-report the same forecast interval;
-    level 2 rolls the deduped intervals up to the day. The date is a
-    DATE_TRUNC of begin_time rendered as text, exactly like the
-    reference's ``date`` column.
+    Level 1 groups by (*keys, station_id, begin_time) to collapse the
+    many hourly snapshot files that re-report the same forecast
+    interval; level 2 rolls the deduped intervals up to the day. The
+    date is a DATE_TRUNC of begin_time rendered as text, exactly like
+    the reference's ``date`` column. ``keys`` lead both groupings; the
+    batch ETL passes ("event_id", "observation_date") to roll up every
+    event's window in one plan.
     """
     df = forecasts
     if station_ids:
@@ -47,7 +52,7 @@ def forecasts_daily(
         df = df.filter(
             F.date_trunc("day", F.col("end_time")) <= F.lit(end).cast("timestamp")
         )
-    per_interval = df.groupBy("station_id", "begin_time").agg(
+    per_interval = df.groupBy(*keys, "station_id", "begin_time").agg(
         F.date_format(F.date_trunc("day", F.col("begin_time")), "yyyy-MM-dd").alias("date"),
         F.min("begin_time").alias("start_time"),
         F.max("end_time").alias("end_time"),
@@ -55,7 +60,7 @@ def forecasts_daily(
         F.max("max_temp").alias("temp_high"),
         F.max("wind_speed").alias("wind_speed"),
     )
-    return per_interval.groupBy("station_id", "date").agg(
+    return per_interval.groupBy(*keys, "station_id", "date").agg(
         F.min("start_time").alias("start_time"),
         F.max("end_time").alias("end_time"),
         F.min("temp_low").alias("temp_low"),
@@ -76,9 +81,11 @@ def observations_daily(
     station_ids: list[str] | None = None,
     start: dt.datetime | None = None,
     end: dt.datetime | None = None,
+    keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Per-station observation aggregate over a generated_at range
-    (weather_data.rs:172-211)."""
+    (weather_data.rs:172-211); ``keys`` lead the grouping (the batch
+    ETL passes ("event_id",))."""
     df = observations
     if station_ids:
         df = df.filter(F.col("station_id").isin(station_ids))
@@ -86,7 +93,7 @@ def observations_daily(
         df = df.filter(F.col("generated_at") >= F.lit(start).cast("timestamp"))
     if end is not None:
         df = df.filter(F.col("generated_at") <= F.lit(end).cast("timestamp"))
-    return df.groupBy("station_id").agg(
+    return df.groupBy(*keys, "station_id").agg(
         F.min("generated_at").alias("start_time"),
         F.max("generated_at").alias("end_time"),
         F.min("temperature_value").alias("temp_low"),

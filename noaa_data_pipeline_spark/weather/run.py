@@ -1,5 +1,6 @@
 """ETL orchestration: the reference's POST /oracle/update flow
-(oracle/src/oracle.rs:314-389) as one batch routine.
+(oracle/src/oracle.rs:314-389) as one set-based pass over every
+active event.
 
 Per active (unattested) event: refresh weather from the lake
 (forecast required, observed only once the observation window has
@@ -7,18 +8,15 @@ started — oracle.rs:700-757), score entries, and attest events whose
 signing date has passed. Event status derivation mirrors
 db/mod.rs:447-471 (Live / Running / Completed / Signed).
 
-The schnorr attestation itself is out of engine scope (SURVEY §2
-F13): ``sign_stub`` produces a clearly-marked placeholder over the
-same winning-bytes message the reference signs.
+The attestation is either the real schnorr path
+(:func:`schnorr_signer`) or ``sign_stub``, a clearly-marked
+placeholder over the same winning-bytes message the reference signs.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import decimal
-import uuid as uuidlib
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from . import etl, lake, queries
@@ -27,30 +25,12 @@ from .event_store import EventStore
 EVENT_WINDOW = dt.timedelta(days=1)  # "all events are only a day long"
 
 
-def event_status(ev, now: dt.datetime) -> str:
-    if ev.attestation_signature is not None:
-        return "signed"
-    return _unattested_status(ev.observation_date, now)
-
-
 def _unattested_status(observation_date: dt.datetime, now: dt.datetime) -> str:
     if now < observation_date:
         return "live"
     if now < observation_date + EVENT_WINDOW:
         return "running"
     return "completed"
-
-
-def _round_half_away(x: float) -> int:
-    """Rust ``f64::round`` semantics: halves round away from zero
-    (21.5 -> 22, -21.5 -> -22). Python's builtin ``round`` is
-    banker's rounding and diverges on exact .5 ties, and the
-    floor(x + 0.5) idiom breaks on doubles just below .5 (the
-    addition rounds 0.49999999999999994 + 0.5 up to exactly 1.0).
-    Decimal(x) is the exact binary value, so HALF_UP quantization is
-    exactly f64::round — and matches Spark's F.round used by the
-    batch path."""
-    return int(decimal.Decimal(x).quantize(0, rounding=decimal.ROUND_HALF_UP))
 
 
 def sign_stub(winning_bytes: bytes) -> bytes:
@@ -78,42 +58,26 @@ def schnorr_signer(seckey: bytes):
     return _sign
 
 
-def _event_weather(spark: SparkSession, root: str, ev, now: dt.datetime):
-    start = ev.observation_date
-    end = start + EVENT_WINDOW
-    stations = list(ev.locations)
-    fc_lake = lake.read_lake(
-        spark, root, lake.FORECASTS, start=queries.scan_start_widened(start), end=end
-    )
-    fc_daily = queries.forecasts_daily(fc_lake, stations, start, end).filter(
-        f"date = '{start.date().isoformat()}'"
-    )
-    ob_daily = None
-    if now >= start:  # observation window has started
-        ob_lake = lake.read_lake(spark, root, lake.OBSERVATIONS, start=start, end=end)
-        ob_daily = queries.observations_daily(ob_lake, stations, start, end)
-    return fc_daily, ob_daily
-
-
 def run_etl_batch(
     store: EventStore, lake_root: str, now: dt.datetime, signer=None
 ) -> dict[str, str]:
     """One ETL pass over ALL active events as set-based plans; returns
-    {event_id: resulting status}. Semantics identical to
-    :func:`run_etl` (the per-event parity path), but:
+    {event_id: resulting status}. The reference runs the procedure
+    event by event; here:
 
     - the lake is scanned ONCE over the union of event windows, with
       per-event time predicates applied after a broadcast join with
       the exploded (event_id, station_id) dimension;
-    - daily rollups group by (event_id, station_id) — one shuffle for
-      the fleet instead of one job per event;
+    - the daily rollups are queries.forecasts_daily /
+      observations_daily keyed by event too — one shuffle for the
+      fleet instead of one job per event;
     - scoring is one join chain + groupBy(entry_id)
       (etl.score_entries_batch), winners one window partitioned by
       event_id (etl.winners_batch);
     - signatures land in one control-table rewrite (sign_events).
 
-    At 10^5 active events the per-event loop serializes the cluster
-    on driver round-trips; this path's job count is O(1) in the
+    At 10^5 active events an event-at-a-time loop would serialize
+    the cluster on driver round-trips; this path's job count is O(1) in the
     number of events. Only control-plane-sized frames (event
     metadata, winner triples) are ever collected — snapshots append
     and score/signature merges rewrite distributed
@@ -142,27 +106,9 @@ def run_etl_batch(
         (F.date_trunc("day", F.col("begin_time")) >= F.col("observation_date"))
         & (F.date_trunc("day", F.col("end_time")) <= F.col("observation_date") + day)
     )
-    per_interval = fcj.groupBy(
-        "event_id", "observation_date", "station_id", "begin_time"
-    ).agg(
-        F.date_format(F.date_trunc("day", F.col("begin_time")), "yyyy-MM-dd").alias("date"),
-        F.min("begin_time").alias("start_time"),
-        F.max("end_time").alias("end_time"),
-        F.min("min_temp").alias("temp_low"),
-        F.max("max_temp").alias("temp_high"),
-        F.max("wind_speed").alias("wind_speed"),
-    )
-    fc_daily = (
-        per_interval.groupBy("event_id", "observation_date", "station_id", "date")
-        .agg(
-            F.min("start_time").alias("start_time"),
-            F.max("end_time").alias("end_time"),
-            F.min("temp_low").alias("temp_low"),
-            F.max("temp_high").alias("temp_high"),
-            F.max("wind_speed").alias("wind_speed"),
-        )
-        .filter(F.col("date") == F.date_format("observation_date", "yyyy-MM-dd"))
-    )
+    fc_daily = queries.forecasts_daily(
+        fcj, keys=("event_id", "observation_date")
+    ).filter(F.col("date") == F.date_format("observation_date", "yyyy-MM-dd"))
 
     # -- observations: only events whose window has started (J8)
     ob_loc = ev_loc.filter(F.col("observation_date") <= F.lit(now))
@@ -171,13 +117,7 @@ def run_etl_batch(
         (F.col("generated_at") >= F.col("observation_date"))
         & (F.col("generated_at") <= F.col("observation_date") + day)
     )
-    ob_daily = obj.groupBy("event_id", "station_id").agg(
-        F.min("generated_at").alias("start_time"),
-        F.max("generated_at").alias("end_time"),
-        F.min("temperature_value").alias("temp_low"),
-        F.max("temperature_value").alias("temp_high"),
-        F.max("wind_speed").alias("wind_speed"),
-    )
+    ob_daily = queries.observations_daily(obj, keys=("event_id",))
 
     # -- weather snapshot: forecast required, observed optional (J8);
     #    observed temps round half-away-from-zero (Spark ROUND = HALF_UP)
@@ -233,6 +173,7 @@ def run_etl_batch(
         if results[ev.id] == "completed" and ev.signing_date < now
     ]
     if sign_ids:
+        # ALL entries of each event, scored or not (etl.winners_batch)
         ents = (
             store.read("entries")
             .filter(F.col("event_id").isin(sign_ids))
@@ -254,70 +195,3 @@ def run_etl_batch(
             results[ev_id] = "signed"
     return results
 
-
-def run_etl(
-    store: EventStore, lake_root: str, now: dt.datetime, signer=None
-) -> dict[str, str]:
-    """One ETL pass, event at a time (the parity path — kept for
-    1:1 comparison with the reference's per-event procedure; use
-    :func:`run_etl_batch` for fleets); returns {event_id: status}."""
-    spark = store.spark
-    results: dict[str, str] = {}
-    active = [
-        ev
-        for ev in store.read("events").collect()
-        if ev.attestation_signature is None
-    ]
-    for ev in active:
-        fc_daily, ob_daily = _event_weather(spark, lake_root, ev, now)
-        # weather snapshot rows (J8: forecast required, observed optional)
-        fc_rows = {r.station_id: r for r in fc_daily.collect()}
-        ob_rows = {r.station_id: r for r in ob_daily.collect()} if ob_daily is not None else {}
-        snapshot = []
-        for station in ev.locations:
-            fc = fc_rows.get(station)
-            if fc is None:
-                continue
-            ob = ob_rows.get(station)
-            observed = (
-                None
-                if ob is None
-                else (
-                    ob.start_time,
-                    None if ob.temp_low is None else _round_half_away(ob.temp_low),
-                    None if ob.temp_high is None else _round_half_away(ob.temp_high),
-                    ob.wind_speed,
-                )
-            )
-            forecasted = (fc.start_time, fc.temp_low, fc.temp_high, fc.wind_speed)
-            snapshot.append((str(uuidlib.uuid4()), ev.id, station, observed, forecasted))
-        if snapshot:
-            store.add_weather_snapshot(snapshot)
-
-        if ob_rows:
-            entries, choices_wide = store.event_entries(ev.id)
-            scored = etl.score_entries(
-                entries.select(entries.id.alias("entry_id"), "event_id"),
-                etl.choices_long(choices_wide),
-                fc_daily,
-                ob_daily,
-            )
-            store.update_scores(scored)
-
-        status = event_status(ev, now)
-        if status == "completed" and ev.signing_date < now:
-            # ALL entries, scored or not: the canonical index list is
-            # built from the full id-sorted entry set
-            # (oracle.rs:598-607); filtering unscored entries here
-            # would shift the 0-based indices and corrupt the
-            # attestation bytes.
-            entries, _ = store.event_entries(ev.id)
-            scored = entries.select(entries.id.alias("entry_id"), "event_id", "score")
-            win = etl.winners(scored).collect()
-            if win:
-                wb = etl.get_winning_bytes([w.canonical_idx for w in win])
-                sig = signer(ev.nonce, wb) if signer is not None else sign_stub(wb)
-                store.sign_event(ev.id, sig)
-                status = "signed"
-        results[ev.id] = status
-    return results

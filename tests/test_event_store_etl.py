@@ -6,6 +6,7 @@ store instead of mocks)."""
 from __future__ import annotations
 
 import datetime as dt
+import decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,38 +30,43 @@ SIGN_DATE = dt.datetime(2024, 8, 13)
 NOW = dt.datetime(2024, 8, 13, 0, 5)
 
 
-def _unit_tail():
-    return (
-        "fahrenheit", None, "knots", None, "degrees true",
-        None, None, "percent", None, "inches", None, "percent",
+def _write_lake(spark, lake_root, forecasts, observations):
+    """One forecast snapshot, ingested the day before OBS_DATE, and one
+    observation snapshot. forecasts: (station, begin_time, end_time,
+    min_temp, max_temp, wind_speed); observations: (station,
+    generated_at, temperature, wind_speed)."""
+    units = ("knots", None, "degrees true", None, None, "percent", None, "inches",
+             None, "percent")
+    fc = [
+        (st, f"{st} name", 40.0, -90.0, OBS_DATE - dt.timedelta(days=1), begin, end, hi, lo,
+         "fahrenheit", wind) + units
+        for st, begin, end, lo, hi, wind in forecasts
+    ]
+    ob = [
+        (st, f"{st} name", 40.0, -90.0, gen, temp, "celcius", 180, "degrees true", w, "knots",
+         5.0, "celcius")
+        for st, gen, temp, w in observations
+    ]
+    lake.write_snapshot(
+        spark.createDataFrame(fc, FORECAST_SCHEMA), lake_root, lake.FORECASTS,
+        OBS_DATE - dt.timedelta(days=1),
+    )
+    lake.write_snapshot(
+        spark.createDataFrame(ob, OBSERVATION_SCHEMA), lake_root, lake.OBSERVATIONS, OBS_DATE
     )
 
 
 def _build_fixture(spark, tmp_path_factory, nonce=None):
     lake_root = str(tmp_path_factory.mktemp("lake"))
     store_root = str(tmp_path_factory.mktemp("store"))
-
-    fc_rows = []
-    for station, lo, hi, wind in FORECASTS:
-        base = (station, f"{station} name", 40.0, -90.0, OBS_DATE - dt.timedelta(days=1),
-                OBS_DATE, OBS_DATE + dt.timedelta(hours=3), hi, lo)
-        u = _unit_tail()
-        fc_rows.append(base + (u[0], wind) + u[2:])
-    fc = spark.createDataFrame(fc_rows, FORECAST_SCHEMA)
-    lake.write_snapshot(fc, lake_root, lake.FORECASTS, OBS_DATE - dt.timedelta(days=1))
-
-    ob_rows = []
-    for station, lo, hi, wind in OBSERVATIONS:
-        for temp, w in [(lo, wind), (hi, max(wind - 2, 0))]:
-            ob_rows.append(
-                (
-                    station, f"{station} name", 40.0, -90.0,
-                    OBS_DATE + dt.timedelta(hours=6), temp, "celcius",
-                    180, "degrees true", w, "knots", 5.0, "celcius",
-                )
-            )
-    ob = spark.createDataFrame(ob_rows, OBSERVATION_SCHEMA)
-    lake.write_snapshot(ob, lake_root, lake.OBSERVATIONS, OBS_DATE)
+    _write_lake(
+        spark, lake_root,
+        [(st, OBS_DATE, OBS_DATE + dt.timedelta(hours=3), lo, hi, wind)
+         for st, lo, hi, wind in FORECASTS],
+        [(st, OBS_DATE + dt.timedelta(hours=6), temp, w)
+         for st, lo, hi, wind in OBSERVATIONS
+         for temp, w in [(lo, wind), (hi, max(wind - 2, 0))]],
+    )
 
     store = EventStore(spark, store_root)
     event_id = store.add_event(
@@ -121,12 +127,13 @@ def _assert_golden_etl(store, lake_root, event_id, etl_fn):
 
 def test_etl_produces_golden_scores_and_signs(setup):
     store, lake_root, event_id = setup
-    _assert_golden_etl(store, lake_root, event_id, run.run_etl)
+    _assert_golden_etl(store, lake_root, event_id, run.run_etl_batch)
 
 
 def test_etl_batch_path_produces_same_goldens(spark, tmp_path_factory):
-    """The set-based all-events plan (run_etl_batch) must reproduce
-    the per-event parity path bit-for-bit on the golden fixtures."""
+    """On a fresh store the set-based all-events plan (run_etl_batch)
+    reproduces the reference goldens, and a second pass finds nothing
+    active."""
     store, lake_root, event_id = _build_fixture(spark, tmp_path_factory)
     _assert_golden_etl(store, lake_root, event_id, run.run_etl_batch)
     # second pass: nothing active anymore
@@ -135,7 +142,7 @@ def test_etl_batch_path_produces_same_goldens(spark, tmp_path_factory):
 
 def test_etl_idempotent_second_pass(setup):
     store, lake_root, event_id = setup
-    assert run.run_etl(store, lake_root, NOW + dt.timedelta(hours=1)) == {}
+    assert run.run_etl_batch(store, lake_root, NOW + dt.timedelta(hours=1)) == {}
 
 
 def test_etl_real_schnorr_attestation(spark, tmp_path_factory):
@@ -237,86 +244,128 @@ def test_permutations_distributed_general_k(spark):
         outcomes.outcome_permutations_df(spark, 3, 4)
 
 
+def _reference_pass(events, entries, choices, forecasts, observations, now):
+    """Plain-Python model of one POST /oracle/update pass of the
+    reference (oracle.rs:314-389), event by event. events: (id,
+    observation_date, signing_date, locations); entries: (entry_id,
+    event_id); choices: (entry_id, station, *picks); forecasts:
+    (station, begin, end, min_temp, max_temp, wind); observations:
+    (station, generated_at, temperature, wind). Returns what the store
+    should hold afterwards: (statuses, entries, signatures, weather)."""
+    day = dt.timedelta(days=1)
+
+    def midnight(t):
+        return dt.datetime.combine(t.date(), dt.time())
+
+    def rnd(x):  # Rust f64::round: Decimal(x) is exact, HALF_UP is away from zero
+        return int(decimal.Decimal(x).quantize(0, decimal.ROUND_HALF_UP))
+
+    statuses, scored, weather, signatures = {}, {}, [], {}
+    for ev_id, obs, sign, locations in events:
+        # J8 + A1/A2: forecasts of the event day; observations only
+        # once the window has started
+        fc, ob = {}, {}
+        for st, begin, end, lo, hi, wind in forecasts:
+            if st in locations and midnight(begin) >= obs and midnight(end) <= obs + day \
+                    and begin.date() == obs.date():
+                p = fc.get(st, (begin, lo, hi, wind))
+                fc[st] = (min(p[0], begin), min(p[1], lo), max(p[2], hi), max(p[3], wind))
+        for st, gen, temp, wind in observations:
+            if now >= obs and st in locations and obs <= gen <= obs + day:
+                p = ob.get(st, (gen, temp, temp, wind))
+                ob[st] = (min(p[0], gen), min(p[1], temp), max(p[2], temp), max(p[3], wind))
+        ob = {st: (t, rnd(lo), rnd(hi), w) for st, (t, lo, hi, w) in ob.items()}
+        weather += [(ev_id, st, ob.get(st), fc[st]) for st in locations if st in fc]
+
+        # scoring (oracle.rs:445-588), once observations exist
+        ev_entries = sorted(e for e, owner in entries if owner == ev_id)
+        for e in ev_entries if ob else []:
+            base = 0
+            for entry, st, *picks in choices:
+                if entry != e or st not in fc or st not in ob:
+                    continue
+                for m, pick in enumerate(picks, start=1):
+                    f, o = fc[st][m], ob[st][m]
+                    if pick == "par" and f == o:
+                        base += 20
+                    elif (pick == "over" and f < o) or (pick == "under" and f > o):
+                        base += 10
+            millis = int(e.replace("-", "")[:12], 16)
+            scored[e] = (base * 10000 + 9999 - millis % 10000, base)
+
+        # status (db/mod.rs:447-471) and winners (oracle.rs:598-617)
+        status = "live" if now < obs else "running" if now < obs + day else "completed"
+        signatures[ev_id] = None
+        if status == "completed" and sign < now and ev_entries:
+            score = {e: scored.get(e, (None,))[0] for e in ev_entries}
+            top = sorted(ev_entries, key=lambda e: (score[e] is None, -(score[e] or 0), e))[:3]
+            wb = run.etl.get_winning_bytes([ev_entries.index(e) for e in top])
+            signatures[ev_id], status = run.sign_stub(wb), "signed"
+        statuses[ev_id] = status
+    entry_rows = sorted((e, ev, *scored.get(e, (None, None))) for e, ev in entries)
+    return statuses, entry_rows, sorted(signatures.items()), sorted(weather)
+
+
 def test_batch_etl_equals_per_event_on_event_fleet(spark, tmp_path_factory):
-    """Equivalence on a FLEET: many events at different lifecycle
-    stages (live / running / completed+signable, disjoint and
-    overlapping station sets) must produce identical statuses,
-    scores, and attestations through the per-event loop and the
-    set-based batch plan."""
-    import uuid as uuidlib
+    """A FLEET of events at different lifecycle stages (live / running
+    / completed+signable / completed without entries; disjoint and
+    overlapping station sets) goes through run_etl_batch; statuses,
+    scores, weather rows and attestations must equal the plain-Python
+    model of the reference (:func:`_reference_pass`)."""
+    stations = [f"ST{i:02d}" for i in range(8)]
+    forecasts = [
+        (st, OBS_DATE, OBS_DATE + dt.timedelta(hours=3), 5 + i, 20 + i, 3 + i)
+        for i, st in enumerate(stations)
+    ]
+    observations = [
+        (st, OBS_DATE + dt.timedelta(hours=6), temp, w)
+        for i, st in enumerate(stations)
+        for temp, w in [(4.0 + i, 3 + i), (22.0 + i, 2 + i)]
+    ]
+    # five events in different stages; deterministic ids
+    specs = [
+        ("completed-a", OBS_DATE, SIGN_DATE, stations[:3]),
+        ("completed-b", OBS_DATE, SIGN_DATE, stations[2:6]),  # overlaps a
+        ("running", NOW - dt.timedelta(hours=3), NOW + dt.timedelta(days=2), stations[4:7]),
+        ("live", NOW + dt.timedelta(days=1), NOW + dt.timedelta(days=3), stations[:2]),
+        ("empty-completed", OBS_DATE, SIGN_DATE, [stations[7]]),
+    ]
 
-    from noaa_data_pipeline_spark.weather.schemas import (
-        FORECAST_SCHEMA,
-        OBSERVATION_SCHEMA,
+    lake_root = str(tmp_path_factory.mktemp("lake_fleet"))
+    store = EventStore(spark, str(tmp_path_factory.mktemp("store_fleet")))
+    _write_lake(spark, lake_root, forecasts, observations)
+    events, entries, choices = [], [], []
+    for n, (name, obs, sign, locs) in enumerate(specs):
+        ev_id = f"{n:08d}-0000-7000-8000-00000000000{n}"
+        store.add_event(ev_id, obs, sign, locs, 6, 6, 1)
+        events.append((ev_id, obs, sign, locs))
+        if name != "empty-completed":
+            for k in range(3):
+                entry = f"{n:08d}-{k:04d}-7000-8000-0000000000ff"
+                picks = [(locs[0], ["over", "par", "under"][k], None, "par")]
+                store.add_entry(entry, ev_id, picks)
+                entries.append((entry, ev_id))
+                choices += [(entry, *p) for p in picks]
+
+    statuses, entry_rows, signatures, weather = _reference_pass(
+        events, entries, choices, forecasts, observations, NOW
     )
-
-    def build(tag):
-        lake_root = str(tmp_path_factory.mktemp(f"lake_{tag}"))
-        store = EventStore(spark, str(tmp_path_factory.mktemp(f"store_{tag}")))
-        stations = [f"ST{i:02d}" for i in range(8)]
-        fc_rows, ob_rows = [], []
-        for i, st in enumerate(stations):
-            base = (st, f"{st} name", 40.0 + i, -90.0, OBS_DATE - dt.timedelta(days=1),
-                    OBS_DATE, OBS_DATE + dt.timedelta(hours=3), 20 + i, 5 + i)
-            u = _unit_tail()
-            fc_rows.append(base + (u[0], 3 + i) + u[2:])
-            for temp, w in [(4.0 + i, 3 + i), (22.0 + i, 2 + i)]:
-                ob_rows.append(
-                    (st, f"{st} name", 40.0 + i, -90.0, OBS_DATE + dt.timedelta(hours=6),
-                     temp, "celcius", 180, "degrees true", w, "knots", 5.0, "celcius")
-                )
-        lake.write_snapshot(
-            spark.createDataFrame(fc_rows, FORECAST_SCHEMA), lake_root,
-            lake.FORECASTS, OBS_DATE - dt.timedelta(days=1),
-        )
-        lake.write_snapshot(
-            spark.createDataFrame(ob_rows, OBSERVATION_SCHEMA), lake_root,
-            lake.OBSERVATIONS, OBS_DATE,
-        )
-        # five events in different stages; deterministic ids
-        specs = [
-            ("completed-a", OBS_DATE, SIGN_DATE, stations[:3]),
-            ("completed-b", OBS_DATE, SIGN_DATE, stations[2:6]),  # overlaps a
-            ("running", NOW - dt.timedelta(hours=3), NOW + dt.timedelta(days=2), stations[4:7]),
-            ("live", NOW + dt.timedelta(days=1), NOW + dt.timedelta(days=3), stations[:2]),
-            ("empty-completed", OBS_DATE, SIGN_DATE, [stations[7]]),
-        ]
-        for n, (name, obs, sign, locs) in enumerate(specs):
-            ev_id = f"{n:08d}-0000-7000-8000-00000000000{n}"
-            store.add_event(ev_id, obs, sign, locs, 6, 6, 1)
-            if name != "empty-completed":
-                for k in range(3):
-                    entry = f"{n:08d}-{k:04d}-7000-8000-0000000000ff"
-                    picks = [(locs[0], ["over", "par", "under"][k], None, "par")]
-                    store.add_entry(entry, ev_id, picks)
-        return store, lake_root
-
-    def snapshot(store):
-        entries = sorted(
-            (r.id, r.event_id, r.score, r.base_score)
-            for r in store.read("entries").collect()
-        )
-        events = sorted(
-            (r.id, None if r.attestation_signature is None
-             else bytes(r.attestation_signature))
-            for r in store.read("events").collect()
-        )
-        weather = sorted(
-            (w.event_id, w.station_id, tuple(w.observed) if w.observed else None,
-             tuple(w.forecasted))
-            for w in store.read("weather").collect()
-        )
-        return entries, events, weather
-
-    s1, lake1 = build("loop")
-    r1 = run.run_etl(s1, lake1, NOW)
-    s2, lake2 = build("batch")
-    r2 = run.run_etl_batch(s2, lake2, NOW)
-    assert r1 == r2
+    got = run.run_etl_batch(store, lake_root, NOW)
+    assert got == statuses
     # the entry-less completed event has no winners -> stays unsigned
-    assert set(r1.values()) == {"signed", "running", "live", "completed"}
-    assert sorted(r1.values()).count("signed") == 2
-    assert snapshot(s1) == snapshot(s2)
+    assert set(got.values()) == {"signed", "running", "live", "completed"}
+    assert sorted(got.values()).count("signed") == 2
+    assert sorted(
+        (r.id, r.event_id, r.score, r.base_score) for r in store.read("entries").collect()
+    ) == entry_rows
+    assert sorted(
+        (r.id, r.attestation_signature and bytes(r.attestation_signature))
+        for r in store.read("events").collect()
+    ) == signatures
+    assert sorted(
+        (w.event_id, w.station_id, w.observed and tuple(w.observed), tuple(w.forecasted))
+        for w in store.read("weather").collect()
+    ) == weather
 
 
 def test_backend_selection_and_explicit_parquet(spark, tmp_path_factory):
@@ -360,7 +409,7 @@ def test_etl_golden_under_delta_backend(tmp_path_factory):
     try:
         store, lake_root, event_id = _build_fixture(dspark, tmp_path_factory)
         assert store.backend == "delta"
-        _assert_golden_etl(store, lake_root, event_id, run.run_etl)
+        _assert_golden_etl(store, lake_root, event_id, run.run_etl_batch)
     finally:
         dspark.stop()
 

@@ -7,8 +7,11 @@ over real sockets with urllib."""
 from __future__ import annotations
 
 import datetime as dt
+import http.client
 import json
+import logging
 import urllib.error
+import urllib.parse
 import urllib.request
 import uuid
 
@@ -108,6 +111,57 @@ def test_bad_rfc3339_is_400(served):
     with pytest.raises(urllib.error.HTTPError) as exc:
         _get(base, "/stations/forecasts?start=notadate&station_ids=PFNO")
     assert exc.value.code == 400
+
+
+def _post_raw(base, path, body: bytes, content_length: str):
+    """POST with a hand-set Content-Length header; a 5 s timeout turns
+    a handler that blocks on the body into a test failure."""
+    host, port = urllib.parse.urlsplit(base).netloc.split(":")
+    conn = http.client.HTTPConnection(host, int(port), timeout=5)
+    try:
+        conn.putrequest("POST", path)
+        conn.putheader("Content-Type", "application/json")
+        conn.putheader("Content-Length", content_length)
+        conn.endheaders(body)
+        resp = conn.getresponse()
+        return resp.status, json.loads(resp.read())
+    finally:
+        conn.close()
+
+
+@pytest.mark.parametrize(
+    "path", ["/ui/bootstrap", "/ui/sql", "/oracle/events", "/oracle/events/x/entry"]
+)
+@pytest.mark.parametrize("body", [b"{not json", b"\x80\x81", b"[1, 2]"])
+def test_malformed_json_body_is_400(served, path, body):
+    status, got = _post_raw(served[0], path, body, str(len(body)))
+    assert status == 400
+    assert got["error"].startswith("invalid JSON body")
+
+
+@pytest.mark.parametrize("length", ["abc", "-1"])
+def test_bad_content_length_is_400(served, length):
+    status, got = _post_raw(served[0], "/oracle/events", b"{}", length)
+    assert status == 400
+    assert got["error"] == f"invalid Content-Length: {length!r}"
+
+
+def test_unhandled_error_is_generic_500_and_logged(served, monkeypatch, caplog):
+    """An exception the routes do not map to a status becomes a 500
+    whose body hides the detail; the traceback goes to the log."""
+    def boom(*args, **kwargs):
+        raise RuntimeError("secret detail")
+
+    monkeypatch.setattr(http_api.api, "stations", boom)
+    with caplog.at_level(logging.ERROR, logger=http_api.__name__):
+        with pytest.raises(urllib.error.HTTPError) as exc:
+            _get(served[0], "/stations")
+    assert exc.value.code == 500
+    assert json.loads(exc.value.read()) == {"error": "internal server error"}
+    [record] = [r for r in caplog.records if r.name == http_api.__name__]
+    assert "GET /stations" in record.getMessage()
+    assert "RuntimeError: secret detail" in caplog.text
+    assert "Traceback" in caplog.text
 
 
 def test_upload_download_roundtrip_and_listing(served):

@@ -1,7 +1,7 @@
-"""Property-based checks (hypothesis) for the pure scalar/ranking
-logic whose edge cases example tests can miss: half-away rounding,
-winner selection with NULL scores, token-bucket invariants, and the
-BIP-340 roundtrip."""
+"""Property-based checks (hypothesis) for the scalar/ranking logic
+whose edge cases example tests can miss: the ETL's half-away
+rounding in Spark, per-event winner selection with NULL scores,
+token-bucket invariants, and the BIP-340 roundtrip."""
 
 from __future__ import annotations
 
@@ -11,32 +11,46 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from noaa_data_pipeline_spark.weather.fetcher import RateLimiter
-from noaa_data_pipeline_spark.weather.run import _round_half_away
 
 
-@given(st.floats(min_value=-1e9, max_value=1e9, allow_nan=False))
-def test_round_half_away_matches_decimal_half_up(x):
-    expected = int(
-        decimal.Decimal(x).quantize(0, rounding=decimal.ROUND_HALF_UP)
-    )
-    assert _round_half_away(x) == expected
+def _spark_round_half_away(spark, xs: list[float]) -> list[int]:
+    """The ETL's observed-temperature rounding,
+    ``F.round(x, 0).cast("long")`` (run.run_etl_batch and
+    etl._metric_values), over a list of doubles in one Spark job."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x double")
+    rows = df.select("i", F.round("x", 0).cast("long").alias("r")).collect()
+    return [r.r for r in sorted(rows, key=lambda r: r.i)]
 
 
-def test_round_half_away_known_edges():
+def _half_up(x: float) -> int:
+    """Rust f64::round: Decimal(x) is the exact binary value, so
+    HALF_UP quantization rounds halves away from zero exactly."""
+    return int(decimal.Decimal(x).quantize(0, rounding=decimal.ROUND_HALF_UP))
+
+
+@given(st.lists(st.floats(min_value=-1e9, max_value=1e9, allow_nan=False), min_size=1, max_size=40))
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+def test_round_half_away_matches_decimal_half_up(spark, xs):
+    assert _spark_round_half_away(spark, xs) == [_half_up(x) for x in xs]
+
+
+def test_round_half_away_known_edges(spark):
     # the floor(x + 0.5) idiom fails on the largest double below 0.5
-    # (the addition rounds up to exactly 1.0); f64::round gives 0
-    assert _round_half_away(0.49999999999999994) == 0
-    assert _round_half_away(-0.49999999999999994) == 0
-    assert _round_half_away(0.5) == 1
-    assert _round_half_away(-0.5) == -1
-    assert _round_half_away(21.5) == 22
-    assert _round_half_away(-21.5) == -22
-    assert _round_half_away(22.5) == 23  # banker's would give 22
+    # (the addition rounds up to exactly 1.0); f64::round gives 0;
+    # banker's rounding would give 22 for 22.5
+    edges = [0.49999999999999994, -0.49999999999999994, 0.5, -0.5, 21.5, -21.5, 22.5]
+    assert _spark_round_half_away(spark, edges) == [0, 0, 1, -1, 22, -22, 23]
 
 
 @given(
     st.lists(
-        st.tuples(st.integers(0, 40), st.one_of(st.none(), st.integers(0, 10**6))),
+        st.tuples(
+            st.integers(0, 40),
+            st.integers(0, 2),
+            st.one_of(st.none(), st.integers(0, 10**6)),
+        ),
         min_size=1,
         max_size=12,
         unique_by=lambda t: t[0],
@@ -45,23 +59,27 @@ def test_round_half_away_known_edges():
 )
 @settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 def test_winners_matches_reference_model(spark, entries, k):
-    """etl.winners == the reference's procedure (oracle.rs:598-617):
-    stable sort by Reverse(Option<score>) (None last), truncate k,
-    indices into the full id-sorted list."""
+    """etl.winners_batch == the reference's procedure
+    (oracle.rs:598-617) for each of 1-3 events at once: stable sort
+    by Reverse(Option<score>) (None last), truncate k, indices into
+    the event's full id-sorted list."""
     from noaa_data_pipeline_spark.weather import etl
 
-    rows = [(f"{eid:032x}", "ev", score) for eid, score in entries]
+    rows = [(f"{eid:032x}", f"ev{ev}", score) for eid, ev, score in entries]
     df = spark.createDataFrame(rows, "entry_id string, event_id string, score long")
     got = [
-        (r.entry_id, r.canonical_idx)
-        for r in etl.winners(df, k=k).orderBy("rank").collect()
+        (r.event_id, r.entry_id, r.canonical_idx)
+        for r in etl.winners_batch(df, k=k).orderBy("event_id", "rank").collect()
     ]
-    # reference model
-    id_sorted = sorted(r[0] for r in rows)
-    ranked = sorted(
-        rows, key=lambda r: (r[2] is None, -(r[2] or 0), r[0])
-    )[:k]
-    expected = [(r[0], id_sorted.index(r[0])) for r in ranked]
+    # reference model, one event at a time
+    expected = []
+    for ev in sorted({r[1] for r in rows}):
+        ev_rows = [r for r in rows if r[1] == ev]
+        id_sorted = sorted(r[0] for r in ev_rows)
+        ranked = sorted(
+            ev_rows, key=lambda r: (r[2] is None, -(r[2] or 0), r[0])
+        )[:k]
+        expected += [(ev, r[0], id_sorted.index(r[0])) for r in ranked]
     assert got == expected
 
 

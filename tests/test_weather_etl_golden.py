@@ -75,13 +75,15 @@ def scored(spark):
         )
     )
     fc = spark.createDataFrame(
-        FORECASTS, "station_id string, temp_low long, temp_high long, wind_speed long"
+        [(EVENT, *r) for r in FORECASTS],
+        "event_id string, station_id string, temp_low long, temp_high long, wind_speed long",
     )
     ob = spark.createDataFrame(
-        OBSERVATIONS,
-        "station_id string, temp_low double, temp_high double, wind_speed long",
+        [(EVENT, *r) for r in OBSERVATIONS],
+        "event_id string, station_id string, temp_low double, temp_high double,"
+        " wind_speed long",
     )
-    return etl.score_entries(entries, choices, fc, ob)
+    return etl.score_entries_batch(entries, choices, fc, ob)
 
 
 def test_golden_scores(scored):
@@ -90,7 +92,7 @@ def test_golden_scores(scored):
 
 
 def test_golden_winners_and_attestation_bytes(scored):
-    win = etl.winners(scored).collect()
+    win = etl.winners_batch(scored).orderBy("rank").collect()
     # score order: E1 (409899) > E3 (409699) > E2 (309799) — :283-334
     assert [w.entry_id for w in win] == [E1, E3, E2]
     # canonical (id-sorted = creation) order is E1,E2,E3,E4
@@ -111,12 +113,12 @@ def test_winners_include_unscored_in_canonical_order(spark, scored):
         [(e0, EVENT, None)], "entry_id string, event_id string, score long"
     )
     full = scored.select("entry_id", "event_id", "score").unionByName(unscored)
-    win = etl.winners(full).collect()
+    win = etl.winners_batch(full).orderBy("rank").collect()
     # winners unchanged, but indices shift by 1 because e0 occupies slot 0
     assert [w.entry_id for w in win] == [E1, E3, E2]
     assert [w.canonical_idx for w in win] == [1, 3, 2]
     # with k larger than the scored count, the unscored entry ranks last
-    win5 = etl.winners(full, k=5).collect()
+    win5 = etl.winners_batch(full, k=5).orderBy("rank").collect()
     assert win5[-1].entry_id == e0 and win5[-1].canonical_idx == 0
 
 
