@@ -42,24 +42,22 @@ from .schemas import (
     UNIT_INCHES,
     UNIT_KNOTS,
     UNIT_PERCENT,
+    utc_lit,
 )
 
 GRID_STEP_HOURS = 3
 HORIZON_DAYS = 7
 
-# field name -> (output column, Spark cast type)
-FIELDS: dict[str, tuple[str, str]] = {
-    "max_temp": ("max_temp", "long"),
-    "min_temp": ("min_temp", "long"),
-    "wind_speed": ("wind_speed", "long"),
-    "wind_direction": ("wind_direction", "long"),
-    "relative_humidity_max": ("relative_humidity_max", "long"),
-    "relative_humidity_min": ("relative_humidity_min", "long"),
-    "liquid_precipitation_amt": ("liquid_precipitation_amt", "double"),
-    "twelve_hour_probability_of_precipitation": (
-        "twelve_hour_probability_of_precipitation",
-        "long",
-    ),
+# field name (= output column) -> Spark cast type
+FIELDS: dict[str, str] = {
+    "max_temp": "long",
+    "min_temp": "long",
+    "wind_speed": "long",
+    "wind_direction": "long",
+    "relative_humidity_max": "long",
+    "relative_humidity_min": "long",
+    "liquid_precipitation_amt": "double",
+    "twelve_hour_probability_of_precipitation": "long",
 }
 
 UNIT_COLS = {
@@ -77,8 +75,8 @@ def three_hour_grid(locations: DataFrame, now: dt.datetime) -> DataFrame:
     ``now`` through one week out, inclusive (download_forecast.rs:792-829).
     Scale: sequence+explode over the (small) location dimension; the
     57-slot fan-out happens after any location-level pruning."""
-    start = F.lit(now).cast("timestamp")
-    end = F.lit(now + dt.timedelta(days=HORIZON_DAYS)).cast("timestamp")
+    start = utc_lit(now)
+    end = utc_lit(now + dt.timedelta(days=HORIZON_DAYS))
     return locations.select(
         "location_key",
         F.explode(
@@ -200,27 +198,20 @@ def flatten_forecasts(
     join, producing rows in the FORECAST_SCHEMA shape."""
     grid = three_hour_grid(locations, now)
     long_vals = align_and_fill(grid, layouts, readings)
+    # an explicit pivot value list yields every field column, parsed
+    # or not
     pivoted = long_vals.groupBy("location_key", "begin_time", "end_time").pivot(
-        "field", list(FIELDS.keys())
+        "field", list(FIELDS)
     ).agg(F.first("value"))
-    for field, (col, typ) in FIELDS.items():
-        if field in pivoted.columns:
-            pivoted = pivoted.withColumn(col, F.col(field).cast(typ))
-        else:
-            pivoted = pivoted.withColumn(col, F.lit(None).cast(typ))
-    keyed = attach_station_ids(locations, stations)
-    out = pivoted.join(keyed, "location_key")
-    out = out.withColumn("generated_at", F.lit(generated_at).cast("timestamp"))
-    for unit_col, unit in UNIT_COLS.items():
-        out = out.withColumn(unit_col, F.lit(unit))
+    out = pivoted.join(attach_station_ids(locations, stations), "location_key")
     return out.select(
         "station_id",
         "station_name",
         "latitude",
         "longitude",
-        "generated_at",
+        utc_lit(generated_at).alias("generated_at"),
         "begin_time",
         "end_time",
-        *[c for c, _ in FIELDS.values()],
-        *UNIT_COLS.keys(),
+        *[F.col(field).cast(typ).alias(field) for field, typ in FIELDS.items()],
+        *[F.lit(unit).alias(col) for col, unit in UNIT_COLS.items()],
     )

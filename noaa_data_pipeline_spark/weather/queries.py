@@ -23,6 +23,8 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .schemas import utc_lit
+
 
 def forecasts_daily(
     forecasts: DataFrame,
@@ -46,11 +48,11 @@ def forecasts_daily(
         df = df.filter(F.col("station_id").isin(station_ids))
     if start is not None:
         df = df.filter(
-            F.date_trunc("day", F.col("begin_time")) >= F.lit(start).cast("timestamp")
+            F.date_trunc("day", F.col("begin_time")) >= utc_lit(start)
         )
     if end is not None:
         df = df.filter(
-            F.date_trunc("day", F.col("end_time")) <= F.lit(end).cast("timestamp")
+            F.date_trunc("day", F.col("end_time")) <= utc_lit(end)
         )
     per_interval = df.groupBy(*keys, "station_id", "begin_time").agg(
         F.date_format(F.date_trunc("day", F.col("begin_time")), "yyyy-MM-dd").alias("date"),
@@ -90,9 +92,9 @@ def observations_daily(
     if station_ids:
         df = df.filter(F.col("station_id").isin(station_ids))
     if start is not None:
-        df = df.filter(F.col("generated_at") >= F.lit(start).cast("timestamp"))
+        df = df.filter(F.col("generated_at") >= utc_lit(start))
     if end is not None:
-        df = df.filter(F.col("generated_at") <= F.lit(end).cast("timestamp"))
+        df = df.filter(F.col("generated_at") <= utc_lit(end))
     return df.groupBy(*keys, "station_id").agg(
         F.min("generated_at").alias("start_time"),
         F.max("generated_at").alias("end_time"),

@@ -10,12 +10,27 @@ not RFC3339 text — this gives parquet min/max row-group pruning on
 time predicates for free and removes the reference's per-query
 ``::TIMESTAMP`` casts. The session pins UTC so the semantics of the
 reference's naive-vs-tz cast split (weather_data.rs:94 vs :198)
-coincide.
+coincide. Naive ``datetime`` values in this package are UTC; a
+literal built from one goes through :func:`utc_lit`, because PySpark
+converts a naive literal with the *process* zone (``time.mktime``).
 """
 
 from __future__ import annotations
 
+import datetime as dt
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def utc_lit(ts: dt.datetime | None) -> Column:
+    """A TIMESTAMP literal that reads a naive ``ts`` as UTC whatever
+    the process zone (``TZ``); aware values keep their own zone."""
+    if ts is not None and ts.tzinfo is None:
+        ts = ts.replace(tzinfo=dt.timezone.utc)
+    return F.lit(ts).cast("timestamp")
+
 
 UNIT_FAHRENHEIT = "fahrenheit"
 UNIT_CELSIUS = "celcius"  # [sic] — reference spelling, xml_forecast.rs:228-261
@@ -65,14 +80,5 @@ OBSERVATION_SCHEMA = T.StructType(
         T.StructField("wind_speed_unit_code", T.StringType(), False),
         T.StructField("dewpoint_value", T.DoubleType(), True),
         T.StructField("dewpoint_unit_code", T.StringType(), False),
-    ]
-)
-
-STATION_SCHEMA = T.StructType(
-    [
-        T.StructField("station_id", T.StringType(), False),
-        T.StructField("station_name", T.StringType(), False),
-        T.StructField("latitude", T.DoubleType(), False),
-        T.StructField("longitude", T.DoubleType(), False),
     ]
 )

@@ -1,4 +1,4 @@
-"""Ingestion sources: station index + METAR observations.
+"""Ingestion sources: station index, METAR observations, DWML forecasts.
 
 The XML fetch/parse is driver-side Python (SURVEY §2 S1-S5 — the
 reference's token-bucket HTTP client is operational plumbing, not a
@@ -6,9 +6,12 @@ data-plane operator); everything relational — the US-state filter,
 required-field row drops, and the station-index semi-join — is a
 Spark plan.
 
-Scale: station index and METAR snapshots are single-digit-MB hourly
-files; they enter Spark via createDataFrame and immediately become
-the broadcast side of joins against the lake.
+Scale: station index, METAR and DWML documents are single-digit-MB
+hourly files. The parsed tuples cross into Spark once, as one Arrow
+table per frame (:func:`local_frame`), so each frame plans as a
+``LocalTableScan`` and no Python worker runs while the tick's plans
+execute; they then become the broadcast side of joins against the
+lake.
 """
 
 from __future__ import annotations
@@ -16,10 +19,11 @@ from __future__ import annotations
 import gzip
 import xml.etree.ElementTree as ET
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from .schemas import STATION_SCHEMA
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # The 50-state whitelist the reference filters the station index by
 # (daemon/src/coordinates.rs:34-124).
@@ -30,6 +34,26 @@ US_STATES = [
     "NM", "NY", "NC", "ND", "OH", "OK", "OR", "PA", "RI", "SC",
     "SD", "TN", "TX", "UT", "VT", "VA", "WA", "WV", "WI", "WY",
 ]
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Parsed tuples -> a DataFrame through one Arrow table.
+
+    ``spark.createDataFrame(list_of_tuples)`` re-pickles the rows into
+    a PythonRDD, so every scan of the frame runs Python-worker tasks;
+    an Arrow table becomes a ``LocalRelation`` the JVM scans itself.
+    The Arrow columns take the exact Spark types; timestamps are naive
+    (``pa.timestamp("us")``), which Spark reads in the session zone
+    (UTC), so naive-UTC parse output keeps its instant whatever the
+    process zone. No pandas hop: it would turn ``None`` in float
+    columns into NaN, which Spark keeps as a value, not a null."""
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema, timestamp_utc=False)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _maybe_gunzip(payload: bytes) -> bytes:
@@ -54,7 +78,8 @@ def parse_station_index(xml_bytes: bytes) -> list[tuple]:
 def station_index_df(spark: SparkSession, xml_bytes: bytes) -> DataFrame:
     """S3 as a plan: parse driver-side, then the country/state filter
     is a Catalyst predicate."""
-    raw = spark.createDataFrame(
+    raw = local_frame(
+        spark,
         parse_station_index(xml_bytes),
         "station_id string, station_name string, state string, country string, "
         "latitude double, longitude double",
@@ -92,7 +117,8 @@ def parse_metar(xml_bytes: bytes) -> list[tuple]:
 
 
 def metar_df(spark: SparkSession, xml_bytes: bytes) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         parse_metar(xml_bytes),
         "station_id string, observation_time string, latitude double, longitude double, "
         "temp_c double, wind_dir_degrees double, wind_speed_kt double, dewpoint_c double",
@@ -125,10 +151,6 @@ def observations_from_metar(metars: DataFrame, stations: DataFrame) -> DataFrame
             F.lit("celcius").alias("dewpoint_unit_code"),
         )
     )
-
-
-def station_schema_df(spark: SparkSession, rows: list[tuple]) -> DataFrame:
-    return spark.createDataFrame(rows, STATION_SCHEMA)
 
 
 # --- DWML forecast XML (S4 parse half, xml_forecast.rs) ---------------
@@ -224,13 +246,12 @@ def dwml_frames(spark: SparkSession, xml_bytes: bytes):
     """parse_dwml -> the three DataFrames flatten_forecasts takes."""
     locations, layouts, readings, generated_at = parse_dwml(xml_bytes)
     return (
-        spark.createDataFrame(
-            locations, "location_key string, latitude string, longitude string"
+        local_frame(
+            spark, locations, "location_key string, latitude string, longitude string"
         ),
-        spark.createDataFrame(
-            layouts, "layout_key string, seq int, start_time timestamp"
-        ),
-        spark.createDataFrame(
+        local_frame(spark, layouts, "layout_key string, seq int, start_time timestamp"),
+        local_frame(
+            spark,
             readings,
             "location_key string, field string, layout_key string, seq int, raw_value string",
         ),

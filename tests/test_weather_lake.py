@@ -5,12 +5,15 @@ the A1/A2/A3 rollups against a DuckDB oracle over the same files."""
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import os
+import time
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from noaa_data_pipeline_spark.weather import lake, queries
+from noaa_data_pipeline_spark.weather import flatten, lake, queries, sources
 from noaa_data_pipeline_spark.weather.schemas import FORECAST_SCHEMA, OBSERVATION_SCHEMA
 
 T0 = dt.datetime(2024, 8, 11, 0, 0, 0)
@@ -132,3 +135,69 @@ def test_api_layer_round_trip(spark, weather_root):
     assert len(ob) == 2
     st = api.stations(spark, weather_root)
     assert {r["station_id"] for r in st} == {"KMSP", "KSEA"}
+
+
+def test_write_snapshot_writes_one_file_per_call(spark, tmp_path):
+    root = str(tmp_path)
+    ob = spark.createDataFrame(_observation_rows(), OBSERVATION_SCHEMA).repartition(4)
+    lake.write_snapshot(ob, root, lake.OBSERVATIONS, T0)
+    lake.write_snapshot(ob, root, lake.OBSERVATIONS, T0 + dt.timedelta(hours=1))
+    part = os.path.join(root, f"file_type={lake.OBSERVATIONS}", f"ingest_date={T0.date()}")
+    assert len(glob.glob(os.path.join(part, "*.parquet"))) == 2
+    assert lake.read_lake(spark, root, lake.OBSERVATIONS).count() == 2 * len(_observation_rows())
+
+
+@pytest.fixture
+def process_tz():
+    """Switch the Python process's local zone (``TZ``); the JVM and
+    the Spark session zone (UTC) stay as they are."""
+    saved = os.environ.get("TZ")
+
+    def switch(zone: str) -> None:
+        os.environ["TZ"] = zone
+        time.tzset()
+
+    yield switch
+    if saved is None:
+        os.environ.pop("TZ", None)
+    else:
+        os.environ["TZ"] = saved
+    time.tzset()
+
+
+def test_ingest_instants_do_not_depend_on_process_zone(spark, tmp_path, process_tz):
+    """DWML parse -> flatten -> snapshot -> pruned read -> daily
+    rollup keeps the same UTC instants whatever ``TZ`` says: naive
+    datetimes are UTC on every crossing into Spark."""
+    from tests.test_weather_sources import DWML
+
+    stations = spark.createDataFrame(
+        [("KMSP", "Minneapolis", 44.9, -93.2)],
+        "station_id string, station_name string, latitude double, longitude double",
+    )
+    fmt = lambda c: F.date_format(c, "yyyy-MM-dd HH:mm:ss").alias(c)  # noqa: E731
+
+    def tick(zone: str):
+        process_tz(zone)
+        root = str(tmp_path / zone.replace("/", "_"))
+        locations, layouts, readings, generated_at = sources.dwml_frames(spark, DWML.encode())
+        flat = flatten.flatten_forecasts(
+            spark, locations, stations, layouts, readings, T0, generated_at
+        )
+        lake.write_snapshot(flat, root, lake.FORECASTS, T0)
+        fc = lake.read_lake(spark, root, lake.FORECASTS, start=T0, end=T0)
+        rows = fc.select(
+            fmt("generated_at"), fmt("begin_time"), fmt("ingested_at"), "max_temp", "wind_speed"
+        ).orderBy("begin_time").collect()
+        daily = queries.forecasts_daily(fc, start=T0, end=T0 + dt.timedelta(days=1))
+        return rows, sorted(
+            daily.select("date", fmt("start_time"), "temp_high", "wind_speed").collect()
+        )
+
+    rows, daily = tick("UTC")
+    assert len(rows) == 57
+    assert tuple(rows[0]) == ("2024-08-10 23:45:00", "2024-08-11 00:00:00", "2024-08-11 00:00:00", 30, 5)
+    assert tuple(rows[2]) == ("2024-08-10 23:45:00", "2024-08-11 06:00:00", "2024-08-11 00:00:00", 30, 5)
+    assert tuple(rows[4]) == ("2024-08-10 23:45:00", "2024-08-11 12:00:00", "2024-08-11 00:00:00", 33, 9)
+    assert daily[0] == ("2024-08-11", "2024-08-11 00:00:00", 33, 9)
+    assert tick("America/New_York") == (rows, daily)

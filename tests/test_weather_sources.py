@@ -153,3 +153,47 @@ def test_dwml_end_to_end_through_flattener(spark):
     assert rows[now + dt.timedelta(hours=12)].wind_speed == 9
     assert rows[now + dt.timedelta(hours=18)].wind_speed == 4
     assert all(r.generated_at == generated_at for r in rows.values())
+
+
+# --- the Arrow crossing (local_frame) ----------------------------------
+
+
+def test_ingest_frames_plan_as_local_table_scans(spark):
+    """Every ingest frame is scanned by the JVM: a LocalTableScan leaf,
+    no PythonRDD (``Scan ExistingRDD``), so no Python worker runs."""
+    frames = [
+        sources.station_index_df(spark, STATIONS_XML),
+        sources.metar_df(spark, METAR_XML),
+        *sources.dwml_frames(spark, DWML.encode())[:3],
+    ]
+    for df in frames:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_local_frame_equals_list_path_with_nulls(spark):
+    import datetime as dt
+
+    ddl = "s string, i int, l long, d double, b boolean, t timestamp"
+    rows = [
+        ("a", 1, 2**40, 2.5, True, dt.datetime(2024, 8, 11, 6, 30, 0, 123456)),
+        (None, None, None, None, None, None),
+        ("", 0, -1, -0.0, False, dt.datetime(1969, 12, 31, 23, 59, 59)),
+    ]
+    got = sources.local_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    # None stays a null, not NaN: the METAR drop policy sees it
+    assert got.dropna(subset=["d"]).count() == 2
+
+
+def test_empty_metar_document_is_an_empty_frame(spark):
+    empty = sources.metar_df(spark, b"<response><data></data></response>")
+    want = spark.createDataFrame(
+        [],
+        "station_id string, observation_time string, latitude double, longitude double, "
+        "temp_c double, wind_dir_degrees double, wind_speed_kt double, dewpoint_c double",
+    )
+    assert empty.schema == want.schema
+    assert empty.collect() == []
