@@ -4,14 +4,18 @@ DuckDB event DB (oracle/src/db/event_db_migrations.rs:36-111).
 Tables (SURVEY §1.2): events (locations as array<string>, blobs as
 binary, nested timestamps), entries, entry choices, weather rows
 with the nested observed/forecasted STRUCTs — Spark StructType holds
-them natively.
+them natively. Each table is one parquet directory ``<root>/<table>``.
 
 Write model: append for inserts; MERGE-style updates (the
 reference's inline-VALUES correlated UPDATE, event_data.rs:405-448)
-become join + partition overwrite — the Parquet stand-in for Delta's
-MERGE INTO, kept behind this module's API so a Delta backend can
-swap in. Scale: these tables are control-plane sized (<= thousands
-of rows); the lake fact tables are the data plane.
+become join + rewrite-and-swap. Inserts honour the reference's
+``PRIMARY KEY``s on ``events.id`` and ``entries.id``, and one lock per
+store serializes the writes, as the reference's single-writer DuckDB
+file does. Python rows enter through :func:`.schemas.local_frame` and
+datetime literals through :func:`.schemas.utc_lit`: naive datetimes
+are UTC whatever the process zone. Scale: these tables are
+control-plane sized (<= thousands of rows); the lake fact tables are
+the data plane.
 """
 
 from __future__ import annotations
@@ -20,11 +24,14 @@ import datetime as dt
 import json
 import os
 import shutil
+import threading
 import uuid as uuidlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .schemas import local_frame, utc_lit
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -101,44 +108,23 @@ _VERSION_FILE = "_db_version.json"
 _METADATA_FILE = "_oracle_metadata.json"
 
 
-def delta_available(spark: SparkSession | None = None) -> bool:
-    """True when delta-spark is importable (and, if a session is
-    given, its catalog actually accepts the delta format — the python
-    package alone is not enough without the JVM-side extension)."""
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-    except ImportError:
-        return False
-    if spark is None:
-        return True
-    try:
-        spark.sql("SELECT 1").write  # cheap session liveness probe
-        return (
-            spark.conf.get(
-                "spark.sql.extensions", ""
-            ).find("DeltaSparkSessionExtension")
-            >= 0
-        )
-    except Exception:
-        return False
-
-
 class EventStore:
-    """Minimal CRUD + listing over the event tables.
+    """Minimal CRUD + listing over the event tables, as plain parquet
+    (SURVEY §1.1: the reference keeps them in one single-node DuckDB
+    file; inserts append, merges rewrite and swap — see
+    :meth:`_rewrite_frame` for what that does not guarantee).
 
-    Two storage backends behind one API (SURVEY §1.1 maps the
-    reference's persistent event DB to Delta/MERGE):
+    ``backend`` has one value, ``"parquet"``, and anything else raises.
+    The keyword survives because callers written for the earlier
+    two-backend store pass it explicitly (the repo benchmark's serve
+    workload does); it selects nothing. The store's on-disk layout,
+    one parquet directory per table, is part of that benchmark's
+    contract too: its checks read ``<root>/<table>`` with pyarrow.
 
-    - ``backend="delta"`` — Delta Lake tables; score updates run as a
-      real transactional ``MERGE INTO`` (update_scores), migrations
-      as overwriteSchema rewrites. Requires delta-spark + a session
-      built with the Delta extension; ``backend="auto"`` picks it
-      when available.
-    - ``backend="parquet"`` (the fallback, and the default where
-      delta-spark is absent — e.g. this build sandbox) — append for
-      inserts, join + rename-swap overwrite for merges. Semantically
-      equivalent, golden-tested, but not crash-atomic (see
-      _rewrite_frame).
+    ``lock`` (one per store object) serializes every write: inserts
+    with their validation reads, ``append_frame``, the read-and-rewrite
+    of ``update_scores`` and ``sign_events``, and the migrations. Share
+    one store object between the threads that write to a store root.
 
     Carries the reference's db_version scheme
     (event_db_migrations.rs:4-34) as a JSON sidecar + ordered
@@ -146,54 +132,28 @@ class EventStore:
     (stamped current), 1 = the pre-versioning layout (entries without
     ``updated_at``), 2 = current."""
 
-    def __init__(self, spark: SparkSession, root: str, backend: str = "auto"):
+    def __init__(self, spark: SparkSession, root: str, backend: str = "parquet"):
+        if backend != "parquet":
+            raise ValueError(f"unknown event-store backend {backend!r}; only 'parquet' exists")
         self.spark = spark
         self.root = root
-        # The backend is a property of the STORE, not the session: a
-        # delta-written table read as plain parquet silently returns
-        # tombstoned rows, and a parquet table read as delta errors.
-        # The version sidecar records the backend at stamp time; for
-        # pre-marker stores the _delta_log directory is the physical
-        # truth.
-        stored = self._stored_backend()
-        if backend == "auto":
-            backend = stored or (
-                "delta" if delta_available(spark) else "parquet"
-            )
-        elif stored and stored != backend:
-            raise ValueError(
-                f"store at {root} was written with backend {stored!r}; "
-                f"reopen with backend={stored!r} (or 'auto')"
-            )
-        if backend not in ("delta", "parquet"):
-            raise ValueError(f"unknown event-store backend {backend!r}")
-        if backend == "delta" and not delta_available(spark):
-            raise ValueError(
-                "backend='delta' needs delta-spark and a session built "
-                "with the Delta SQL extension"
-                + (
-                    " (this store was written as delta — reading it as "
-                    "parquet would surface deleted rows)"
-                    if stored == "delta"
-                    else ""
-                )
-            )
-        self.backend = backend
+        self.lock = threading.RLock()
+        self._refuse_delta_store()
         self.run_migrations()
 
-    def _stored_backend(self) -> str | None:
+    def _refuse_delta_store(self) -> None:
+        """A store written by the removed Delta backend holds tombstoned
+        files that plain parquet reads would surface as live rows."""
         vf = os.path.join(self.root, _VERSION_FILE)
+        marked = False
         if os.path.isfile(vf):
             with open(vf) as fh:
-                marked = json.load(fh).get("backend")
-            if marked:
-                return marked
-        for t in _TABLES:
-            if os.path.isdir(os.path.join(self._path(t), "_delta_log")):
-                return "delta"
-            if os.path.isdir(self._path(t)):
-                return "parquet"
-        return None
+                marked = json.load(fh).get("backend") == "delta"
+        if marked or any(os.path.isdir(os.path.join(self._path(t), "_delta_log")) for t in _TABLES):
+            raise ValueError(
+                f"store at {self.root} was written as Delta tables; "
+                "reading them as parquet would surface deleted rows"
+            )
 
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -213,20 +173,21 @@ class EventStore:
     def _stamp(self, version: int) -> None:
         os.makedirs(self.root, exist_ok=True)
         with open(os.path.join(self.root, _VERSION_FILE), "w") as fh:
-            json.dump({"version": version, "backend": self.backend}, fh)
+            json.dump({"version": version, "backend": "parquet"}, fh)
 
     def run_migrations(self) -> int:
         """Apply pending migrations in order and stamp the store;
         returns the resulting version."""
-        v = self._version()
-        if v == 0:
-            self._stamp(CURRENT_VERSION)  # fresh store: current layout
-            return CURRENT_VERSION
-        while v < CURRENT_VERSION:
-            getattr(self, f"_migrate_v{v}_to_v{v + 1}")()
-            v += 1
-            self._stamp(v)
-        return v
+        with self.lock:
+            v = self._version()
+            if v == 0:
+                self._stamp(CURRENT_VERSION)  # fresh store: current layout
+                return CURRENT_VERSION
+            while v < CURRENT_VERSION:
+                getattr(self, f"_migrate_v{v}_to_v{v + 1}")()
+                v += 1
+                self._stamp(v)
+            return v
 
     def _migrate_v1_to_v2(self) -> None:
         """v2 adds ``updated_at`` to entries (the reference's entries
@@ -269,26 +230,21 @@ class EventStore:
         path = self._path(table)
         schema = _TABLES[table]
         if not os.path.isdir(path):
-            return self.spark.createDataFrame([], schema)
-        if self.backend == "delta":
-            return self.spark.read.format("delta").load(path)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(path)
 
     def append(self, table: str, rows: list[tuple]) -> None:
-        df = self.spark.createDataFrame(rows, _TABLES[table])
-        self._append(table, df)
-
-    def _append(self, table: str, df: DataFrame) -> None:
-        if self.backend == "delta":
-            df.write.format("delta").mode("append").save(self._path(table))
-        else:
-            df.write.mode("append").parquet(self._path(table))
+        self._append(table, local_frame(self.spark, rows, _TABLES[table]))
 
     def append_frame(self, table: str, df: DataFrame) -> None:
         """Append a DataFrame directly (the ETL write path — no
         driver round-trip). Columns are aligned to the table schema by
         name and cast to its types."""
         self._append(table, self._aligned(table, df))
+
+    def _append(self, table: str, df: DataFrame) -> None:
+        with self.lock:
+            df.write.mode("append").parquet(self._path(table))
 
     @staticmethod
     def _aligned(table: str, df: DataFrame) -> DataFrame:
@@ -300,24 +256,15 @@ class EventStore:
         it, so the update writes to a sibling temp directory and
         swaps it in via two renames. This keeps merge-style rewrites
         fully distributed (2.5M entry rows at the ETL's
-        10^5-event scale never touch the driver). NOT crash-atomic: a
+        10^5-event scale never touch the driver). Callers hold
+        ``lock`` from their read of the table to here, so no write of
+        this store lands in between and is lost. NOT crash-atomic: a
         kill between the renames leaves the previous table under
         ``<path>__old_*`` for manual recovery (directory renames
-        can't be combined into one atomic op); the Delta backend does
-        a transactional overwrite instead and never hits the rename
-        path."""
+        can't be combined into one atomic op), and a reader between
+        the renames sees an empty table."""
         aligned = self._aligned(table, df)
         path = self._path(table)
-        if self.backend == "delta":
-            # Delta overwrites are transactional and readers see the
-            # previous snapshot until the commit lands — no tmp+rename
-            (
-                aligned.write.format("delta")
-                .mode("overwrite")
-                .option("overwriteSchema", "true")
-                .save(path)
-            )
-            return
         tmp = f"{path}__rewrite_{uuidlib.uuid4().hex[:8]}"
         aligned.write.mode("overwrite").parquet(tmp)
         old = f"{path}__old_{uuidlib.uuid4().hex[:8]}"
@@ -342,18 +289,24 @@ class EventStore:
         now: dt.datetime | None = None,
         nonce: bytes | None = None,
     ) -> str:
-        event_id = event_id or str(uuidlib.uuid4())
+        """Insert one event; a caller-chosen id that already exists is
+        refused (``events.id`` is the reference's PRIMARY KEY)."""
         now = now or dt.datetime.utcnow()
-        self.append(
-            "events",
-            [
-                (
-                    event_id, total_allowed_entries, number_of_places_win,
-                    number_of_values_per_entry, signing_date, observation_date,
-                    locations, coordinator_pubkey, nonce, None, now, now,
-                )
-            ],
-        )
+        with self.lock:
+            if not event_id:
+                event_id = str(uuidlib.uuid4())
+            elif self.read("events").filter(F.col("id") == event_id).limit(1).count():
+                raise ValueError(f"event {event_id} already exists")
+            self.append(
+                "events",
+                [
+                    (
+                        event_id, total_allowed_entries, number_of_places_win,
+                        number_of_values_per_entry, signing_date, observation_date,
+                        locations, coordinator_pubkey, nonce, None, now, now,
+                    )
+                ],
+            )
         return event_id
 
     def add_entry(
@@ -364,44 +317,51 @@ class EventStore:
         now: dt.datetime | None = None,
     ) -> None:
         """Entry + picks, with the reference's validation predicates
-        (P9, oracle.rs:218-289) done against the stored event row."""
-        ev = self.read("events").filter(F.col("id") == event_id).collect()
-        if not ev:
-            raise ValueError(f"unknown event {event_id}")
-        ev = ev[0]
-        n_entries = self.read("entries").filter(F.col("event_id") == event_id).count()
-        if n_entries >= ev.total_allowed_entries:
-            raise ValueError("event full")
-        for station, *picks in choices:
-            if station not in ev.locations:
-                raise ValueError(f"station {station} not in event locations")
-            for p in picks:
-                if p is not None and p not in VALID_PICKS:
-                    raise ValueError(f"invalid pick {p!r}")
-        n_values = sum(1 for _, *picks in choices for p in picks if p is not None)
-        if n_values > ev.number_of_values_per_entry:
-            raise ValueError("too many picks for this event")
+        (P9, oracle.rs:218-289) done against the stored event row, and
+        ``entries.id`` as a primary key. The checks and the appends run
+        under ``lock``, so two inserts cannot both pass a check."""
         now = now or dt.datetime.utcnow()
-        self.append("entries", [(entry_id, event_id, None, None, now, now)])
-        self.append("choices", [(entry_id, s, tl, th, ws) for s, tl, th, ws in choices])
+        with self.lock:
+            ev = self.read("events").filter(F.col("id") == event_id).collect()
+            if not ev:
+                raise ValueError(f"unknown event {event_id}")
+            ev = ev[0]
+            # one job answers both the capacity and the primary-key check
+            in_event, same_id = F.col("event_id") == event_id, F.col("id") == entry_id
+            n_entries, n_same_id = (
+                self.read("entries")
+                .filter(in_event | same_id)
+                .agg(F.count_if(in_event), F.count_if(same_id))
+                .first()
+            )
+            if n_same_id:
+                raise ValueError(f"entry {entry_id} already exists")
+            if n_entries >= ev.total_allowed_entries:
+                raise ValueError("event full")
+            for station, *picks in choices:
+                if station not in ev.locations:
+                    raise ValueError(f"station {station} not in event locations")
+                for p in picks:
+                    if p is not None and p not in VALID_PICKS:
+                        raise ValueError(f"invalid pick {p!r}")
+            n_values = sum(1 for _, *picks in choices for p in picks if p is not None)
+            if n_values > ev.number_of_values_per_entry:
+                raise ValueError("too many picks for this event")
+            self.append("entries", [(entry_id, event_id, None, None, now, now)])
+            self.append("choices", [(entry_id, s, tl, th, ws) for s, tl, th, ws in choices])
 
     # -- updates (J5 as merge) ----------------------------------------
 
     def update_scores(self, scored: DataFrame, now: dt.datetime | None = None) -> None:
         """The reference's correlated inline-VALUES UPDATE
-        (event_data.rs:405-448) as a merge. Delta backend: literally
-        ``MERGE INTO`` — transactional, matched rows updated in
-        place. Parquet backend: left-join + rename-swap overwrite,
-        same result, golden-tested equivalence.
+        (event_data.rs:405-448) as a merge: left-join + rewrite-and-swap
+        of ``entries``, under ``lock`` from the read to the swap.
 
         The score frame must be unique per entry_id — asserted up
-        front (ADVICE r8) because the two backends otherwise FAIL
-        DIFFERENTLY on duplicates: Delta MERGE raises its
-        multiple-source-rows-matched error while the parquet
-        left-join silently duplicates entry rows in the rewritten
-        table. The reference's UPDATE ... FROM (VALUES ...) has the
-        same silent last-writer ambiguity; failing loudly is the
-        safer twin."""
+        front (ADVICE r8) because the left-join would otherwise
+        silently duplicate entry rows in the rewritten table. The
+        reference's UPDATE ... FROM (VALUES ...) has the same silent
+        last-writer ambiguity; failing loudly is the safer twin."""
         dup = (
             scored.groupBy("entry_id").count().filter(F.col("count") > 1).limit(1).collect()
         )
@@ -411,54 +371,31 @@ class EventStore:
                 "score frame; scores must be unique per entry"
             )
         now = now or dt.datetime.utcnow()
-        if self.backend == "delta":
-            from delta.tables import DeltaTable
-
-            src = scored.select(
-                F.col("entry_id").alias("sid"),
-                F.col("score").alias("new_score"),
-                F.col("base_score").alias("new_base"),
-            )
-            (
-                DeltaTable.forPath(self.spark, self._path("entries"))
-                .alias("e")
-                .merge(src.alias("s"), "e.id = s.sid")
-                .whenMatchedUpdate(
-                    # COALESCE mirrors the parquet path exactly: a
-                    # NULL in the score frame keeps the stored value
-                    set={
-                        "score": "coalesce(s.new_score, e.score)",
-                        "base_score": "coalesce(s.new_base, e.base_score)",
-                        "updated_at": f"timestamp'{now.isoformat(sep=' ')}'",
-                    }
+        with self.lock:
+            entries = self.read("entries")
+            updated = (
+                entries.alias("e")
+                .join(
+                    scored.select(
+                        F.col("entry_id").alias("sid"),
+                        F.col("score").alias("new_score"),
+                        F.col("base_score").alias("new_base"),
+                    ),
+                    F.col("e.id") == F.col("sid"),
+                    "left",
                 )
-                .execute()
+                .select(
+                    "e.id",
+                    "e.event_id",
+                    F.coalesce("new_score", "e.score").alias("score"),
+                    F.coalesce("new_base", "e.base_score").alias("base_score"),
+                    "e.created_at",
+                    F.when(F.col("sid").isNotNull(), utc_lit(now))
+                    .otherwise(F.col("e.updated_at"))
+                    .alias("updated_at"),
+                )
             )
-            return
-        entries = self.read("entries")
-        updated = (
-            entries.alias("e")
-            .join(
-                scored.select(
-                    F.col("entry_id").alias("sid"),
-                    F.col("score").alias("new_score"),
-                    F.col("base_score").alias("new_base"),
-                ),
-                F.col("e.id") == F.col("sid"),
-                "left",
-            )
-            .select(
-                "e.id",
-                "e.event_id",
-                F.coalesce("new_score", "e.score").alias("score"),
-                F.coalesce("new_base", "e.base_score").alias("base_score"),
-                "e.created_at",
-                F.when(F.col("sid").isNotNull(), F.lit(now))
-                .otherwise(F.col("e.updated_at"))
-                .alias("updated_at"),
-            )
-        )
-        self._rewrite_frame("entries", updated)
+            self._rewrite_frame("entries", updated)
 
     def sign_events(self, signatures: dict[str, bytes]) -> None:
         """Attach attestation signatures to many events in ONE table
@@ -466,21 +403,22 @@ class EventStore:
         rewrites would be N full passes over the control table)."""
         if not signatures:
             return
-        events = self.read("events")
-        sig_df = self.spark.createDataFrame(
-            list(signatures.items()), "sig_event_id string, new_signature binary"
+        sig_df = local_frame(
+            self.spark, list(signatures.items()), "sig_event_id string, new_signature binary"
         )
-        updated = (
-            events.join(
-                F.broadcast(sig_df), events.id == sig_df.sig_event_id, "left"
+        with self.lock:
+            events = self.read("events")
+            updated = (
+                events.join(
+                    F.broadcast(sig_df), events.id == sig_df.sig_event_id, "left"
+                )
+                .withColumn(
+                    "attestation_signature",
+                    F.coalesce("new_signature", "attestation_signature"),
+                )
+                .drop("sig_event_id", "new_signature")
             )
-            .withColumn(
-                "attestation_signature",
-                F.coalesce("new_signature", "attestation_signature"),
-            )
-            .drop("sig_event_id", "new_signature")
-        )
-        self._rewrite_frame("events", updated)
+            self._rewrite_frame("events", updated)
 
     # -- listings ------------------------------------------------------
 

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from . import etl, lake, queries
 from .event_store import EventStore
+from .schemas import utc_lit
 
 EVENT_WINDOW = dt.timedelta(days=1)  # "all events are only a day long"
 
@@ -84,7 +85,13 @@ def run_etl_batch(
     (EventStore._rewrite_frame)."""
     spark = store.spark
     events = store.read("events").filter(F.col("attestation_signature").isNull())
-    meta = events.select("id", "observation_date", "signing_date", "nonce").collect()
+    # TIMESTAMP_NTZ collects as naive UTC; a TIMESTAMP collects in the
+    # process zone, which would skew the windows and statuses below
+    meta = events.select(
+        "id",
+        *[F.col(c).cast("timestamp_ntz").alias(c) for c in ("observation_date", "signing_date")],
+        "nonce",
+    ).collect()
     if not meta:
         return {}
     g_start = min(ev.observation_date for ev in meta)
@@ -111,7 +118,7 @@ def run_etl_batch(
     ).filter(F.col("date") == F.date_format("observation_date", "yyyy-MM-dd"))
 
     # -- observations: only events whose window has started (J8)
-    ob_loc = ev_loc.filter(F.col("observation_date") <= F.lit(now))
+    ob_loc = ev_loc.filter(F.col("observation_date") <= utc_lit(now))
     ob_lake = lake.read_lake(spark, lake_root, lake.OBSERVATIONS, start=g_start, end=g_end)
     obj = ob_lake.join(F.broadcast(ob_loc), "station_id").filter(
         (F.col("generated_at") >= F.col("observation_date"))

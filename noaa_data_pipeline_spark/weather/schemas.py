@@ -11,17 +11,20 @@ time predicates for free and removes the reference's per-query
 ``::TIMESTAMP`` casts. The session pins UTC so the semantics of the
 reference's naive-vs-tz cast split (weather_data.rs:94 vs :198)
 coincide. Naive ``datetime`` values in this package are UTC; a
-literal built from one goes through :func:`utc_lit`, because PySpark
-converts a naive literal with the *process* zone (``time.mktime``).
+literal built from one goes through :func:`utc_lit`, and Python rows
+become a frame through :func:`local_frame`, because PySpark converts
+a naive literal or list row with the *process* zone (``time.mktime``).
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import Column
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def utc_lit(ts: dt.datetime | None) -> Column:
@@ -30,6 +33,47 @@ def utc_lit(ts: dt.datetime | None) -> Column:
     if ts is not None and ts.tzinfo is None:
         ts = ts.replace(tzinfo=dt.timezone.utc)
     return F.lit(ts).cast("timestamp")
+
+
+def _naive_utc(values: tuple) -> list:
+    return [
+        v.astimezone(dt.timezone.utc).replace(tzinfo=None) if v is not None and v.tzinfo else v
+        for v in values
+    ]
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType | str) -> DataFrame:
+    """Python rows -> a DataFrame through one Arrow table; the one
+    place in ``weather/`` that calls ``createDataFrame``.
+
+    ``spark.createDataFrame(list_of_tuples)`` re-pickles the rows into
+    a PythonRDD, so every scan of the frame runs Python-worker tasks,
+    and it converts naive datetimes with the process zone; an Arrow
+    table becomes a ``LocalRelation`` the JVM scans itself. The Arrow
+    columns take the exact Spark types (``schema`` is a StructType or
+    a DDL string); timestamps are naive (``pa.timestamp("us")``), which
+    Spark reads in the session zone (UTC), so naive-UTC values keep
+    their instant whatever the process zone. pyarrow keeps the wall
+    clock of an aware datetime and drops its offset, so aware values in
+    top-level timestamp columns are first moved to naive UTC. No pandas
+    hop: it would turn ``None`` in float columns into NaN, which Spark
+    keeps as a value, not a null. A ``None`` in a non-nullable field
+    raises ``ValueError``."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema, timestamp_utc=False)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(
+                _naive_utc(col) if isinstance(f.dataType, T.TimestampType) else col,
+                type=a.type,
+            )
+            for col, f, a in zip(columns, schema.fields, arrow)
+        ],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 UNIT_FAHRENHEIT = "fahrenheit"

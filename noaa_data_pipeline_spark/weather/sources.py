@@ -8,7 +8,7 @@ Spark plan.
 
 Scale: station index, METAR and DWML documents are single-digit-MB
 hourly files. The parsed tuples cross into Spark once, as one Arrow
-table per frame (:func:`local_frame`), so each frame plans as a
+table per frame (:func:`.schemas.local_frame`), so each frame plans as a
 ``LocalTableScan`` and no Python worker runs while the tick's plans
 execute; they then become the broadcast side of joins against the
 lake.
@@ -19,11 +19,10 @@ from __future__ import annotations
 import gzip
 import xml.etree.ElementTree as ET
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
+
+from .schemas import local_frame
 
 # The 50-state whitelist the reference filters the station index by
 # (daemon/src/coordinates.rs:34-124).
@@ -34,26 +33,6 @@ US_STATES = [
     "NM", "NY", "NC", "ND", "OH", "OK", "OR", "PA", "RI", "SC",
     "SD", "TN", "TX", "UT", "VT", "VA", "WA", "WV", "WI", "WY",
 ]
-
-
-def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
-    """Parsed tuples -> a DataFrame through one Arrow table.
-
-    ``spark.createDataFrame(list_of_tuples)`` re-pickles the rows into
-    a PythonRDD, so every scan of the frame runs Python-worker tasks;
-    an Arrow table becomes a ``LocalRelation`` the JVM scans itself.
-    The Arrow columns take the exact Spark types; timestamps are naive
-    (``pa.timestamp("us")``), which Spark reads in the session zone
-    (UTC), so naive-UTC parse output keeps its instant whatever the
-    process zone. No pandas hop: it would turn ``None`` in float
-    columns into NaN, which Spark keeps as a value, not a null."""
-    schema = StructType.fromDDL(ddl)
-    arrow = to_arrow_schema(schema, timestamp_utc=False)
-    columns = list(zip(*rows)) if rows else [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(col, type=field.type) for col, field in zip(columns, arrow)], schema=arrow
-    )
-    return spark.createDataFrame(table, schema)
 
 
 def _maybe_gunzip(payload: bytes) -> bytes:

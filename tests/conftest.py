@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 import pytest
 
@@ -39,3 +40,21 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture
+def process_tz():
+    """Switch the Python process's local zone (``TZ``); the JVM and
+    the Spark session zone (UTC) stay as they are."""
+    saved = os.environ.get("TZ")
+
+    def switch(zone: str) -> None:
+        os.environ["TZ"] = zone
+        time.tzset()
+
+    yield switch
+    if saved is None:
+        os.environ.pop("TZ", None)
+    else:
+        os.environ["TZ"] = saved
+    time.tzset()

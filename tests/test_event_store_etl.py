@@ -7,13 +7,20 @@ from __future__ import annotations
 
 import datetime as dt
 import decimal
+import json
+import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
 from noaa_data_pipeline_spark.weather import lake, outcomes, run
 from noaa_data_pipeline_spark.weather.event_store import EventStore
-from noaa_data_pipeline_spark.weather.schemas import FORECAST_SCHEMA, OBSERVATION_SCHEMA
+from noaa_data_pipeline_spark.weather.schemas import (
+    FORECAST_SCHEMA,
+    OBSERVATION_SCHEMA,
+    local_frame,
+)
 from tests.test_weather_etl_golden import (
     CHOICES,
     E1,
@@ -48,11 +55,11 @@ def _write_lake(spark, lake_root, forecasts, observations):
         for st, gen, temp, w in observations
     ]
     lake.write_snapshot(
-        spark.createDataFrame(fc, FORECAST_SCHEMA), lake_root, lake.FORECASTS,
+        local_frame(spark, fc, FORECAST_SCHEMA), lake_root, lake.FORECASTS,
         OBS_DATE - dt.timedelta(days=1),
     )
     lake.write_snapshot(
-        spark.createDataFrame(ob, OBSERVATION_SCHEMA), lake_root, lake.OBSERVATIONS, OBS_DATE
+        local_frame(spark, ob, OBSERVATION_SCHEMA), lake_root, lake.OBSERVATIONS, OBS_DATE
     )
 
 
@@ -130,10 +137,12 @@ def test_etl_produces_golden_scores_and_signs(setup):
     _assert_golden_etl(store, lake_root, event_id, run.run_etl_batch)
 
 
-def test_etl_batch_path_produces_same_goldens(spark, tmp_path_factory):
-    """On a fresh store the set-based all-events plan (run_etl_batch)
-    reproduces the reference goldens, and a second pass finds nothing
-    active."""
+def test_etl_batch_path_produces_same_goldens(spark, tmp_path_factory, process_tz):
+    """Store and lake instants do not depend on the process zone: with
+    ``TZ=America/New_York`` a fresh fixture (naive datetimes meaning
+    UTC) and its ETL pass reproduce the reference goldens, and a second
+    pass finds nothing active."""
+    process_tz("America/New_York")
     store, lake_root, event_id = _build_fixture(spark, tmp_path_factory)
     _assert_golden_etl(store, lake_root, event_id, run.run_etl_batch)
     # second pass: nothing active anymore
@@ -369,57 +378,96 @@ def test_batch_etl_equals_per_event_on_event_fleet(spark, tmp_path_factory):
 
 
 def test_backend_selection_and_explicit_parquet(spark, tmp_path_factory):
-    """backend='auto' resolves to parquet where delta-spark is absent
-    (this sandbox); asking for delta without the library is a loud
-    error, not a silent parquet fallback."""
-    from noaa_data_pipeline_spark.weather.event_store import delta_available
+    """Parquet is the only backend: ``"parquet"`` opens, any other
+    value raises, and a store written as Delta tables is refused rather
+    than read as plain parquet (which would surface deleted rows)."""
+    EventStore(spark, str(tmp_path_factory.mktemp("be")), backend="parquet")
+    for other in ("auto", "delta", "duckdb"):
+        with pytest.raises(ValueError, match="backend"):
+            EventStore(spark, str(tmp_path_factory.mktemp("be")), backend=other)
+    logged = tmp_path_factory.mktemp("be_log")
+    (logged / "entries" / "_delta_log").mkdir(parents=True)
+    marked = tmp_path_factory.mktemp("be_marked")
+    (marked / "_db_version.json").write_text(json.dumps({"version": 2, "backend": "delta"}))
+    for root in (logged, marked):
+        with pytest.raises(ValueError, match="deleted rows"):
+            EventStore(spark, str(root))
 
-    root = str(tmp_path_factory.mktemp("be"))
-    store = EventStore(spark, root, backend="auto")
-    assert store.backend == ("delta" if delta_available(spark) else "parquet")
-    store2 = EventStore(spark, str(tmp_path_factory.mktemp("be2")), backend="parquet")
-    assert store2.backend == "parquet"
-    if not delta_available(spark):
-        with pytest.raises(ValueError, match="delta"):
-            EventStore(spark, str(tmp_path_factory.mktemp("be3")), backend="delta")
+
+def test_inserts_enforce_primary_keys(spark, tmp_path_factory):
+    """``events.id`` and ``entries.id`` are primary keys, as in the
+    reference's schema: a second insert under an existing id raises and
+    leaves one row."""
+    store = EventStore(spark, str(tmp_path_factory.mktemp("pk")))
+    ev = store.add_event("ev-1", OBS_DATE, SIGN_DATE, ["PFNO"], 4, 6, 1)
+    with pytest.raises(ValueError, match="already exists"):
+        store.add_event(ev, OBS_DATE, SIGN_DATE, ["PFNO"], 4, 6, 1)
+    store.add_entry(E1, ev, [("PFNO", "par", None, None)])
+    with pytest.raises(ValueError, match="already exists"):
+        store.add_entry(E1, ev, [("PFNO", "over", None, None)])
+    assert store.read("events").count() == 1
+    assert [r.station for r in store.read("choices").collect()] == ["PFNO"]
+    assert store.read("entries").count() == 1
 
 
-def test_etl_golden_under_delta_backend(tmp_path_factory):
-    """The golden ETL (scores, winners, attestation) must be
-    backend-independent: run it against a Delta-backed store where
-    delta-spark is installed. Skips in environments without the
-    library (the MERGE INTO path is exercised only where it can
-    actually run — see EventStore docstring for the parquet
-    equivalence argument)."""
-    pytest.importorskip("delta")
-    from delta import configure_spark_with_delta_pip
-    from pyspark.sql import SparkSession
+def test_add_entry_during_score_rewrite_is_kept(spark, tmp_path_factory):
+    """An entry added while ``update_scores`` rewrites ``entries`` is
+    not lost: the rewrite starts the insert on another thread and waits
+    up to 2 s for it before writing; the store lock holds the insert
+    until the swap is done, so both entries survive."""
+    store = EventStore(spark, str(tmp_path_factory.mktemp("race")))
+    ev = store.add_event(None, OBS_DATE, SIGN_DATE, ["PFNO"], 4, 6, 1)
+    store.add_entry(E1, ev, [("PFNO", "par", None, None)])
+    late = threading.Thread(target=store.add_entry, args=(E2, ev, [("PFNO", "over", None, None)]))
+    rewrite = store._rewrite_frame
 
-    builder = (
-        SparkSession.builder.master("local[4]")
-        .appName("delta-golden")
-        .config("spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension")
-        .config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-    )
-    dspark = configure_spark_with_delta_pip(builder).getOrCreate()
+    def rewrite_with_late_entry(table, df):
+        late.start()
+        late.join(timeout=2)
+        rewrite(table, df)
+
+    store._rewrite_frame = rewrite_with_late_entry
+    store.update_scores(local_frame(spark, [(E1, 10, 1)], "entry_id string, score long, base_score long"))
+    late.join(timeout=60)
+    assert not late.is_alive()
+    assert {r.id: r.score for r in store.read("entries").collect()} == {E1: 10, E2: None}
+    assert store.read("choices").count() == 2
+
+
+def test_concurrent_add_entry_respects_capacity(spark, tmp_path_factory):
+    """Six threads race to add an entry to an event with room for
+    three: the store lock makes each capacity check and its append one
+    step, so exactly three entries land and the rest see "event full"."""
+    store = EventStore(spark, str(tmp_path_factory.mktemp("capacity")))
+    ev = store.add_event(None, OBS_DATE, SIGN_DATE, ["PFNO"], 3, 6, 1)
+    refused = []
+
+    def add(n):
+        try:
+            store.add_entry(f"entry-{n}", ev, [("PFNO", "par", None, None)])
+        except ValueError as exc:
+            refused.append(str(exc))
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
     try:
-        store, lake_root, event_id = _build_fixture(dspark, tmp_path_factory)
-        assert store.backend == "delta"
-        _assert_golden_etl(store, lake_root, event_id, run.run_etl_batch)
+        threads = [threading.Thread(target=add, args=(n,)) for n in range(6)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
     finally:
-        dspark.stop()
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert store.read("entries").count() == 3
+    assert store.read("choices").count() == 3
+    assert refused == ["event full"] * 3
 
 
 def test_update_scores_rejects_duplicate_entry_ids(spark, tmp_path_factory):
-    """Duplicate entry_ids in the score frame must fail LOUDLY and
-    identically on both backends (ADVICE r8): Delta MERGE would raise
-    its multiple-source-rows-matched error while the parquet
-    left-join silently duplicated entry rows — now both hit the same
-    up-front uniqueness check."""
+    """Duplicate entry_ids in the score frame must fail LOUDLY
+    (ADVICE r8): the merge's left-join would silently duplicate entry
+    rows, so an up-front uniqueness check refuses the frame."""
     from pyspark.sql import functions as F
 
     store = EventStore(spark, str(tmp_path_factory.mktemp("dup_scores")))

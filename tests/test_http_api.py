@@ -348,3 +348,35 @@ def test_ui_page_bootstrap_and_query(served):
     status, body = _get(base, "/ui/schema?tables=observations")
     assert status == 200
     assert {c["column_name"] for c in body["observations"]} == cols
+
+
+def test_duplicate_entry_is_400_and_update_still_runs(served):
+    """``entries.id`` is a primary key: a second POST of the same entry
+    is a 400 and stores nothing, so the next ``/oracle/update`` still
+    scores the event (a duplicated entry row made it a 500)."""
+    base, _, store, _, _ = served
+    event_id = str(uuid.uuid4())
+    _post_json(
+        base,
+        "/oracle/events",
+        {
+            "id": event_id,
+            "observation_date": OBS_DATE.isoformat() + "Z",
+            "signing_date": SIGN_DATE.isoformat() + "Z",
+            "locations": ["PFNO", "KSAW"],
+            "total_allowed_entries": 3,
+            "number_of_values_per_entry": 6,
+            "number_of_places_win": 1,
+        },
+    )
+    entry = {"id": str(uuid.uuid4()), "choices": [{"station": "PFNO", "temp_low": "par"}]}
+    assert _post_json(base, f"/oracle/events/{event_id}/entry", entry)[0] == 201
+    with pytest.raises(urllib.error.HTTPError) as exc:
+        _post_json(base, f"/oracle/events/{event_id}/entry", entry)
+    assert exc.value.code == 400
+    assert store.read("entries").filter(f"id = '{entry['id']}'").count() == 1
+
+    req = urllib.request.Request(base + "/oracle/update", data=b"", method="POST")
+    with urllib.request.urlopen(req) as resp:
+        assert resp.status == 200
+        assert json.loads(resp.read())[event_id] == "signed"

@@ -7,7 +7,6 @@ from __future__ import annotations
 import datetime as dt
 import glob
 import os
-import time
 
 import duckdb
 import pytest
@@ -145,24 +144,6 @@ def test_write_snapshot_writes_one_file_per_call(spark, tmp_path):
     part = os.path.join(root, f"file_type={lake.OBSERVATIONS}", f"ingest_date={T0.date()}")
     assert len(glob.glob(os.path.join(part, "*.parquet"))) == 2
     assert lake.read_lake(spark, root, lake.OBSERVATIONS).count() == 2 * len(_observation_rows())
-
-
-@pytest.fixture
-def process_tz():
-    """Switch the Python process's local zone (``TZ``); the JVM and
-    the Spark session zone (UTC) stay as they are."""
-    saved = os.environ.get("TZ")
-
-    def switch(zone: str) -> None:
-        os.environ["TZ"] = zone
-        time.tzset()
-
-    yield switch
-    if saved is None:
-        os.environ.pop("TZ", None)
-    else:
-        os.environ["TZ"] = saved
-    time.tzset()
 
 
 def test_ingest_instants_do_not_depend_on_process_zone(spark, tmp_path, process_tz):

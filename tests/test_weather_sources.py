@@ -197,3 +197,48 @@ def test_empty_metar_document_is_an_empty_frame(spark):
     )
     assert empty.schema == want.schema
     assert empty.collect() == []
+
+
+def test_local_frame_keeps_the_instant_of_aware_timestamps(spark):
+    """pyarrow keeps an aware datetime's wall clock and drops its
+    offset; local_frame lands it at the same instant as the list path."""
+    import datetime as dt
+
+    rows = [(dt.datetime(2024, 8, 11, 6, tzinfo=dt.timezone(dt.timedelta(hours=-4))),)]
+    got = sources.local_frame(spark, rows, "t timestamp").selectExpr("cast(t as string)")
+    want = spark.createDataFrame(rows, "t timestamp").selectExpr("cast(t as string)")
+    assert got.first()[0] == want.first()[0] == "2024-08-11 10:00:00"
+
+
+def test_local_frame_null_in_non_nullable_field_raises(spark):
+    """A null primary-key-like field is a ValueError (the HTTP shim's
+    400), as it was on the list path."""
+    import pytest
+
+    from noaa_data_pipeline_spark.weather.event_store import CHOICE_SCHEMA
+
+    with pytest.raises(ValueError):
+        sources.local_frame(spark, [("e1", None, "par", None, None)], CHOICE_SCHEMA)
+
+
+def test_event_store_frames_plan_as_local_table_scans(spark, tmp_path):
+    """The event store's Python rows cross through local_frame too: the
+    empty frame of a missing table, an append, and sign_events'
+    broadcast side plan as a LocalTableScan with no PythonRDD."""
+    import datetime as dt
+
+    from noaa_data_pipeline_spark.weather.event_store import EventStore
+
+    store = EventStore(spark, str(tmp_path))
+    frames = [store.read("weather")]
+    day = dt.datetime(2024, 8, 12)
+    store.add_event("ev-1", day, day, ["KMSP"], 2, 6, 1)
+    written = []
+    store._append = lambda table, df: written.append(df)
+    store._rewrite_frame = lambda table, df: written.append(df)
+    store.append("choices", [("e1", "KMSP", "par", None, None)])
+    store.sign_events({"ev-1": b"sig"})
+    for df in frames + written:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert len(written) == 2
