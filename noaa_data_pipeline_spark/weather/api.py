@@ -1,7 +1,8 @@
 """Read-API layer: the reference's three query routes as plain
 functions (SURVEY §3.1/§3.3 minus the HTTP frame — axum extractor ->
-function arguments, JSON serialization -> list-of-dicts via Arrow
-collect). A FastAPI shim would mount these 1:1.
+function arguments, JSON serialization -> list-of-dicts, collected
+through :func:`.schemas.collect_utc` so timestamps are UTC whatever
+the process zone). A FastAPI shim would mount these 1:1.
 
 - forecasts:    GET /stations/forecasts?start&end&station_ids
                 (oracle/src/routes/stations/weather_routes.rs:25-66)
@@ -16,10 +17,11 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 
 from . import lake, queries
+from .schemas import collect_utc
 
 
 def _rows(df: DataFrame) -> list[dict]:
-    return [r.asDict() for r in df.collect()]
+    return [r.asDict() for r in collect_utc(df)]
 
 
 def _parse_stations(station_ids: str | None) -> list[str] | None:

@@ -361,13 +361,20 @@ class EventStore:
         front (ADVICE r8) because the left-join would otherwise
         silently duplicate entry rows in the rewritten table. The
         reference's UPDATE ... FROM (VALUES ...) has the same silent
-        last-writer ambiguity; failing loudly is the safer twin."""
+        last-writer ambiguity; failing loudly is the safer twin. The
+        frame is executed once (``localCheckpoint``) and the guard and
+        the rewrite both read that result."""
+        scored = scored.localCheckpoint(eager=False)
+        # a global aggregate: one job, where limit(1) scans partition by partition
         dup = (
-            scored.groupBy("entry_id").count().filter(F.col("count") > 1).limit(1).collect()
+            scored.groupBy("entry_id")
+            .count()
+            .agg(F.min(F.when(F.col("count") > 1, F.col("entry_id"))))
+            .collect()[0][0]
         )
-        if dup:
+        if dup is not None:
             raise ValueError(
-                f"update_scores: duplicate entry_id {dup[0]['entry_id']!r} in the "
+                f"update_scores: duplicate entry_id {dup!r} in the "
                 "score frame; scores must be unique per entry"
             )
         now = now or dt.datetime.utcnow()

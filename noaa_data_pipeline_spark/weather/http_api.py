@@ -51,6 +51,7 @@ from pyspark.sql import SparkSession
 from ..functions.bech32 import normalize_pubkey, npub_encode
 from . import api, run, ui
 from .event_store import EventStore
+from .schemas import collect_utc
 
 MAX_BODY = 30 * 1024 * 1024  # DefaultBodyLimit, startup.rs:132
 
@@ -237,12 +238,9 @@ class WeatherApp:
     def get_event(self, event_id: str) -> dict:
         from pyspark.sql import functions as F
 
-        rows = [
-            r.asDict()
-            for r in self.store.list_events(limit=1 << 30)
-            .filter(F.col("id") == event_id)  # pushed down, O(1) result
-            .collect()
-        ]
+        listed = self.store.list_events(limit=1 << 30)
+        # the filter is pushed down, O(1) result
+        rows = [r.asDict() for r in collect_utc(listed.filter(F.col("id") == event_id))]
         if not rows:
             raise HTTPError(404, f"no such event {event_id}")
         return rows[0]
@@ -251,16 +249,12 @@ class WeatherApp:
         from pyspark.sql import functions as F
 
         entries, choices = self.store.event_entries(event_id)
-        ent = [
-            r.asDict()
-            for r in entries.filter(F.col("id") == entry_id).collect()
-        ]
+        ent = [r.asDict() for r in collect_utc(entries.filter(F.col("id") == entry_id))]
         if not ent:
             raise HTTPError(404, f"no such entry {entry_id}")
         out = ent[0]
         out["choices"] = [
-            c.asDict()
-            for c in choices.filter(F.col("entry_id") == entry_id).collect()
+            c.asDict() for c in collect_utc(choices.filter(F.col("entry_id") == entry_id))
         ]
         return out
 
@@ -517,9 +511,7 @@ class _Handler(BaseHTTPRequestHandler):
                 )
                 return self._send_json(results)
             if rest == ["events"] and method == "GET":
-                return self._send_json(
-                    [r.asDict() for r in app.store.list_events().collect()]
-                )
+                return self._send_json([r.asDict() for r in collect_utc(app.store.list_events())])
             if rest == ["events"] and method == "POST":
                 auth_pubkey = self._authenticate(method)
                 body = self._json_body()

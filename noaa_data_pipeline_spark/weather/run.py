@@ -16,12 +16,16 @@ placeholder over the same winning-bytes message the reference signs.
 from __future__ import annotations
 
 import datetime as dt
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import etl, lake, queries
 from .event_store import EventStore
-from .schemas import utc_lit
+from .schemas import collect_utc, local_frame, utc_lit
 
 EVENT_WINDOW = dt.timedelta(days=1)  # "all events are only a day long"
 
@@ -59,6 +63,14 @@ def schnorr_signer(seckey: bytes):
     return _sign
 
 
+def _cross(df: DataFrame) -> tuple[pa.Table, DataFrame]:
+    """Execute ``df`` once and bring its rows back in as a
+    ``LocalRelation``: every later plan that uses them scans the
+    driver's copy instead of re-running ``df`` (lake scans included)."""
+    table = df.toArrow()
+    return table, local_frame(df.sparkSession, table, df.schema)
+
+
 def run_etl_batch(
     store: EventStore, lake_root: str, now: dt.datetime, signer=None
 ) -> dict[str, str]:
@@ -66,41 +78,47 @@ def run_etl_batch(
     {event_id: resulting status}. The reference runs the procedure
     event by event; here:
 
-    - the lake is scanned ONCE over the union of event windows, with
-      per-event time predicates applied after a broadcast join with
-      the exploded (event_id, station_id) dimension;
+    - the lake is scanned ONCE per fact type over the union of event
+      windows, with per-event time predicates applied after a
+      broadcast join with the (event_id, station_id) dimension, which
+      is built from the collected event metadata;
     - the daily rollups are queries.forecasts_daily /
       observations_daily keyed by event too — one shuffle for the
       fleet instead of one job per event;
+    - each rollup is executed once, the two side by side, and crosses
+      back as a local frame (:func:`_cross`), so the weather append,
+      the scoring, its duplicate guard and the score rewrite scan no
+      lake; the events the observation rollup returned pick the
+      entries to score, and with none nothing is scored, with no
+      probe job;
     - scoring is one join chain + groupBy(entry_id)
       (etl.score_entries_batch), winners one window partitioned by
       event_id (etl.winners_batch);
     - signatures land in one control-table rewrite (sign_events).
 
     At 10^5 active events an event-at-a-time loop would serialize
-    the cluster on driver round-trips; this path's job count is O(1) in the
-    number of events. Only control-plane-sized frames (event
-    metadata, winner triples) are ever collected — snapshots append
-    and score/signature merges rewrite distributed
+    the cluster on driver round-trips; this path's job count is O(1)
+    in the number of events. Collected to the driver: the event
+    metadata, the two rollups (events x stations rows) and the winner
+    triples. Entry-scale frames (entries, choices, scores) stay
+    distributed and are never collected — the snapshot append and the
+    score/signature merges rewrite distributed
     (EventStore._rewrite_frame)."""
     spark = store.spark
-    events = store.read("events").filter(F.col("attestation_signature").isNull())
-    # TIMESTAMP_NTZ collects as naive UTC; a TIMESTAMP collects in the
-    # process zone, which would skew the windows and statuses below
-    meta = events.select(
-        "id",
-        *[F.col(c).cast("timestamp_ntz").alias(c) for c in ("observation_date", "signing_date")],
-        "nonce",
-    ).collect()
+    meta = collect_utc(
+        store.read("events")
+        .filter(F.col("attestation_signature").isNull())
+        .select("id", "observation_date", "signing_date", "locations", "nonce")
+    )
     if not meta:
         return {}
     g_start = min(ev.observation_date for ev in meta)
     g_end = max(ev.observation_date for ev in meta) + EVENT_WINDOW
 
-    ev_loc = events.select(
-        F.col("id").alias("event_id"),
-        "observation_date",
-        F.explode("locations").alias("station_id"),
+    ev_loc = local_frame(
+        spark,
+        [(ev.id, ev.observation_date, st) for ev in meta for st in ev.locations],
+        "event_id string, observation_date timestamp, station_id string",
     )
     day = F.expr("interval 1 day")  # EVENT_WINDOW
 
@@ -113,9 +131,9 @@ def run_etl_batch(
         (F.date_trunc("day", F.col("begin_time")) >= F.col("observation_date"))
         & (F.date_trunc("day", F.col("end_time")) <= F.col("observation_date") + day)
     )
-    fc_daily = queries.forecasts_daily(
-        fcj, keys=("event_id", "observation_date")
-    ).filter(F.col("date") == F.date_format("observation_date", "yyyy-MM-dd"))
+    fc_plan = queries.forecasts_daily(fcj, keys=("event_id", "observation_date")).filter(
+        F.col("date") == F.date_format("observation_date", "yyyy-MM-dd")
+    )
 
     # -- observations: only events whose window has started (J8)
     ob_loc = ev_loc.filter(F.col("observation_date") <= utc_lit(now))
@@ -124,7 +142,13 @@ def run_etl_batch(
         (F.col("generated_at") >= F.col("observation_date"))
         & (F.col("generated_at") <= F.col("observation_date") + day)
     )
-    ob_daily = queries.observations_daily(obj, keys=("event_id",))
+    ob_plan = queries.observations_daily(obj, keys=("event_id",))
+    # the two rollups are independent jobs: run them side by side (the
+    # wrapper hands the caller's Spark job properties to the pool thread)
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        fc_crossing = pool.submit(inheritable_thread_target(spark)(_cross), fc_plan)
+        ob_table, ob_daily = _cross(ob_plan)
+        _, fc_daily = fc_crossing.result()
 
     # -- weather snapshot: forecast required, observed optional (J8);
     #    observed temps round half-away-from-zero (Spark ROUND = HALF_UP)
@@ -156,19 +180,16 @@ def run_etl_batch(
     store.append_frame("weather", snapshot)
 
     # -- scoring: entries of events that have >= 1 observation row
-    active_ids = events.select(F.col("id").alias("event_id"))
-    entries_all = store.read("entries").join(active_ids, "event_id", "left_semi")
-    events_with_obs = ob_daily.select("event_id").distinct()
-    to_score = (
-        entries_all.select(F.col("id").alias("entry_id"), "event_id")
-        .join(events_with_obs, "event_id", "left_semi")
-    )
-    if to_score.limit(1).count() > 0:
-        choices = store.read("choices").join(
-            entries_all.select(F.col("id").alias("entry_id")), "entry_id", "left_semi"
+    observed = set(ob_table.column("event_id").to_pylist())
+    if observed:
+        to_score = (
+            store.read("entries")
+            .filter(F.col("event_id").isin(sorted(observed)))
+            .select(F.col("id").alias("entry_id"), "event_id")
         )
+        # score_entries_batch keeps only the choices of to_score's entries
         scored = etl.score_entries_batch(
-            to_score, etl.choices_long(choices), fc_daily, ob_daily
+            to_score, etl.choices_long(store.read("choices")), fc_daily, ob_daily
         )
         store.update_scores(scored)
 
@@ -186,7 +207,9 @@ def run_etl_batch(
             .filter(F.col("event_id").isin(sign_ids))
             .select(F.col("id").alias("entry_id"), "event_id", "score")
         )
-        win_rows = etl.winners_batch(ents).orderBy("event_id", "rank").collect()
+        # sorted on the driver: an orderBy would sample its range
+        # partitions in a job of its own
+        win_rows = sorted(etl.winners_batch(ents).collect(), key=lambda w: (w.event_id, w.rank))
         by_event: dict[str, list] = {}
         for w in win_rows:
             by_event.setdefault(w.event_id, []).append(w)

@@ -11,9 +11,11 @@ time predicates for free and removes the reference's per-query
 ``::TIMESTAMP`` casts. The session pins UTC so the semantics of the
 reference's naive-vs-tz cast split (weather_data.rs:94 vs :198)
 coincide. Naive ``datetime`` values in this package are UTC; a
-literal built from one goes through :func:`utc_lit`, and Python rows
-become a frame through :func:`local_frame`, because PySpark converts
-a naive literal or list row with the *process* zone (``time.mktime``).
+literal built from one goes through :func:`utc_lit`, Python rows
+become a frame through :func:`local_frame`, and frames with
+timestamps are collected through :func:`collect_utc`, because PySpark
+converts a naive literal or list row, and a collected TIMESTAMP, with
+the *process* zone (``time.mktime`` / ``datetime.fromtimestamp``).
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -42,9 +44,11 @@ def _naive_utc(values: tuple) -> list:
     ]
 
 
-def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType | str) -> DataFrame:
-    """Python rows -> a DataFrame through one Arrow table; the one
-    place in ``weather/`` that calls ``createDataFrame``.
+def local_frame(
+    spark: SparkSession, rows: list[tuple] | pa.Table, schema: T.StructType | str
+) -> DataFrame:
+    """Python rows or an Arrow table -> a DataFrame; the one place in
+    ``weather/`` that calls ``createDataFrame``.
 
     ``spark.createDataFrame(list_of_tuples)`` re-pickles the rows into
     a PythonRDD, so every scan of the frame runs Python-worker tasks,
@@ -58,9 +62,15 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType | s
     top-level timestamp columns are first moved to naive UTC. No pandas
     hop: it would turn ``None`` in float columns into NaN, which Spark
     keeps as a value, not a null. A ``None`` in a non-nullable field
-    raises ``ValueError``."""
+    raises ``ValueError``.
+
+    A ``pa.Table`` (a small frame collected with ``toArrow()``, whose
+    timestamps are UTC-aware) crosses back as it is, so a plan can be
+    executed once and its result reused as a ``LocalRelation``."""
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows, schema)
     arrow = to_arrow_schema(schema, timestamp_utc=False)
     columns = list(zip(*rows)) if rows else [()] * len(arrow)
     table = pa.Table.from_arrays(
@@ -74,6 +84,20 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType | s
         schema=arrow,
     )
     return spark.createDataFrame(table, schema)
+
+
+def collect_utc(df: DataFrame) -> list[Row]:
+    """``df.collect()`` with every top-level TIMESTAMP column cast to
+    TIMESTAMP_NTZ first, so it collects as a naive UTC datetime (the
+    session zone) instead of a naive datetime in the process zone."""
+    return df.select(
+        *[
+            F.col(f"`{f.name}`").cast("timestamp_ntz").alias(f.name)
+            if isinstance(f.dataType, T.TimestampType)
+            else F.col(f"`{f.name}`")
+            for f in df.schema.fields
+        ]
+    ).collect()
 
 
 UNIT_FAHRENHEIT = "fahrenheit"

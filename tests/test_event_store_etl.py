@@ -481,3 +481,95 @@ def test_update_scores_rejects_duplicate_entry_ids(spark, tmp_path_factory):
     store.update_scores(scored.groupBy("entry_id").agg(
         F.max("score").alias("score"), F.max("base_score").alias("base_score")
     ))
+
+
+def _entry_rows(store):
+    return sorted(
+        (r.id, r.score, r.base_score, r.updated_at) for r in store.read("entries").collect()
+    )
+
+
+def _record_calls(monkeypatch, store, *names):
+    """Record every call of the store's ``names`` methods and still run
+    them; returns {name: [args, ...]}."""
+    calls = {n: [] for n in names}
+    for n in names:
+        real = getattr(store, n)
+
+        def wrapper(*args, _n=n, _real=real, **kw):
+            calls[_n].append(args)
+            return _real(*args, **kw)
+
+        monkeypatch.setattr(store, n, wrapper)
+    return calls
+
+
+def test_pass_without_observed_event_runs_no_scoring(spark, tmp_path_factory, monkeypatch):
+    """Before its observation window opens an event is live and has no
+    observation rows: the pass reads neither entries nor choices, runs
+    no score update and leaves ``entries`` as it was."""
+    store, lake_root, event_id = _build_fixture(spark, tmp_path_factory)
+    before = _entry_rows(store)
+    calls = _record_calls(monkeypatch, store, "read", "update_scores")
+    assert run.run_etl_batch(store, lake_root, OBS_DATE - dt.timedelta(hours=1)) == {
+        event_id: "live"
+    }
+    assert calls["update_scores"] == []
+    assert {args[0] for args in calls["read"]} == {"events"}
+    assert _entry_rows(store) == before
+
+
+def test_pass_with_observed_events_without_entries_keeps_scores(spark, tmp_path_factory):
+    """An observed, completed event with no entries next to a live event
+    with entries: the pass succeeds, the entry-less event stays
+    completed (no winners to sign) and no score changes."""
+    lake_root = str(tmp_path_factory.mktemp("lake_noentries"))
+    _write_lake(
+        spark, lake_root,
+        [("PFNO", OBS_DATE, OBS_DATE + dt.timedelta(hours=3), 5, 20, 3)],
+        [("PFNO", OBS_DATE + dt.timedelta(hours=6), 7.0, 3)],
+    )
+    store = EventStore(spark, str(tmp_path_factory.mktemp("store_noentries")))
+    observed = store.add_event("observed", OBS_DATE, SIGN_DATE, ["PFNO"], 4, 6, 1)
+    live = store.add_event(
+        "live", NOW + dt.timedelta(days=1), NOW + dt.timedelta(days=2), ["PFNO"], 4, 6, 1
+    )
+    store.add_entry(E1, live, [("PFNO", "par", None, None)])
+    before = _entry_rows(store)
+    assert run.run_etl_batch(store, lake_root, NOW) == {observed: "completed", live: "live"}
+    assert _entry_rows(store) == before
+    assert [(w.event_id, w.observed.temp_low) for w in store.read("weather").collect()] == [
+        (observed, 7)
+    ]
+
+
+def _lake_scans(df, lake_root):
+    """The parquet scans in ``df``'s physical plan that read below
+    ``lake_root``."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    scans = []
+    for i in range(leaves.size()):
+        node = leaves.apply(i)
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            paths = node.relation().location().rootPaths().mkString(",")
+            if lake_root.rstrip("/") in paths:
+                scans.append(paths)
+    return scans
+
+
+def test_weather_append_and_score_update_scan_no_lake(spark, tmp_path_factory, monkeypatch):
+    """The daily rollups are executed once per pass and cross back as
+    local frames, so the frames handed to ``append_frame`` (the weather
+    snapshot) and ``update_scores`` (the scores) plan no scan of the
+    lake; the store's own tables are still scanned."""
+    store, lake_root, event_id = _build_fixture(spark, tmp_path_factory)
+    calls = _record_calls(monkeypatch, store, "append_frame", "update_scores")
+    assert run.run_etl_batch(store, lake_root, NOW) == {event_id: "signed"}
+    (table, snapshot), = calls["append_frame"]
+    (scored,), = calls["update_scores"]
+    assert table == "weather"
+    assert _lake_scans(snapshot, lake_root) == []
+    assert _lake_scans(scored, lake_root) == []
+    assert _lake_scans(scored, store.root) != []  # entries and choices
+    entries = {r.id: r.score for r in store.read("entries").collect()}
+    assert entries == {e: GOLDEN_SCORES[e] for e in entries}

@@ -380,3 +380,35 @@ def test_duplicate_entry_is_400_and_update_still_runs(served):
     with urllib.request.urlopen(req) as resp:
         assert resp.status == 200
         assert json.loads(resp.read())[event_id] == "signed"
+
+
+def test_served_instants_do_not_depend_on_process_zone(served, process_tz):
+    """Timestamps collected from the store and the lake are served as
+    UTC instants whatever ``TZ`` says: the event, listing, entry and
+    observation routes return the same strings under
+    ``America/New_York`` as under UTC."""
+    from tests.test_weather_etl_golden import E1
+
+    base, _, _, _, event_id = served
+    window = urllib.parse.urlencode(
+        {"start": "2024-08-12T00:00:00Z", "end": "2024-08-13T00:00:00Z", "station_ids": "PFNO"}
+    )
+
+    def fetch():
+        _, ev = _get(base, f"/oracle/events/{event_id}")
+        _, listed = _get(base, "/oracle/events")
+        _, entry = _get(base, f"/oracle/events/{event_id}/entry/{E1}")
+        _, obs = _get(base, f"/stations/observations?{window}")
+        return (
+            (ev["observation_date"], ev["signing_date"]),
+            sorted((e["id"], e["observation_date"], e["signing_date"]) for e in listed),
+            (entry["created_at"], entry["updated_at"]),
+            [(o["start_time"], o["end_time"]) for o in obs],
+        )
+
+    process_tz("UTC")
+    utc = fetch()
+    assert utc[0] == (OBS_DATE.isoformat(), SIGN_DATE.isoformat())
+    assert utc[3] == [("2024-08-12T06:00:00", "2024-08-12T06:00:00")]
+    process_tz("America/New_York")
+    assert fetch() == utc

@@ -5,13 +5,45 @@ plus algebraic invariants: sign/verify roundtrip (even- and odd-Y
 keys), tamper rejection, and the DLC property the reference's
 signing flow relies on (oracle.rs:620-655): the revealed attestation
 scalar s satisfies s*G == locking_point(P, R, m), and (R_x, s) is a
-valid BIP-340 signature."""
+valid BIP-340 signature. The Jacobian point arithmetic is checked
+against a plain affine model of the curve (:func:`_affine_mul`)."""
 
 from __future__ import annotations
+
+import random
 
 import pytest
 
 from noaa_data_pipeline_spark.functions import schnorr
+
+P = schnorr.P
+
+
+def _affine_add(a, b):
+    """Affine point addition with one Fermat inversion per add (the
+    textbook formulas); ``None`` is the point at infinity."""
+    if a is None:
+        return b
+    if b is None:
+        return a
+    if a[0] == b[0] and (a[1] + b[1]) % P == 0:
+        return None
+    if a == b:
+        lam = (3 * a[0] * a[0]) * pow(2 * a[1], P - 2, P) % P
+    else:
+        lam = (b[1] - a[1]) * pow(b[0] - a[0], P - 2, P) % P
+    x = (lam * lam - a[0] - b[0]) % P
+    return (x, (lam * (a[0] - x) - a[1]) % P)
+
+
+def _affine_mul(k, pt):
+    out = None
+    while k:
+        if k & 1:
+            out = _affine_add(out, pt)
+        pt = _affine_add(pt, pt)
+        k >>= 1
+    return out
 
 
 def sk(i: int) -> bytes:
@@ -73,3 +105,30 @@ def test_dlc_attestation_locking_point_invariant():
         schnorr.pubkey(seckey), schnorr.nonce_point(nonce), b"other"
     )
     assert other != lock
+
+
+def test_jacobian_mul_matches_affine_model():
+    """k*G and k*Q agree with the affine model on seeded random
+    scalars and on the edges: k = 0, 1, 2, N-1 (= -G), N (infinity),
+    and the point at infinity as the base."""
+    rng = random.Random(20240812)
+    q = _affine_mul(0xC0FFEE, schnorr.G)
+    edges = [0, 1, 2, 3, schnorr.N - 1, schnorr.N, schnorr.N + 1]
+    for k in edges + [rng.randrange(1, schnorr.N) for _ in range(12)]:
+        for base in (schnorr.G, q):
+            assert schnorr._to_affine(schnorr._jmul(k, base)) == _affine_mul(k, base), (k, base)
+    assert schnorr._mul(schnorr.N - 1, schnorr.G) == (schnorr.G[0], P - schnorr.G[1])
+    assert schnorr._mul(schnorr.N, schnorr.G) is None
+    assert schnorr._mul(5, None) is None
+
+
+def test_jacobian_add_matches_affine_model():
+    """Point addition through Jacobian coordinates, including P + P
+    (doubling), P + (-P) (infinity) and infinity on either side."""
+    rng = random.Random(7)
+    pts = [_affine_mul(rng.randrange(1, schnorr.N), schnorr.G) for _ in range(4)]
+    neg = (pts[0][0], P - pts[0][1])
+    for a, b in [(pts[0], pts[1]), (pts[2], pts[3]), (pts[0], pts[0]), (pts[0], neg),
+                 (None, pts[1]), (pts[1], None), (None, None)]:
+        got = schnorr._to_affine(schnorr._jadd(schnorr._to_jac(a), schnorr._to_jac(b)))
+        assert got == _affine_add(a, b), (a, b)

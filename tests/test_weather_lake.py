@@ -182,3 +182,61 @@ def test_ingest_instants_do_not_depend_on_process_zone(spark, tmp_path, process_
     assert tuple(rows[4]) == ("2024-08-10 23:45:00", "2024-08-11 12:00:00", "2024-08-11 00:00:00", 33, 9)
     assert daily[0] == ("2024-08-11", "2024-08-11 00:00:00", 33, 9)
     assert tick("America/New_York") == (rows, daily)
+
+
+def test_read_lake_columns_are_the_types_own(spark, weather_root):
+    """A read returns its type's write schema plus ``ingested_at``,
+    then the two partition columns; the other type's columns do not
+    leak in as nulls."""
+    tail = ["ingested_at", "file_type", "ingest_date"]
+    fc = lake.read_lake(spark, weather_root, lake.FORECASTS)
+    ob = lake.read_lake(spark, weather_root, lake.OBSERVATIONS, start=T0)
+    assert fc.columns == FORECAST_SCHEMA.names + tail
+    assert ob.columns == OBSERVATION_SCHEMA.names + tail
+    assert dict(fc.dtypes)["ingest_date"] == "date"
+    assert fc.filter(F.col("ingest_date") == T0.date()).count() == len(_forecast_rows())
+
+
+def test_read_lake_of_a_type_without_snapshots_is_empty(spark, tmp_path):
+    """A lake that holds only observations reads as an empty forecasts
+    frame with the forecast columns (no PATH_NOT_FOUND), and
+    ``/stations/forecasts`` over it answers ``[]`` with a 200."""
+    import json
+    import urllib.request
+
+    from noaa_data_pipeline_spark.weather import http_api
+    from noaa_data_pipeline_spark.weather.event_store import EventStore
+
+    root = str(tmp_path / "lake")
+    lake.write_snapshot(
+        spark.createDataFrame(_observation_rows(), OBSERVATION_SCHEMA), root, lake.OBSERVATIONS, T0
+    )
+    fc = lake.read_lake(spark, root, lake.FORECASTS, start=T0, end=T0)
+    assert fc.columns == FORECAST_SCHEMA.names + ["ingested_at", "file_type", "ingest_date"]
+    assert fc.count() == 0
+    app = http_api.WeatherApp(
+        spark, root, EventStore(spark, str(tmp_path / "store")), str(tmp_path / "files")
+    )
+    srv, base = http_api.serve_background(app)
+    try:
+        with urllib.request.urlopen(
+            base + "/stations/forecasts?start=2024-08-11T00:00:00Z&end=2024-08-12T00:00:00Z"
+        ) as resp:
+            assert (resp.status, json.loads(resp.read())) == (200, [])
+    finally:
+        srv.shutdown()
+
+
+def test_snapshot_without_a_nullable_column_reads_nulls(spark, tmp_path):
+    """Schema drift: a snapshot file written without a nullable column
+    (``wind_speed``) still reads through the explicit schema, with
+    nulls in that column, and the rollup over it still runs."""
+    root = str(tmp_path)
+    fc = spark.createDataFrame(_forecast_rows(), FORECAST_SCHEMA).drop("wind_speed")
+    lake.write_snapshot(fc, root, lake.FORECASTS, T0)
+    read = lake.read_lake(spark, root, lake.FORECASTS, start=T0, end=T0)
+    assert "wind_speed" in read.columns
+    assert read.filter(F.col("wind_speed").isNotNull()).count() == 0
+    assert read.count() == len(_forecast_rows())
+    daily = queries.forecasts_daily(read, station_ids=["KMSP"]).collect()
+    assert daily and all(r.wind_speed is None for r in daily)
