@@ -960,11 +960,11 @@ def stream_compaction_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     per trigger; the coalesce width derives from observed bytes /
     target file size, not a constant.
 
-    Relationship to ``weather.streaming_ingest.compact_partition``:
-    that one is the batch per-partition rewrite (atomic dir swap,
-    scheduler-driven); this is the checkpointed STREAMING variant
-    that never re-reads already-compacted input — the pairing a lake
-    runs as close-partition rewrite + continuous small-file sweep."""
+    A batch per-partition rewrite of closed days, if the weather lake
+    ever needs one, belongs in ``weather/lake.py``; this is the
+    checkpointed STREAMING variant that never re-reads
+    already-compacted input — the pairing a lake runs as
+    close-partition rewrite + continuous small-file sweep."""
     _, comp = compact_events(spark, sf_dir)
     return (
         spark.read.parquet(comp)

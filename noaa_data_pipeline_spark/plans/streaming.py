@@ -27,6 +27,7 @@ hermetic and deterministic.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 from collections.abc import Iterator
@@ -195,7 +196,9 @@ def _run_to_memory(df: DataFrame, output_mode: str) -> DataFrame:
     at this data size 32 stores are pure overhead (~8s -> ~1s for
     sessionize with 8). The partition count is read at query start,
     so it's narrowed here and restored after termination; a real
-    deployment sizes it to the executor count instead."""
+    deployment sizes it to the executor count instead. The memory
+    sink keeps its rows in the driver, so the checkpoint directory is
+    removed once the query has terminated."""
     spark = df.sparkSession
     name = f"sink_{uuid.uuid4().hex[:12]}"
     ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{name}")
@@ -215,6 +218,7 @@ def _run_to_memory(df: DataFrame, output_mode: str) -> DataFrame:
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 

@@ -185,7 +185,7 @@ def get_spark(
     extra_configs: dict[str, str] | None = None,
 ) -> SparkSession:
     """``extra_configs`` lets measurement tooling (e.g. the event-log
-    configs tools/profile_floor.py needs) ride THIS factory instead of
+    configs ``perfbench/run.py --trace 1`` needs) ride THIS factory instead of
     hand-assembling a builder that silently misses the engine's
     session defaults (r15: the profiler's own builder lacked the
     codegen-cache sizing and fast spark.local.dir, so its walls

@@ -5,7 +5,10 @@ user SQL over the two parquet tables (ui/main.js:112-141), with an
 acknowledged TODO to restrict to SELECT (:130-131). Here: temp views
 over the lake + ``spark.sql`` behind an actual SELECT-only guard,
 plus the schema introspection the UI derives from Arrow metadata
-(ui/main.js:143-159).
+(ui/main.js:143-159). Untrusted SQL runs in a
+:func:`views_only_session`, which plays the part of the browser's own
+DuckDB instance: its temp views and conf are its own, and it cannot
+read files by path.
 """
 
 from __future__ import annotations
@@ -224,6 +227,23 @@ def validate_select_only(sql: str, allowed_path_roots: list[str] | None = None) 
             _reject_if_outside(m.group(1), f"`{m.group(1)}`")
 
 
+def views_only_session(spark: SparkSession) -> SparkSession:
+    """A session for untrusted SQL: ``spark.newSession()`` (its own SQL
+    conf and temp views, the same SparkContext) with the parent's
+    modifiable runtime SQL settings copied over, so zone and Arrow
+    settings match, and ``spark.sql.runSQLOnFiles`` off. With that flag
+    off Spark's analyzer cannot resolve ANY ``<datasource>.`path```
+    relation, whatever spelling dodged the textual guard. Build it once
+    and keep it: the flag is a property of the session, so no request
+    writes a conf that another request is reading."""
+    child = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            child.conf.set(key, value)
+    child.conf.set("spark.sql.runSQLOnFiles", "false")
+    return child
+
+
 def run_user_sql(
     spark: SparkSession,
     sql: str,
@@ -239,55 +259,19 @@ def run_user_sql(
     ``allowed_path_roots`` restricts file-backed table references
     (``read_parquet`` in the DuckDB dialect, ``<format>.`path``` in
     Spark SQL) to the given directory roots — ``[]`` means registered
-    views only. Untrusted (HTTP) callers must pass it; see
+    views only, and then ``spark`` must be a
+    :func:`views_only_session` (``ValueError`` otherwise, raised after
+    the textual guard). Untrusted (HTTP) callers must pass it; see
     :func:`validate_select_only`."""
     if dialect == "duckdb":
         sql = translate_duckdb(sql, spark, allowed_path_roots=allowed_path_roots)
     validate_select_only(sql, allowed_path_roots=allowed_path_roots)
-    if allowed_path_roots == []:
-        # Views-only surface: defense in depth behind the textual
-        # guard. With runSQLOnFiles off, Spark's analyzer (eager in
-        # spark.sql) cannot resolve ANY <datasource>.`path` relation,
-        # whatever spelling dodged the rules above. Restored in
-        # finally — analysis has already happened by then.
-        prev = spark.conf.get("spark.sql.runSQLOnFiles", "true")
-        spark.conf.set("spark.sql.runSQLOnFiles", "false")
-        try:
-            return spark.sql(sql)
-        finally:
-            spark.conf.set("spark.sql.runSQLOnFiles", prev)
+    if allowed_path_roots == [] and spark.conf.get("spark.sql.runSQLOnFiles") != "false":
+        raise ValueError(
+            "a views-only query needs a session with spark.sql.runSQLOnFiles "
+            "off; build one with views_only_session"
+        )
     return spark.sql(sql)
-
-
-def register_ui_bootstrap(spark: SparkSession, sql: str) -> str:
-    """Accept the reference UI's table-registration statement
-    VERBATIM — ``CREATE TABLE <name> AS SELECT * FROM
-    read_parquet(['url1', 'url2'], union_by_name = true);``
-    (ui/main.js:112-123) — and realize it as a session-scoped TEMP
-    VIEW (the moral equivalent of a table inside the UI's in-browser
-    DuckDB instance; the SELECT-only guard on the ad-hoc surface
-    stays intact because this entry point only ever creates views
-    from the statement's inner SELECT). Returns the registered view
-    name.
-
-    Paths here are unrestricted BY DESIGN: the statement is built
-    server-side (weather/ui.bootstrap_tables) from file names that
-    already passed the exchange-directory traversal guard
-    (http_api.upload_name_is_valid) — client-supplied SQL never
-    reaches this function. The client-facing query box goes through
-    :func:`run_user_sql` with ``allowed_path_roots=[]`` instead."""
-    import re
-
-    m = re.match(
-        r"(?is)\s*CREATE\s+TABLE\s+([A-Za-z_][A-Za-z_0-9]*)\s+AS\s+(.*?);?\s*$",
-        _strip_comments(sql).strip(),
-    )
-    if not m:
-        raise SqlGuardError("not a 'CREATE TABLE <name> AS SELECT ...' statement")
-    name, select = m.group(1), m.group(2)
-    df = run_user_sql(spark, select, dialect="duckdb")
-    df.createOrReplaceTempView(name)
-    return name
 
 
 # --- DuckDB-dialect translation (SURVEY §3.3 dialect gap) -------------

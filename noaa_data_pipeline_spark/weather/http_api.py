@@ -31,7 +31,9 @@ uploaded just after midnight with a previous-day timestamp lists but
 404s on download, exactly as in the reference. The query-route bodies delegate to
 ``weather/api.py`` (the pure functions) and ``EventStore`` /
 ``run_etl_batch`` — the HTTP layer adds only parsing, status codes,
-and JSON framing.
+and JSON framing. The ``/ui/*`` routes run on the app's one
+``sql_surface.views_only_session`` (``WeatherApp.ui_spark``); the ETL
+and the read routes use ``WeatherApp.spark``.
 """
 
 from __future__ import annotations
@@ -48,6 +50,7 @@ from urllib.parse import parse_qs, unquote, urlparse
 
 from pyspark.sql import SparkSession
 
+from .. import sql_surface
 from ..functions.bech32 import normalize_pubkey, npub_encode
 from . import api, run, ui
 from .event_store import EventStore
@@ -203,6 +206,8 @@ class WeatherApp:
         require_nip98: bool = False,
     ):
         self.spark = spark
+        # the UI's SQL surface: its own temp views, no path reads
+        self.ui_spark = sql_surface.views_only_session(spark)
         self.lake_root = lake_root
         self.store = store
         self.files = FileExchange(files_dir)
@@ -455,19 +460,15 @@ class _Handler(BaseHTTPRequestHandler):
                 if not os.path.isfile(path):
                     raise HTTPError(404, f"File not found: {name}")
                 named_paths.append((name, path))
-            return self._send_json({"schemas": ui.bootstrap_tables(app.spark, named_paths)})
+            return self._send_json({"schemas": ui.bootstrap_tables(app.ui_spark, named_paths)})
         if parts == ["ui", "schema"] and method == "GET":
             tables = [t for t in (q.get("tables") or "").split(",") if t]
-            from .. import sql_surface
-
-            return self._send_json(sql_surface.table_schemas(app.spark, tables))
+            return self._send_json(sql_surface.table_schemas(app.ui_spark, tables))
         if parts == ["ui", "sql"] and method == "POST":
             body = self._json_body()
-            from ..sql_surface import SqlGuardError
-
             try:
-                return self._send_json(ui.run_query(app.spark, body.get("sql", "")))
-            except SqlGuardError as exc:
+                return self._send_json(ui.run_query(app.ui_spark, body.get("sql", "")))
+            except sql_surface.SqlGuardError as exc:
                 raise HTTPError(400, str(exc)) from exc
             except Exception as exc:  # surface analysis errors as 400s
                 first = (str(exc).splitlines() or ["query failed"])[0]
@@ -533,10 +534,16 @@ class _Handler(BaseHTTPRequestHandler):
         raise HTTPError(404, "no such route")
 
 
+class _Server(ThreadingHTTPServer):
+    # the stdlib's listen backlog of 5 resets clients of a burst:
+    # 16 overlapping requests lost some to ECONNRESET
+    request_queue_size = 128
+
+
 def make_server(app: WeatherApp, host: str = "127.0.0.1", port: int = 0) -> ThreadingHTTPServer:
     """Bind the route table; port 0 picks an ephemeral port (tests)."""
     handler = type("BoundHandler", (_Handler,), {"app": app})
-    return ThreadingHTTPServer((host, port), handler)
+    return _Server((host, port), handler)
 
 
 def serve_background(app: WeatherApp) -> tuple[ThreadingHTTPServer, str]:

@@ -86,17 +86,30 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
+def _ntz(t: T.DataType) -> T.DataType:
+    """``t`` with every TIMESTAMP in it, nested ones included, made
+    TIMESTAMP_NTZ."""
+    if isinstance(t, T.TimestampType):
+        return T.TimestampNTZType()
+    if isinstance(t, T.StructType):
+        return T.StructType([T.StructField(f.name, _ntz(f.dataType), f.nullable) for f in t.fields])
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_ntz(t.elementType), t.containsNull)
+    if isinstance(t, T.MapType):
+        return T.MapType(_ntz(t.keyType), _ntz(t.valueType), t.valueContainsNull)
+    return t
+
+
 def collect_utc(df: DataFrame) -> list[Row]:
-    """``df.collect()`` with every top-level TIMESTAMP column cast to
-    TIMESTAMP_NTZ first, so it collects as a naive UTC datetime (the
-    session zone) instead of a naive datetime in the process zone."""
-    return df.select(
-        *[
-            F.col(f"`{f.name}`").cast("timestamp_ntz").alias(f.name)
-            if isinstance(f.dataType, T.TimestampType)
-            else F.col(f"`{f.name}`")
-            for f in df.schema.fields
-        ]
+    """``df.collect()`` with every TIMESTAMP, also inside structs,
+    arrays and maps, cast to TIMESTAMP_NTZ first, so it collects as a
+    naive UTC datetime (the session zone) instead of a naive datetime
+    in the process zone. Columns are picked by position, so duplicate
+    names (user SQL may return them) stay unambiguous."""
+    fields = df.schema.fields
+    tmp = [f"_{i}" for i in range(len(fields))]
+    return df.toDF(*tmp).select(
+        *[F.col(c).cast(_ntz(f.dataType)).alias(f.name) for c, f in zip(tmp, fields)]
     ).collect()
 
 

@@ -11,12 +11,14 @@ shipped example is ``SELECT * FROM observations ORDER BY station_id,
 generated_at DESC LIMIT 200`` (ui/main.js:52).
 
 Here the engine IS the SQL backend, so the page drives three small
-JSON endpoints instead of a wasm build: POST /ui/bootstrap resolves
-the exchanged file names server-side and feeds the SAME verbatim
-CREATE TABLE statement through sql_surface.register_ui_bootstrap
-(DuckDB-dialect translation included), GET /ui/schema mirrors the
-loadSchema pass, and POST /ui/sql is the query box — guarded
-SELECT-only, DuckDB dialect accepted (sql_surface.run_user_sql).
+JSON endpoints instead of a wasm build, all on the app's one
+``sql_surface.views_only_session`` (the counterpart of the page's own
+DuckDB instance): POST /ui/bootstrap resolves the exchanged file names
+server-side and registers each group as a temp view with a
+``mergeSchema`` read (Spark's ``union_by_name``), GET /ui/schema
+mirrors the loadSchema pass, and POST /ui/sql is the query box —
+guarded SELECT-only, views only, DuckDB dialect accepted
+(sql_surface.run_user_sql).
 """
 
 from __future__ import annotations
@@ -24,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from .. import sql_surface
+from .schemas import collect_utc
 
 # Row cap for the query box: the reference UI renders whatever the
 # wasm query returns into the DOM; a server shim needs a bound.
@@ -110,10 +113,13 @@ _ALIAS_DIR: list[str] = []
 
 
 def _alias_dir() -> str:
+    import atexit
+    import shutil
     import tempfile
 
     if not _ALIAS_DIR:
         _ALIAS_DIR.append(tempfile.mkdtemp(prefix="ui_bootstrap_"))
+        atexit.register(shutil.rmtree, _ALIAS_DIR[0], ignore_errors=True)
     return _ALIAS_DIR[0]
 
 
@@ -121,10 +127,11 @@ def bootstrap_tables(
     spark: SparkSession, named_paths: list[tuple[str, str]]
 ) -> dict[str, list[dict[str, str]]]:
     """Server-side twin of ui/main.js loadFiles: split the exchanged
-    files into the observations and forecasts groups by name, build
-    the reference's registration statement VERBATIM for each group,
-    and run it through the dialect-translating CTAS path. Returns
-    {table: schema-rows} exactly like the loadSchema pass."""
+    files into the observations and forecasts groups by name and
+    register each group as a temp view of ``spark``, read as the
+    reference's ``read_parquet([...], union_by_name = true)`` reads it
+    (ui/main.js:112-123). Returns {table: schema-rows} exactly like the
+    loadSchema pass."""
     import os
 
     groups: dict[str, list[str]] = {"observations": [], "forecasts": []}
@@ -149,14 +156,9 @@ def bootstrap_tables(
         groups[key].append(path)
     registered: list[str] = []
     for table, paths in groups.items():
-        if not paths:
-            continue
-        quoted = ", ".join("'" + p.replace("'", "''") + "'" for p in paths)
-        stmt = (
-            f"CREATE TABLE {table} AS SELECT * FROM "
-            f"read_parquet([{quoted}], union_by_name = true);"
-        )
-        registered.append(sql_surface.register_ui_bootstrap(spark, stmt))
+        if paths:
+            spark.read.option("mergeSchema", "true").parquet(*paths).createOrReplaceTempView(table)
+            registered.append(table)
     return sql_surface.table_schemas(spark, registered)
 
 
@@ -169,7 +171,10 @@ def run_query(spark: SparkSession, sql: str) -> dict:
     ``read_parquet('/any/path')`` or ``parquet.`/any/path``` would be
     a NEW arbitrary-file-read primitive for any HTTP client — the
     /ui/bootstrap route registers the exchange files as views, and
-    the box queries those."""
+    the box queries those. ``spark`` is therefore a
+    ``sql_surface.views_only_session``. Rows are collected with
+    ``collect_utc``, so TIMESTAMPs, nested ones included, come back as
+    UTC whatever the process zone."""
     df = sql_surface.run_user_sql(spark, sql, dialect="duckdb", allowed_path_roots=[])
-    rows = [r.asDict(recursive=True) for r in df.limit(UI_MAX_ROWS).collect()]
+    rows = [r.asDict(recursive=True) for r in collect_utc(df.limit(UI_MAX_ROWS))]
     return {"columns": df.columns, "rows": rows, "row_cap": UI_MAX_ROWS}

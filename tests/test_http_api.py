@@ -281,24 +281,12 @@ def test_oracle_pubkey_and_npub_routes(served):
         srv.shutdown()
 
 
-def test_ui_page_bootstrap_and_query(served):
-    """UI parity e2e (reference ui/index.html + ui/main.js): fetch the
-    page, upload a real observations parquet through the exchange,
-    bootstrap it via the verbatim CREATE TABLE read_parquet([...])
-    statement, and run the shipped example query (ui/main.js:52)
-    through the guarded /ui/sql box."""
-    base, app, *_ = served
-
-    status, headers, html = _get_raw(base, "/ui")
-    assert status == 200 and "text/html" in headers["Content-Type"]
-    page = html.decode()
-    assert "SELECT * FROM observations ORDER BY station_id, generated_at DESC LIMIT 200" in page
-    assert "/ui/sql" in page and "/ui/bootstrap" in page
-
-    # real parquet upload: two stations, two generated_at each
+def _upload_observations(base, app, out_dir) -> str:
+    """Upload a real observations parquet (two stations, two
+    generated_at each) through the exchange and bootstrap it as the
+    ``observations`` view; returns the bootstrap answer."""
     import glob
     import os
-    import tempfile
 
     rows = [
         ("KSAW", dt.datetime(2024, 1, 5, 6), 11.0),
@@ -307,7 +295,7 @@ def test_ui_page_bootstrap_and_query(served):
         ("PFNO", dt.datetime(2024, 1, 5, 12), -2.25),
     ]
     df = app.spark.createDataFrame(rows, "station_id string, generated_at timestamp, temp double")
-    out = tempfile.mkdtemp(prefix="ui_obs_")
+    out = str(out_dir)
     df.coalesce(1).write.mode("overwrite").parquet(out)
     payload = open(glob.glob(os.path.join(out, "part-*.parquet"))[0], "rb").read()
     created = dt.datetime.now(dt.timezone.utc)
@@ -317,6 +305,25 @@ def test_ui_page_bootstrap_and_query(served):
 
     status, body = _post_json(base, "/ui/bootstrap", {"file_names": [name]})
     assert status == 200
+    return body
+
+
+def test_ui_page_bootstrap_and_query(served, tmp_path):
+    """UI parity e2e (reference ui/index.html + ui/main.js): fetch the
+    page, upload a real observations parquet through the exchange,
+    bootstrap it as a view read the way the page's
+    ``read_parquet([...], union_by_name = true)`` reads it, and run
+    the shipped example query (ui/main.js:52) through the guarded
+    /ui/sql box."""
+    base, app, *_ = served
+
+    status, headers, html = _get_raw(base, "/ui")
+    assert status == 200 and "text/html" in headers["Content-Type"]
+    page = html.decode()
+    assert "SELECT * FROM observations ORDER BY station_id, generated_at DESC LIMIT 200" in page
+    assert "/ui/sql" in page and "/ui/bootstrap" in page
+
+    body = _upload_observations(base, app, tmp_path / "obs")
     cols = {c["column_name"] for c in body["schemas"]["observations"]}
     assert cols == {"station_id", "generated_at", "temp"}
 
@@ -348,6 +355,82 @@ def test_ui_page_bootstrap_and_query(served):
     status, body = _get(base, "/ui/schema?tables=observations")
     assert status == 200
     assert {c["column_name"] for c in body["observations"]} == cols
+
+
+def test_ui_sql_concurrent_requests_write_no_shared_conf(served, tmp_path):
+    """16 overlapping /ui/sql posts against one app, 8 over the
+    bootstrapped view and 8 path-denied: every answer equals the
+    single-threaded one, every denial is a 400, and the app's shared
+    session conf is never written (the views-only flag belongs to the
+    UI's own session, not to a per-request set/restore)."""
+    import sys
+    import threading
+    import unittest.mock as mock
+    from concurrent.futures import ThreadPoolExecutor
+
+    base, app, *_ = served
+    _upload_observations(base, app, tmp_path / "obs")
+    local_file = str(next((tmp_path / "obs").glob("part-*.parquet")))
+    allowed = [
+        f"SELECT station_id, temp FROM observations WHERE temp > {t} ORDER BY station_id, temp"
+        for t in (-5, 0, 11.5, 12)
+    ] * 2
+    denied = [
+        f"SELECT * FROM parquet.`{local_file}`",
+        f"SELECT * FROM read_parquet('{local_file}')",
+    ] * 4
+    expected = {q: _post_json(base, "/ui/sql", {"sql": q})[1]["rows"] for q in set(allowed)}
+    assert [len(expected[q]) for q in allowed[:4]] == [4, 2, 1, 1]
+
+    parent_conf = app.spark.conf
+    writes = []
+    orig_set = type(parent_conf).set
+
+    def recording_set(self, key, value):
+        if self is parent_conf:
+            writes.append((key, value))
+        orig_set(self, key, value)
+
+    start = threading.Barrier(len(allowed) + len(denied))
+
+    def post(q):
+        start.wait(timeout=60)
+        try:
+            return _post_json(base, "/ui/sql", {"sql": q})
+        except urllib.error.HTTPError as exc:
+            return exc.code, None
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        with mock.patch.object(type(parent_conf), "set", recording_set):
+            with ThreadPoolExecutor(len(allowed) + len(denied)) as pool:
+                answers = list(pool.map(post, allowed + denied, timeout=300))
+    finally:
+        sys.setswitchinterval(switch)
+
+    for q, (status, body) in zip(allowed, answers):
+        assert status == 200 and body["rows"] == expected[q], q
+    assert [status for status, _ in answers[len(allowed):]] == [400] * len(denied)
+    assert writes == []
+
+
+def test_ui_sql_instants_do_not_depend_on_process_zone(served, process_tz):
+    """/ui/sql serves TIMESTAMPs as UTC whatever ``TZ`` says, top-level
+    and nested in a struct or an array alike."""
+    base, *_ = served
+    sql = (
+        "SELECT TIMESTAMP'2024-08-12 00:00:00' AS t, "
+        "named_struct('t', TIMESTAMP'2024-08-12 00:00:00') AS s, "
+        "array(TIMESTAMP'2024-08-12 00:00:00') AS a"
+    )
+    for zone in ("UTC", "America/New_York"):
+        process_tz(zone)
+        _, body = _post_json(base, "/ui/sql", {"sql": sql})
+        row = body["rows"][0]
+        assert (row["t"], row["s"]["t"], row["a"]) == (
+            "2024-08-12T00:00:00", "2024-08-12T00:00:00", ["2024-08-12T00:00:00"]
+        ), zone
 
 
 def test_duplicate_entry_is_400_and_update_still_runs(served):

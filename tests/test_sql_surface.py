@@ -6,12 +6,22 @@ from __future__ import annotations
 import pytest
 
 from noaa_data_pipeline_spark import sql_surface
-from noaa_data_pipeline_spark.tables import register_views
+from noaa_data_pipeline_spark.tables import register_views, table_path
 
 
 @pytest.fixture(scope="module", autouse=True)
 def views(spark, sf_dir):
     register_views(spark, sf_dir)
+
+
+@pytest.fixture(scope="module")
+def views_only(spark, sf_dir):
+    """A views-only session with ``region`` registered through its own
+    reader (``register_views`` caches frames per application, so its
+    views would land on the parent session)."""
+    child = sql_surface.views_only_session(spark)
+    child.read.parquet(table_path(sf_dir, "region")).createOrReplaceTempView("region")
+    return child
 
 
 def test_ui_example_query_shape(spark):
@@ -145,20 +155,6 @@ def test_duckdb_read_parquet_list_without_session_guides():
         sql_surface.translate_duckdb(
             "SELECT * FROM read_parquet(['a.parquet','b.parquet'])"
         )
-
-
-def test_ui_bootstrap_registration_verbatim(spark, sf_dir):
-    # the reference UI's own registration statement shape,
-    # ui/main.js:112-123, pasted verbatim
-    sql = (
-        "\n        CREATE TABLE observations AS SELECT * FROM read_parquet(["
-        f"'{sf_dir}/region.parquet', '{sf_dir}/nation.parquet'"
-        "], union_by_name = true);\n        "
-    )
-    name = sql_surface.register_ui_bootstrap(spark, sql)
-    assert name == "observations"
-    assert spark.sql("SELECT * FROM observations LIMIT 1;").count() == 1
-    assert spark.table("observations").count() == 30
 
 
 DIFFERENTIAL_QUERIES = [
@@ -460,37 +456,53 @@ def test_path_guard_rejects_relation_position_bypasses(sf_dir, template):
         sql_surface.validate_select_only(q, allowed_path_roots=[])
 
 
-def test_path_guard_restores_run_sql_on_files(spark):
-    """run_user_sql flips runSQLOnFiles off for the views-only surface
-    (defense in depth behind the textual guard) and restores it."""
-    prev = spark.conf.get("spark.sql.runSQLOnFiles", "true")
-    out = sql_surface.run_user_sql(
-        spark, "SELECT COUNT(*) AS n FROM region", allowed_path_roots=[]
+def test_path_guard_restores_run_sql_on_files(spark, views_only):
+    """The views-only surface's defense in depth behind the textual
+    guard is a property of its session: the child has runSQLOnFiles
+    off and the parent's conf is never written. A session with the
+    flag on is refused once the guard has passed."""
+    import unittest.mock as mock
+
+    parent_conf = spark.conf
+    writes = []
+    orig_set = type(parent_conf).set
+
+    def recording_set(self, key, value):
+        if self is parent_conf:
+            writes.append((key, value))
+        orig_set(self, key, value)
+
+    with mock.patch.object(type(parent_conf), "set", recording_set):
+        out = sql_surface.run_user_sql(
+            views_only, "SELECT COUNT(*) AS n FROM region", allowed_path_roots=[]
+        )
+        assert out.collect()[0].n == 5
+    assert writes == []
+    assert views_only.conf.get("spark.sql.runSQLOnFiles") == "false"
+    assert views_only.conf.get("spark.sql.session.timeZone") == spark.conf.get(
+        "spark.sql.session.timeZone"
     )
-    assert out.collect()[0].n == 5
-    assert spark.conf.get("spark.sql.runSQLOnFiles") == prev
+    with pytest.raises(ValueError, match="runSQLOnFiles"):
+        sql_surface.run_user_sql(spark, "SELECT COUNT(*) AS n FROM region", allowed_path_roots=[])
 
 
-def test_path_guard_literal_containing_from_not_confused(spark):
+def test_path_guard_literal_containing_from_not_confused(views_only):
     """A string literal containing 'FROM x.y' is data, not a relation
     — masked before the scanner runs."""
     df = sql_surface.run_user_sql(
-        spark,
+        views_only,
         "SELECT 'FROM parquet.somefile' AS s FROM region LIMIT 1",
         allowed_path_roots=[],
     )
     assert df.collect()[0].s == "FROM parquet.somefile"
 
 
-def test_path_guard_leaves_qualified_columns_alone(spark, sf_dir):
+def test_path_guard_leaves_qualified_columns_alone(views_only):
     """Backquoted table.column references in EXPRESSION position are
     not path references and must keep working under the restricted
     surface."""
-    from noaa_data_pipeline_spark.tables import register_views
-
-    register_views(spark, sf_dir)
     df = sql_surface.run_user_sql(
-        spark,
+        views_only,
         "SELECT `r`.`r_name` FROM region r ORDER BY `r`.`r_regionkey` LIMIT 1",
         allowed_path_roots=[],
     )
@@ -518,14 +530,44 @@ def test_path_guard_allows_inside_root_and_resolves_traversal(spark, sf_dir):
         )
 
 
-def test_ui_run_query_is_views_only(spark, sf_dir):
+def test_ui_run_query_is_views_only(views_only, sf_dir):
     """weather/ui.run_query (the /ui/sql handler body) refuses paths
     outright while registered-view queries still work."""
     from noaa_data_pipeline_spark.weather import ui
 
-    out = ui.run_query(spark, "SELECT COUNT(*) AS n FROM region")
+    out = ui.run_query(views_only, "SELECT COUNT(*) AS n FROM region")
     assert out["rows"][0]["n"] == 5
     with pytest.raises(sql_surface.SqlGuardError):
-        ui.run_query(spark, f"SELECT * FROM read_parquet('{sf_dir}/region.parquet')")
+        ui.run_query(views_only, f"SELECT * FROM read_parquet('{sf_dir}/region.parquet')")
     with pytest.raises(sql_surface.SqlGuardError):
-        ui.run_query(spark, f"SELECT * FROM parquet.`{sf_dir}/region.parquet`")
+        ui.run_query(views_only, f"SELECT * FROM parquet.`{sf_dir}/region.parquet`")
+
+
+def test_no_conf_writes_outside_views_only_session():
+    """The UI surface and the weather package write no session conf;
+    the one ``conf.set`` allowed is the new session's own setup in
+    ``views_only_session``."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(sql_surface.__file__).parent
+    offenders = []
+    for path in [pkg / "sql_surface.py", *sorted((pkg / "weather").glob("*.py"))]:
+        tree = ast.parse(path.read_text())
+        allowed = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and fn.name == "views_only_session"
+            for n in ast.walk(fn)
+        }
+        offenders += [
+            f"{path.name}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "set"
+            and isinstance(node.func.value, ast.Attribute)
+            and node.func.value.attr == "conf"
+            and id(node) not in allowed
+        ]
+    assert offenders == []
